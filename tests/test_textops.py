@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import math
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from us_accidents_bigdata_pipeline_spark.operators.similarity import (
@@ -14,10 +16,13 @@ from us_accidents_bigdata_pipeline_spark.operators.similarity import (
 )
 from us_accidents_bigdata_pipeline_spark.operators.textstats import (
     chunk_documents,
+    heaps_law_fit,
     pii_redact,
+    repetition_stats,
     tfidf_top_terms,
     token_kl_by_source,
 )
+from us_accidents_bigdata_pipeline_spark.plans import REGISTRY
 
 
 def _docs(spark, rows):
@@ -438,3 +443,36 @@ def test_dynamic_schema_udtf_analyze(spark):
             "SELECT * FROM _udtf_t t, "
             "LATERAL unpivot_columns_t(struct(t.a), 'zz') u"
         ).collect()
+
+
+def _sorted_rows(cols, rows):
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    out = [
+        tuple(round(r[i], 6) if isinstance(r[i], float) else r[i] for i in order)
+        for r in rows
+    ]
+    return sorted(cols), sorted(out, key=lambda t: tuple(map(str, t)))
+
+
+@pytest.mark.parametrize(
+    "fn, query",
+    [
+        (repetition_stats, "repetition_quality_docs"),
+        (heaps_law_fit, "heaps_law_fit_docs"),
+    ],
+)
+def test_whitespace_only_text_matches_oracle(spark, tmp_path, fn, query):
+    """Tab-, newline- and mixed-whitespace documents carry no token: the
+    operator drops them (no divide-by-zero, no empty checkpoint) exactly
+    as the DuckDB oracle does. Each whitespace doc sits alone in its
+    heaps checkpoint bucket (ids 1..10, 10 buckets)."""
+    texts = ["the cat sat on the mat", "a b c", "\t", "dog dog dog cat",
+             "\n", "hello world", " \t\n", "x y z x", "\t\tfoo\n bar", "end"]
+    path = str(tmp_path / "documents.parquet")
+    _docs(spark, list(enumerate(texts, start=1))).coalesce(1).write.parquet(path)
+    got = fn(spark.read.parquet(path))
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
+        res = con.execute(REGISTRY[query].oracle)
+        want = _sorted_rows([d[0] for d in res.description], res.fetchall())
+    assert _sorted_rows(got.columns, [tuple(r) for r in got.collect()]) == want

@@ -236,20 +236,6 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles as array<string>; empty array when the
-    document has fewer than ``n`` tokens (guard needed because
-    ``F.sequence(1, 0)`` would produce a *descending* sequence)."""
-    toks = word_tokens(text)
-    gen = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.when(F.size(toks) >= n, gen).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def _positional_grams(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
@@ -257,13 +243,13 @@ def _positional_grams(
 
     Relational formulation: tokenize ONCE via posexplode, then form
     n-gram windows with ``lead()`` over (doc, position). The array-
-    expression alternative (``shingles()``) re-executes the regex split
-    per produced shingle — Catalyst has no let-binding, so the split
-    subexpression is inlined into every lambda element; measured ~5s
-    for 5k docs vs sub-second here. One shuffle on id (the window),
-    which downstream groupBys reuse. Shared by the Jaccard/MinHash
-    shingle path (set semantics via distinct) and winnowing (positional
-    semantics).
+    expression alternative (transform/slice over ``word_tokens``)
+    re-executes the regex split per produced shingle — Catalyst has no
+    let-binding, so the split subexpression is inlined into every
+    lambda element; measured ~5s for 5k docs vs sub-second here. One
+    shuffle on id (the window), which downstream groupBys reuse. Shared
+    by the Jaccard/MinHash shingle path (set semantics via distinct)
+    and winnowing (positional semantics).
     """
     from pyspark.sql import Window as W
 
@@ -542,7 +528,7 @@ def minhash_near_dup_pairs(
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     # Let-bound token array (same discipline as _doc_shingles): the
-    # single-expression shingles() form would re-execute the regex
+    # single-expression shingle-array form would re-execute the regex
     # split per generated shingle. The shingle array itself is built
     # in a separate Project so HashingTF sees a plain column.
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
@@ -1043,38 +1029,6 @@ def _bit_mask(bit: int) -> int:
     Long.MIN_VALUE — ``1 << 63`` overflows the signed long literal)."""
     v = 1 << bit
     return v - (1 << 64) if bit == 63 else v
-
-
-def simhash64(text: Column | str, n: int = 1) -> Column:
-    """64-bit SimHash of the document's shingle set as ONE column
-    expression.
-
-    PERFORMANCE WARNING: as a single expression, each of the 64 bit
-    folds re-evaluates the tokenize+hash subexpression (no let-binding
-    in Catalyst — the same inlining trap documented in
-    ``_doc_shingles``), i.e. ~64x redundant scans of every document.
-    Use ``simhash_buckets`` (the relational explode+groupBy
-    formulation, hash computed once per token) for anything beyond a
-    handful of rows; this column form exists for expression-level
-    composition on small data.
-    """
-    sh = shingles(text, n) if n > 1 else word_tokens(text)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-
-    def bit_sum(bit: int) -> Column:
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(F.lit(_bit_mask(bit))) != 0, 1).otherwise(-1),
-        )
-
-    out = F.lit(0).cast("long")
-    for bit in range(64):
-        out = out + F.when(bit_sum(bit) > 0, F.lit(_bit_mask(bit))).otherwise(
-            F.lit(0).cast("long")
-        )
-    return out
 
 
 def simhash_buckets(

@@ -32,20 +32,6 @@ MEDIA_SCHEMA = (
 )
 
 
-def attach_media_metadata(
-    df: DataFrame, payload_col: str = "payload", mime: str = "application/octet-stream"
-) -> DataFrame:
-    """Wrap a raw binary column with the typed metadata struct."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(mime).alias("mime"),
-            F.octet_length(payload_col).alias("n_bytes"),
-            F.xxhash64(payload_col).alias("content_hash"),
-        ),
-    )
-
-
 def _fake_features(payload: bytes, dim: int) -> np.ndarray:
     """Deterministic stand-in for a decoded feature vector: bytes of the
     sha256 digest, tiled to dim, scaled to [0,1)."""

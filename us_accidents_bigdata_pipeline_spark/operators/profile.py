@@ -1,5 +1,5 @@
-"""Profiling operators: single-pass null audit, describe, distributions
-(SURVEY §2.4 A5/A7/A1). Each profile is ONE aggregate job over all
+"""Profiling operators: single-pass null audit, distinct counts,
+histograms and statistical tests (SURVEY §2.4 A5/A1). Each profile is ONE aggregate job over all
 columns (the reference's v2:cell17 batching idiom, never v2:cell19's
 per-column driver round-trips)."""
 
@@ -7,9 +7,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-_NUMERIC = (T.IntegerType, T.LongType, T.DoubleType, T.FloatType, T.ShortType)
 
 
 def null_audit(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -20,52 +17,6 @@ def null_audit(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
         for c in cols
     ]
     return df.agg(*aggs, F.count(F.lit(1)).alias("n_rows"))
-
-
-def describe_numeric(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """count/mean/stddev/min/max per numeric column in one agg, long form:
-    (column, n, mean, std, min, max)."""
-    if cols is None:
-        cols = [
-            f.name for f in df.schema.fields if isinstance(f.dataType, _NUMERIC)
-        ]
-    aggs = []
-    for c in cols:
-        aggs += [
-            F.count(c).alias(f"{c}__n"),
-            F.avg(c).alias(f"{c}__mean"),
-            F.stddev(c).alias(f"{c}__std"),
-            F.min(c).alias(f"{c}__min"),
-            F.max(c).alias(f"{c}__max"),
-        ]
-    row = df.agg(*aggs).head()
-    out = [
-        (
-            c,
-            row[f"{c}__n"],
-            float(row[f"{c}__mean"]) if row[f"{c}__mean"] is not None else None,
-            float(row[f"{c}__std"]) if row[f"{c}__std"] is not None else None,
-            float(row[f"{c}__min"]) if row[f"{c}__min"] is not None else None,
-            float(row[f"{c}__max"]) if row[f"{c}__max"] is not None else None,
-        )
-        for c in cols
-    ]
-    schema = "column string, n long, mean double, std double, min double, max double"
-    return df.sparkSession.createDataFrame(out, schema)
-
-
-def value_distribution(df: DataFrame, col: str) -> DataFrame:
-    """Distinct-value histogram (severity-distribution idiom,
-    data_cleaning.py:144)."""
-    return df.groupBy(col).agg(F.count(F.lit(1)).alias("n")).orderBy(col)
-
-
-def approx_distinct_counts(df: DataFrame, cols: list[str]) -> DataFrame:
-    """HLL++ distinct counts per column, one pass — the 100 TB
-    cardinality profile (exact countDistinct shuffles per column)."""
-    return df.agg(
-        *[F.approx_count_distinct(c).alias(f"n_distinct_{c}") for c in cols]
-    )
 
 
 def histogram(

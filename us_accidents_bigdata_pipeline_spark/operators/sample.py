@@ -16,11 +16,6 @@ from pyspark.sql import functions as F
 DEFAULT_SEED = 42
 
 
-def bernoulli_sample(df: DataFrame, fraction: float, seed: int = DEFAULT_SEED) -> DataFrame:
-    """L1 (data_cleaning.py:118 etc.)."""
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
-
-
 def count_targeted_sample(
     df: DataFrame, target_rows: int, total: int | None = None, seed: int = DEFAULT_SEED
 ) -> DataFrame:
@@ -41,14 +36,6 @@ def count_targeted_sample(
         return df
     fraction = min(1.0, 1.1 * base + 5.0 * math.sqrt(target_rows) / max(n, 1))
     return df.sample(False, fraction, seed).limit(target_rows)
-
-
-def train_test_split(
-    df: DataFrame, test_fraction: float = 0.2, seed: int = DEFAULT_SEED
-) -> tuple[DataFrame, DataFrame]:
-    """L3: randomSplit([0.8, 0.2], 42) (knn_classification.py:305)."""
-    train, test = df.randomSplit([1.0 - test_fraction, test_fraction], seed=seed)
-    return train, test
 
 
 def stratified_sample(
@@ -74,7 +61,7 @@ def stratified_sample(
         raise ValueError(
             f"stratified_sample: > {max_strata} distinct values in "
             f"'{strata_col}' — not a categorical stratum; use "
-            "bernoulli_sample or raise max_strata"
+            "DataFrame.sample or raise max_strata"
         )
     return df.sampleBy(strata_col, {s: fraction for s in strata}, seed=seed)
 

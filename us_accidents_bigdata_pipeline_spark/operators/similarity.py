@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity, dot_product, l2_norm
+from ..tuning import arrow_to_pandas, safe_to_pandas
 
 
 def cosine_topk(
@@ -595,9 +596,7 @@ def ivf_fit_assign(
         sample = count_targeted_sample(
             slim, fit_sample_rows, total=slim.count(), seed=seed
         )
-        spark = df.sparkSession
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        pdf = sample.toPandas()
+        pdf = arrow_to_pandas(sample)
         X = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
         X = X[np.lexsort(X.T[::-1])]
         centers = _kmeanspp_lloyd(X, n_cells, seed)
@@ -1101,9 +1100,7 @@ def pq_train(
         sample = count_targeted_sample(
             slim, fit_sample_rows, total=n, seed=seed
         )
-        spark = df.sparkSession
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        pdf = sample.toPandas()
+        pdf = arrow_to_pandas(sample)
         if len(pdf) == 0:
             raise ValueError("pq_train: empty input")
         dim = len(pdf["_v"].iloc[0])
@@ -1690,8 +1687,6 @@ def _embedding_pairs_blas(
     """
     import numpy as np
     import pandas as pd
-
-    from ..tuning import safe_to_pandas
 
     # Arrow-batched driver transfer (guide §6) — ~5x faster than the
     # pickled-row collect of the same frame, values bit-identical

@@ -187,17 +187,17 @@ def repetition_stats(
     n_tok = F.col("top_c") / F.col("n_tokens")
     d_ratio = F.col("n_distinct") / F.col("n_tokens")
     return (
-        # the no-token exclusion is a PRE-filter on the raw text:
-        # trim(text) != '' holds exactly when >= 1 non-empty token
-        # exists (NULL text -> NULL -> dropped) — row-identical to the
-        # former filter(n_tokens > 0), which the optimizer pushed
-        # below the Project and re-evaluated the tokenize expression
-        # inside the predicate (round-13 filter-under-Project lesson)
+        # the no-token exclusion is a PRE-filter on the raw text: a
+        # non-whitespace character exists exactly when the \s+ split
+        # yields >= 1 non-empty token (NULL text -> NULL -> dropped;
+        # whitespace-only text such as "\t" -> dropped) — row-identical
+        # to filter(n_tokens > 0), which the optimizer pushed below the
+        # Project and re-evaluated the tokenize expression inside the
+        # predicate (round-13 filter-under-Project lesson)
         df.filter(
-            F.trim(
-                F.col(text_col) if isinstance(text_col, str) else text_col
+            (F.col(text_col) if isinstance(text_col, str) else text_col).rlike(
+                r"\S"
             )
-            != ""
         )
         .select(
             F.col(id_col),
@@ -1089,17 +1089,16 @@ def heaps_law_fit(
     # explode→groupBy(id)→count (docs with zero non-empty tokens —
     # incl. NULL text, where ANSI size() yields NULL (-1 legacy) —
     # produced no group row before). The no-token exclusion is a
-    # PRE-filter on the raw text: trim(text) != '' holds exactly when
-    # >= 1 non-empty whitespace token exists (NULL text -> NULL ->
-    # dropped), so it is row-identical to the former
-    # filter(_n_tok > 0) — which the optimizer pushed below the
-    # Project, substituting the whole tokenize-HOF into the predicate
-    # and evaluating it twice per row (the round-13
-    # filter-under-Project lesson; greatest() stays as the NULL/-1
-    # belt against exotic inputs).
+    # PRE-filter on the raw text: a non-whitespace character exists
+    # exactly when the \s+ split yields >= 1 non-empty token (NULL
+    # text -> NULL -> dropped; whitespace-only text such as "\t" ->
+    # dropped), so it is row-identical to filter(_n_tok > 0) — which
+    # the optimizer pushed below the Project, substituting the whole
+    # tokenize-HOF into the predicate and evaluating it twice per row
+    # (the round-13 filter-under-Project lesson; greatest() stays as
+    # the NULL/-1 belt against exotic inputs).
     doc_tokens = df.filter(
-        F.trim(F.col(text_col) if isinstance(text_col, str) else text_col)
-        != ""
+        (F.col(text_col) if isinstance(text_col, str) else text_col).rlike(r"\S")
     ).select(
         F.col(id_col),
         F.greatest(

@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -124,189 +125,33 @@ def _adaptive_input_split(spark: SparkSession, df: DataFrame) -> DataFrame:
     ReadSchema pins are unaffected; results are partition-layout
     independent by the driver's own layout sweep.
     """
-    try:
-        par = spark.sparkContext.defaultParallelism
-        files = df.inputFiles()
-        if not files or len(files) >= par:
-            return df
-        total = 0
-        for uri in files:
-            if not uri.startswith("file:"):
-                # remote storage: sizes unknown locally — leave the
-                # scan alone (production layouts bring their own
-                # parallelism)
-                return df
-            from urllib.parse import unquote, urlparse
-
-            total += os.path.getsize(unquote(urlparse(uri).path))
-        if total < _SPLIT_MIN_BYTES:
-            return df
-        return df.repartition(par)
-    except Exception:
+    par = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if not files or len(files) >= par:
         return df
-
-
-# ---------------------------------------------------------------------
-# Driver sampling order. The correctness driver checks the FIRST 50
-# entries of queries() against their oracles each round; entries past
-# that window get no recorded evidence that round, and rows-only
-# entries inside it waste checked slots. The export order is
-# self-rotating:
-#   1. oracled queries with NO recorded driver row yet (registration
-#      order — SURVEY §2 section order), so each round certifies 50
-#      previously-unchecked names;
-#   2. the already-certified oracled core (stays green in pytest's
-#      per-registry oracle sweep, tests/test_oracle.py);
-#   3. rows-only entries last (the driver records only a weaker
-#      rows-only check for them — they never belong in the window
-#      while oracled work remains unrecorded).
-# _driver_certified() is DERIVED from the committed
-# CORRECTNESS_r*.json artifacts next to __spark_entry__.py, so the
-# rotation advances itself each round with no manual step: a name is
-# certified once any round recorded a row for it, EXCEPT when its
-# latest record is a genuine error (not the weak-check "no_oracle"
-# marker) — those re-enter the front so the driver re-checks them.
-# _DRIVER_CERTIFIED_FALLBACK (the r1–r5 union, 155 names) covers
-# checkouts without the artifacts.
-# priority_distribution is entry()'s flagship and is smoke-checked by
-# the driver every round regardless of window position.
-# ---------------------------------------------------------------------
-_DRIVER_CERTIFIED_FALLBACK: frozenset = frozenset(
-    {
-        "above_nation_avg_balance", "array_agg_sorted", "asof_last_purchase",
-        "audio_frame_features_docs", "cast_arithmetic", "catalog_sql_region_orders",
-        "cdc_apply_orders", "char_entropy_docs", "chunk_documents",
-        "cohort_retention", "conditional_impute", "contamination_fraction_docs",
-        "corpus_curation_funnel", "corpus_report", "correlation_stats",
-        "cube_agg", "daily_revenue_change", "decontaminate_docs",
-        "dedup_provenance_docs", "dedup_savings_report", "describe_stats",
-        "distinct_count", "dq_constraint_report", "dsir_importance_weights",
-        "dup_cluster_size_histogram", "embedding_near_dup_pairs", "embedding_near_dup_pairs_blas",
-        "embedding_near_dup_resolve", "embedding_norm_stats", "embedding_quantize_error",
-        "event_type_distribution", "exact_dedup_docs", "filter_in_list",
-        "filter_not_null_range", "fingerprint_dedup", "fingerprint_dedup_md5",
-        "fk_containment_profile", "funnel_conversion", "global_mean",
-        "grouped_ols_value_on_hour", "grouping_sets_agg", "hashed_features_docs",
-        "having_filter", "histogram_quantity", "hourly_event_stats",
-        "image_patch_stats_synthetic", "image_resize_patch_stats", "incremental_dedup_new_batch",
-        "ivf_cell_assignment", "join_anti", "join_left_outer",
-        "join_region_stats", "join_revenue_topk", "join_semi",
-        "json_extract_props", "json_schema_parse", "k_anonymity_audit_customers",
-        "knn_cosine_batch", "knn_cosine_topk", "knn_label_vote",
-        "langid_confusion_matrix", "language_id_docs", "leakage_safe_split_docs",
-        "line_dedup_docs", "local_supplier_volume", "loo_target_encoding_orders",
-        "lsh_ann_candidates", "lsh_ann_verified_topk", "median_exact",
-        "merge_upsert_orders", "minhash_banded_pairs", "minhash_lsh_verified_pairs",
-        "minhash_near_dup_pairs", "mixture_sample_docs", "ml_kmeans_customer_clusters",
-        "ml_knn_embedding_predictions", "ml_rf_lineitem_metrics", "multi_agg_group",
-        "multi_format_union_orders", "multimodal_byte_stats", "multimodal_frame_sample",
-        "multimodal_resize", "near_dup_keep_best", "near_dup_resolve",
-        "near_dup_resolve_banded", "ngram_jaccard_pairs", "normalized_exact_dedup_docs",
-        "null_audit", "ols_normal_equations_lineitem", "order_priority_check",
-        "param_sql_top_customers", "pii_redact_docs", "pivot_linestatus",
-        "pricing_summary", "priority_distribution", "projection_select",
-        "promo_revenue_share", "python_datasource_squares", "quantile_normalize_events",
-        "range_join_bands", "recursive_date_spine", "rename_columns",
-        "repetition_quality_docs", "returned_revenue_topk", "revenue_forecast_filter",
-        "robust_outliers_price", "rolling_30d_revenue", "rollup_agg",
-        "salted_agg_returnflag", "sequence_pack_assignment", "sessionize_events",
-        "setop_except", "setop_intersect", "setop_union_distinct",
-        "shipping_priority_topk", "simhash_near_dup_pairs", "simhash_near_dup_pairs_md5",
-        "snapshot_diff_orders", "sole_late_supplier_ranking", "streaming_cdc_orders",
-        "streaming_dedup_events", "streaming_python_source_squares", "streaming_running_totals",
-        "streaming_session_windows", "streaming_sliding_counts", "streaming_static_join_counts",
-        "streaming_windowed_counts", "string_agg_sorted", "string_indexer_mapping",
-        "substring_dup_runs", "temperature_mixture_sample_docs", "temporal_extract",
-        "text_quality_scores", "text_stats_docs", "tfidf_top_terms",
-        "token_kl_by_source", "token_length_histogram_by_source", "tokenizer_fertility_by_source",
-        "topk_orders", "total_count", "training_shard_assignment",
-        "udtf_trigrams_docs", "unpivot_order_measures", "variant_extract_props",
-        "video_frame_diff_energy", "vocab_top_tokens", "weighted_sample_parts",
-        "window_first_last", "window_ntile_quartiles", "window_percentile_ranks",
-        "window_running_sum", "window_topk_per_group", "winnow_fingerprints_md5",
-        "xml_roundtrip_orders", "zorder_keys_events",
-    }
-)
-
-
-def _load_driver_records() -> dict:
-    """Latest recorded driver CORRECTNESS row per name, read from the
-    committed ``CORRECTNESS_r*.json`` files at the repo root (three
-    levels above this module, next to ``__spark_entry__.py``). Later
-    rounds override earlier ones. Falls back to synthetic green rows
-    for the frozen r1–r5 union when no artifacts are present."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    # queries.py lives at <repo>/us_accidents_bigdata_pipeline_spark/plans/
-    # so the repo root (where the driver writes CORRECTNESS_r*.json, next to
-    # __spark_entry__.py) is exactly THREE dirname hops up, not four.
-    root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    latest: dict = {}
-    for path in sorted(_glob.glob(_os.path.join(root, "CORRECTNESS_r*.json"))):
+    total = 0
+    for uri in files:
+        if not uri.startswith("file:"):
+            # remote storage: sizes unknown locally — leave the scan
+            # alone (production layouts bring their own parallelism)
+            return df
         try:
-            with open(path) as fh:
-                rows = _json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict):
-            latest.update(rows)
-    if not latest:
-        latest = {n: {"hash_match": True} for n in _DRIVER_CERTIFIED_FALLBACK}
-    return latest
-
-
-_DRIVER_RECORDS: dict = _load_driver_records()
-
-
-def _driver_certified() -> frozenset:
-    """Names whose recorded driver evidence is still the strongest the
-    registry can offer. A name re-enters the front window when:
-    - its latest record is a genuine error (not the "no_oracle"
-      weak-check marker) — re-check it; or
-    - it was recorded rows-only ("no_oracle") but has SINCE gained an
-      oracle — the driver should record the stronger oracle row.
-    Evaluated lazily because oracles are attached after this module's
-    helpers are defined (registration happens at import bottom)."""
-    out = set()
-    for n, rec in _DRIVER_RECORDS.items():
-        if not isinstance(rec, dict):
-            out.add(n)
-            continue
-        err = rec.get("err")
-        if err and err != "no_oracle":
-            continue
-        if err == "no_oracle" and n in REGISTRY and REGISTRY[n].oracle:
-            continue
-        out.add(n)
-    return frozenset(out)
-
-
-def _export_order() -> list[str]:
-    certified_set = _driver_certified()
-    uncertified = [
-        n for n, s in REGISTRY.items() if s.oracle and n not in certified_set
-    ]
-    certified = [
-        n for n, s in REGISTRY.items() if s.oracle and n in certified_set
-    ]
-    rows_only = [n for n, s in REGISTRY.items() if not s.oracle]
-    return uncertified + certified + rows_only
+            total += os.path.getsize(unquote(urlparse(uri).path))
+        except OSError:
+            # the file vanished or is unreadable after the scan listed
+            # it: the read itself will report that, so leave it as is
+            return df
+    if total < _SPLIT_MIN_BYTES:
+        return df
+    return df.repartition(par)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].builder for name in _export_order()}
+    return {name: spec.builder for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _export_order()
-        if REGISTRY[name].oracle
-    }
+    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle}
 
 
 # =====================================================================
@@ -614,7 +459,7 @@ def q_total_count(spark: SparkSession, sf_dir: str) -> DataFrame:
               count(DISTINCT l_suppkey) AS n_supps
        FROM lineitem""",
     doc="A9: distinct counts kept in Spark (vs driver-side np.unique); "
-    "approx_count_distinct is the 100TB path (operators/profile.py)",
+    "approx_count_distinct is the 100TB path (approx_profile)",
 )
 def q_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -4151,8 +3996,8 @@ def q_catalog_sql_region_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "approx_profile",
     None,  # approximate sketches (KLL/HLL) → rows-only by design
     doc="A6/A9 approximate tier: percentile_approx + HLL distinct in "
-    "one pass (operators/profile.approx_distinct_counts; the exact "
-    "variants are oracle-checked by median_exact / distinct_count)",
+    "one pass (the exact variants are oracle-checked by "
+    "median_exact / distinct_count)",
 )
 def q_approx_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -48,15 +49,54 @@ def _pointer_path(root: str) -> str:
     return os.path.join(root, _POINTER)
 
 
-def read_current(spark: SparkSession, root: str) -> DataFrame | None:
-    """Load the snapshot the pointer file names (None before the first
-    commit). Readers never see a half-written version: the pointer is
-    replaced only after its version directory is fully written."""
+def _read_pointer(root: str) -> dict | None:
+    """The pointer record ``{version, batch_id, prev}`` of the last
+    commit, or None before the first one."""
     p = _pointer_path(root)
     if not os.path.exists(p):
         return None
     with open(p) as f:
-        meta = json.load(f)
+        return json.load(f)
+
+
+def _commit(
+    spark: SparkSession,
+    root: str,
+    batch_id: int,
+    build_next: Callable[[DataFrame | None], DataFrame],
+) -> None:
+    """The one commit protocol of the versioned table: write
+    ``build_next(previous snapshot or None)`` to ``v{batch_id}``, then
+    atomically replace the pointer.
+
+    Replay guard: if this batch_id already committed, the previous
+    snapshot is the version BEFORE it (recorded as ``prev`` in its
+    pointer), so the rewrite is identical instead of double-applied."""
+    os.makedirs(root, exist_ok=True)
+    meta = _read_pointer(root) or {}
+    replay = meta.get("batch_id") == batch_id
+    prev_version = meta.get("prev" if replay else "version")
+    base = None
+    if prev_version:
+        base = spark.read.parquet(os.path.join(root, prev_version))
+    version = f"v{batch_id}"
+    build_next(base).write.mode("overwrite").parquet(os.path.join(root, version))
+    p = _pointer_path(root)
+    tmp = p + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(
+            {"version": version, "batch_id": batch_id, "prev": prev_version}, f
+        )
+    os.replace(tmp, p)
+
+
+def read_current(spark: SparkSession, root: str) -> DataFrame | None:
+    """Load the snapshot the pointer file names (None before the first
+    commit). Readers never see a half-written version: the pointer is
+    replaced only after its version directory is fully written."""
+    meta = _read_pointer(root)
+    if meta is None:
+        return None
     return spark.read.parquet(os.path.join(root, meta["version"]))
 
 
@@ -70,8 +110,6 @@ def upsert_batch_fn(
     and assert idempotence)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        os.makedirs(root, exist_ok=True)
         # latest-wins in-batch dedupe → key-unique updates frame
         w = W.partitionBy(*key_cols).orderBy(
             F.col(order_col).desc(), *[F.col(k) for k in key_cols]
@@ -81,40 +119,10 @@ def upsert_batch_fn(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # replay guard: if this batch_id already committed, rebuild from
-        # the version BEFORE it (recorded in its own metadata) so the
-        # rewrite is byte-identical instead of double-applied
-        p = _pointer_path(root)
-        base = None
-        prev_version = None
-        if os.path.exists(p):
-            with open(p) as f:
-                meta = json.load(f)
-            prev_version = (
-                meta.get("prev")
-                if meta["batch_id"] == batch_id
-                else meta["version"]
-            )
-            if prev_version:
-                base = spark.read.parquet(os.path.join(root, prev_version))
-        merged = (
-            merge_upsert(base, updates, key_cols)
-            if base is not None
-            else updates
-        )
-        version = f"v{batch_id}"
-        merged.write.mode("overwrite").parquet(os.path.join(root, version))
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "batch_id": batch_id,
-                    "prev": prev_version,
-                },
-                f,
-            )
-        os.replace(tmp, p)
+        def build_next(base: DataFrame | None) -> DataFrame:
+            return updates if base is None else merge_upsert(base, updates, key_cols)
+
+        _commit(batch_df.sparkSession, root, batch_id, build_next)
 
     return apply
 
@@ -125,7 +133,6 @@ def streaming_upsert(
     key_cols: list[str],
     order_col: str,
     checkpoint: str,
-    timeout_sec: int = 120,
 ) -> None:
     """Drive a bounded stream to completion through the upsert sink.
     Unbounded production use: drop ``processAllAvailable`` and let the
@@ -178,11 +185,8 @@ def vacuum_versions(root: str, keep: int = 2) -> list[int]:
     if keep < 2:
         raise ValueError("vacuum_versions: keep must be >= 2 (replay guard)")
     versions = list_versions(root)
-    current = None
-    p = _pointer_path(root)
-    if os.path.exists(p):
-        with open(p) as f:
-            current = json.load(f)["version"]
+    meta = _read_pointer(root)
+    current = meta["version"] if meta is not None else None
     doomed = versions[:-keep] if len(versions) > keep else []
     removed = []
     for b in doomed:
@@ -216,39 +220,14 @@ def cdc_batch_fn(
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        os.makedirs(root, exist_ok=True)
         payload = [c for c in batch_df.columns if c not in (seq_col, op_col)]
-        p = _pointer_path(root)
-        base = None
-        prev_version = None
-        if os.path.exists(p):
-            with open(p) as f:
-                meta = json.load(f)
-            prev_version = (
-                meta.get("prev")
-                if meta["batch_id"] == batch_id
-                else meta["version"]
-            )
-            if prev_version:
-                base = spark.read.parquet(os.path.join(root, prev_version))
-        if base is None:
-            base = spark.createDataFrame(
-                [], batch_df.select(*payload).schema
-            )
-        merged = cdc_apply(base, batch_df, key_cols, seq_col, op_col)
-        version = f"v{batch_id}"
-        merged.write.mode("overwrite").parquet(os.path.join(root, version))
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "batch_id": batch_id,
-                    "prev": prev_version,
-                },
-                f,
-            )
-        os.replace(tmp, p)
+
+        def build_next(base: DataFrame | None) -> DataFrame:
+            if base is None:
+                base = spark.createDataFrame([], batch_df.select(*payload).schema)
+            return cdc_apply(base, batch_df, key_cols, seq_col, op_col)
+
+        _commit(spark, root, batch_id, build_next)
 
     return apply
 

@@ -198,7 +198,6 @@ def run_to_files(
     checkpoint: str,
     output_mode: str = "append",
     fmt: str = "parquet",
-    timeout_sec: int = 120,
 ) -> None:
     """Drive a streaming query to completion through a FILE sink — the
     production shape (exactly-once via checkpointed offsets + file
@@ -228,7 +227,6 @@ def run_to_files(
 def run_windowed_batch(
     agg: DataFrame,
     query_name: str = "windowed_out",
-    timeout_sec: int = 120,
     output_mode: str = "complete",
 ) -> DataFrame:
     """Drive a streaming query synchronously to completion via the

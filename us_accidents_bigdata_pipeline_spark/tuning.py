@@ -13,25 +13,6 @@ from __future__ import annotations
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
-
-
-def cache_memory_disk(df: DataFrame) -> DataFrame:
-    """X1/X2: MEMORY_AND_DISK persist (explicit spill, never OOM)."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
-def repartition_for_parallelism(df: DataFrame, multiplier: int = 2) -> DataFrame:
-    """X3 (v2:cell25): max(200, defaultParallelism * multiplier)
-    partitions before a wide training stage."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(max(200, sc.defaultParallelism * multiplier))
-
-
-def repartition_by_key(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame:
-    """Hash-partition on join/agg keys so a later wide op reuses the
-    exchange (co-located join without bucketing)."""
-    return df.repartition(n, *cols) if n else df.repartition(*cols)
 
 
 class DriverCollectGuard(RuntimeError):
@@ -58,8 +39,14 @@ def safe_to_pandas(df: DataFrame, max_rows: int = 5_000_000) -> pd.DataFrame:
             f"toPandas() of {n} rows exceeds guard ({max_rows}); "
             "sample or aggregate first"
         )
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    return arrow_to_pandas(df)
+
+
+def arrow_to_pandas(df: DataFrame) -> pd.DataFrame:
+    """Unguarded Arrow-batched toPandas, for frames bounded by
+    construction. The conf is set at call time because a caller-owned
+    session need not carry session.py's defaults."""
+    df.sparkSession.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     return df.toPandas()
 
 
