@@ -470,7 +470,6 @@ def main() -> None:
     pipeline_stats: dict = {}
     try:
         from us_accidents_bigdata_pipeline_spark.pipeline import (
-            PipelineConfig,
             run_complete_pipeline,
         )
         from us_accidents_bigdata_pipeline_spark.sources.accidents import (
@@ -514,7 +513,7 @@ def main() -> None:
             best_fit_rps = 0.0
             for attempt in range(3):
                 t0 = time.perf_counter()
-                s = run_complete_pipeline(spark, raw, config=PipelineConfig())
+                s = run_complete_pipeline(spark, raw)
                 sec = time.perf_counter() - t0
                 rf_s = s["stages"]["random_forest"]
                 best_fit_rps = max(

@@ -28,6 +28,7 @@ from us_accidents_bigdata_pipeline_spark.streaming.tws import (
     running_totals_tws,
     tws_runtime_available,
 )
+from us_accidents_bigdata_pipeline_spark.streaming.windows import adaptive_ts_stream
 
 
 def main() -> None:
@@ -42,8 +43,6 @@ def main() -> None:
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
@@ -54,25 +53,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-        if dict(batch.dtypes).get("ts") == "bigint":
-            batch = batch.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        schema = batch.schema
-        # file streams need a DIRECTORY source; select the events file
-        # with a glob filter (same shape as streaming/windows.py::
-        # adaptive_ts_stream)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
+        # bounded file stream over the events file, ts decoded to a
+        # microsecond timestamp
+        stream = adaptive_ts_stream(spark, sf_dir)
         out = running_totals_tws(stream)
         q = (
             out.writeStream.format("memory")

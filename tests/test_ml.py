@@ -35,10 +35,7 @@ from us_accidents_bigdata_pipeline_spark.ml.rf import (
     train_rf,
     train_with_retry,
 )
-from us_accidents_bigdata_pipeline_spark.operators.clean import (
-    ACCIDENTS_CLEAN_SPEC,
-    clean,
-)
+from us_accidents_bigdata_pipeline_spark.operators.clean import clean
 from us_accidents_bigdata_pipeline_spark.operators.sample import deterministic_split
 from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw
 
@@ -57,7 +54,7 @@ FEATURES = [
 @pytest.fixture(scope="module")
 def accidents_cleaned(spark):
     raw = generate_accidents_raw(spark, n_rows=4000, seed=42)
-    return clean(raw, ACCIDENTS_CLEAN_SPEC).cache()
+    return clean(raw).cache()
 
 
 @pytest.fixture(scope="module")
@@ -82,6 +79,50 @@ def test_rf_severity_pipeline(accidents_cleaned):
     assert imp[0][0] in ("Distance_mi", "Visibility_mi"), imp
     aucs = one_vs_rest_auc(preds)
     assert all(0.5 <= v <= 1.0 for v in aucs.values()), aucs
+
+
+class _Train:
+    """Stands in for the train frame: the retry ladder only samples it."""
+
+    def sample(self, *args):
+        return self
+
+
+def test_rf_retry_propagates_non_oom_errors(monkeypatch):
+    calls = []
+
+    def broken(train, params=None):
+        calls.append(train)
+        raise ValueError("no such column: featurez")
+
+    monkeypatch.setattr("us_accidents_bigdata_pipeline_spark.ml.rf.train_rf", broken)
+    with pytest.raises(ValueError, match="featurez"):
+        train_with_retry(_Train())
+    assert len(calls) == 1
+
+
+@pytest.mark.parametrize(
+    "oom",
+    [
+        "An error occurred while calling o412.fit.\n"
+        ": java.lang.OutOfMemoryError: Java heap space",
+        "Job aborted due to stage failure: Task 3 in stage 41.0 failed 1 times"
+        ": org.apache.spark.memory.SparkOutOfMemoryError:"
+        " Unable to acquire 65536 bytes of memory, got 0",
+    ],
+    ids=["java-heap", "spark-execution-memory"],
+)
+def test_rf_retry_falls_back_to_half_sample_on_oom(monkeypatch, oom):
+    calls = []
+
+    def oom_once(train, params=None):
+        calls.append(train)
+        if len(calls) == 1:
+            raise RuntimeError(oom)
+        return "model"
+
+    monkeypatch.setattr("us_accidents_bigdata_pipeline_spark.ml.rf.train_rf", oom_once)
+    assert train_with_retry(_Train()) == ("model", 0.5)
 
 
 def test_metrics_match_mllib_evaluator(accidents_cleaned):

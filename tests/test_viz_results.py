@@ -12,10 +12,7 @@ from us_accidents_bigdata_pipeline_spark.ml.metrics import (
     cluster_centers_document,
     result_documents,
 )
-from us_accidents_bigdata_pipeline_spark.operators.clean import (
-    ACCIDENTS_CLEAN_SPEC,
-    clean,
-)
+from us_accidents_bigdata_pipeline_spark.operators.clean import clean
 from us_accidents_bigdata_pipeline_spark.operators.viz import (
     cluster_scatter_input,
     geo_scatter_sample,
@@ -32,7 +29,7 @@ import pytest
 @pytest.fixture(scope="module")
 def cleaned(spark):
     raw = generate_accidents_raw(spark, n_rows=2000, seed=42)
-    return clean(raw, ACCIDENTS_CLEAN_SPEC).cache()
+    return clean(raw).cache()
 
 
 def test_viz_aggregates(cleaned):

@@ -3,9 +3,8 @@
 Reference parity:
 - VectorAssembler with explicit null handling. The reference uses
   ``handleInvalid="skip"`` which silently drops rows
-  (random_forest.py:85, SURVEY §7.4.3); here the default is an explicit
-  not-null pre-filter so row counts stay auditable, with ``skip``
-  available for parity.
+  (random_forest.py:85, SURVEY §7.4.3); here an explicit not-null
+  pre-filter keeps row counts auditable.
 - StandardScaler withMean/withStd matching knn_classification.py:80-85.
 - StringIndexer handleInvalid="keep" (v2:cell20); note frequency-desc
   ordering determinism (SURVEY §7.4.4).
@@ -20,29 +19,25 @@ from pyspark.sql import functions as F
 
 
 def assemble_and_scale(
-    df: DataFrame,
-    feature_cols: list[str],
-    output_col: str = "features",
-    with_mean: bool = True,
-    with_std: bool = True,
-    drop_invalid: bool = True,
+    df: DataFrame, feature_cols: list[str], with_mean: bool = True
 ) -> tuple[DataFrame, PipelineModel]:
     """Pipeline([VectorAssembler, StandardScaler]) fit+transform
-    (knn_classification.py:88-91). Returns (transformed, fitted model).
+    (knn_classification.py:88-91) into a ``features`` column, after
+    dropping rows with a null or NaN feature. Returns (transformed,
+    fitted model).
     """
-    if drop_invalid:
-        cond = F.lit(True)
-        for c in feature_cols:
-            cond = cond & F.col(c).isNotNull() & ~F.isnan(F.col(c))
-        df = df.filter(cond)
+    cond = F.lit(True)
+    for c in feature_cols:
+        cond = cond & F.col(c).isNotNull() & ~F.isnan(F.col(c))
+    df = df.filter(cond)
     assembler = VectorAssembler(
         inputCols=feature_cols, outputCol="_features_raw", handleInvalid="error"
     )
     scaler = StandardScaler(
         inputCol="_features_raw",
-        outputCol=output_col,
+        outputCol="features",
         withMean=with_mean,
-        withStd=with_std,
+        withStd=True,
     )
     model = Pipeline(stages=[assembler, scaler]).fit(df)
     return model.transform(df).drop("_features_raw"), model

@@ -17,46 +17,32 @@ from pyspark.sql import functions as F
 
 
 def fit_kmeans(
-    df: DataFrame,
-    k: int,
-    features_col: str = "features",
-    prediction_col: str = "cluster",
-    max_iter: int = 50,
-    seed: int = 42,
+    df: DataFrame, k: int, max_iter: int = 50, seed: int = 42
 ) -> KMeansModel:
     km = KMeans(
         k=k,
         seed=seed,
         maxIter=max_iter,
-        featuresCol=features_col,
-        predictionCol=prediction_col,
+        featuresCol="features",
+        predictionCol="cluster",
     )
     return km.fit(df)
 
 
-def silhouette(
-    predictions: DataFrame,
-    features_col: str = "features",
-    prediction_col: str = "cluster",
-    distance: str = "squaredEuclidean",
-) -> float:
+def silhouette(predictions: DataFrame) -> float:
     """ClusteringEvaluator silhouette — squaredEuclidean to match the
     reference's Spark-side numbers (0.73-range, not sklearn's 0.11)."""
     ev = ClusteringEvaluator(
-        featuresCol=features_col,
-        predictionCol=prediction_col,
+        featuresCol="features",
+        predictionCol="cluster",
         metricName="silhouette",
-        distanceMeasure=distance,
+        distanceMeasure="squaredEuclidean",
     )
     return ev.evaluate(predictions)
 
 
 def k_sweep(
-    df: DataFrame,
-    ks: list[int],
-    features_col: str = "features",
-    max_iter: int = 30,
-    seed: int = 42,
+    df: DataFrame, ks: list[int], max_iter: int = 30, seed: int = 42
 ) -> tuple[int, list[tuple[int, float, float]]]:
     """Silhouette sweep over candidate k (E7). Returns
     (best_k, [(k, silhouette, wssse), ...]); best = argmax silhouette
@@ -72,9 +58,9 @@ def k_sweep(
     from concurrent.futures import ThreadPoolExecutor
 
     def one(k: int) -> tuple[int, float, float]:
-        model = fit_kmeans(df, k, features_col, max_iter=max_iter, seed=seed)
+        model = fit_kmeans(df, k, max_iter=max_iter, seed=seed)
         pred = model.transform(df)
-        sil = silhouette(pred, features_col)
+        sil = silhouette(pred)
         wssse = model.summary.trainingCost
         return (k, sil, wssse)
 
@@ -85,9 +71,7 @@ def k_sweep(
 
 
 def cluster_stats(
-    predictions: DataFrame,
-    cluster_col: str = "cluster",
-    stat_cols: list[str] | None = None,
+    predictions: DataFrame, stat_cols: list[str] | None = None
 ) -> DataFrame:
     """Per-cluster count / avg / stddev multi-agg
     (kmeans_clustering.py:202-208) — plain SQL-expressible (A2)."""
@@ -98,7 +82,7 @@ def cluster_stats(
             F.round(F.avg(c), 4).alias(f"avg_{c}"),
             F.round(F.stddev(c), 4).alias(f"std_{c}"),
         ]
-    return predictions.groupBy(cluster_col).agg(*aggs)
+    return predictions.groupBy("cluster").agg(*aggs)
 
 
 def cluster_centers(model: KMeansModel) -> list[list[float]]:

@@ -111,16 +111,13 @@ def knn_predict(
     k: int = 5,
     features_col: str = "features",
     label_col: str = "label",
-    train_fraction: float = 1.0,
-    seed: int = 42,
     train_broadcast=None,
 ) -> DataFrame:
     """Vectorized broadcast kNN: adds a ``prediction`` int column.
 
-    ``train_fraction`` mirrors the reference's 10% broadcast sample
-    (knn_classification.py:132). The broadcast payload is two dense
-    NumPy arrays — for a 1000-executor cluster this is one driver→
-    executor transfer per executor, then zero data movement. Pass
+    The broadcast payload is two dense NumPy arrays — for a
+    1000-executor cluster this is one driver→executor transfer per
+    executor, then zero data movement. Pass
     ``train_broadcast`` (from ``broadcast_train``) to reuse one
     collect+broadcast across calls.
     """
@@ -129,7 +126,7 @@ def knn_predict(
     else:
         if train is None:
             raise ValueError("either train or train_broadcast is required")
-        bc = broadcast_train(train, features_col, label_col, train_fraction, seed)
+        bc = broadcast_train(train, features_col, label_col)
 
     n_train_rows = len(bc.value[1])
     classes = bc.value[3]

@@ -13,15 +13,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def evaluate_classifier(
-    predictions: DataFrame,
-    label_col: str = "label",
-    prediction_col: str = "prediction",
-) -> dict[str, float]:
+def evaluate_classifier(predictions: DataFrame) -> dict[str, float]:
     """accuracy / weighted precision / weighted recall / weighted F1
     (MulticlassClassificationEvaluator parity, random_forest.py:132-141)
     computed from one confusion-matrix aggregate."""
-    cm = confusion_matrix(predictions, label_col, prediction_col)
+    cm = confusion_matrix(predictions)
     per_class, total, correct = _per_class_stats(cm)
     if total == 0:
         return {"accuracy": 0.0, "precision": 0.0, "recall": 0.0, "f1": 0.0}
@@ -32,17 +28,13 @@ def evaluate_classifier(
     return {"accuracy": acc, "precision": wp, "recall": wr, "f1": wf}
 
 
-def confusion_matrix(
-    predictions: DataFrame,
-    label_col: str = "label",
-    prediction_col: str = "prediction",
-) -> DataFrame:
+def confusion_matrix(predictions: DataFrame) -> DataFrame:
     """(label, prediction, n) — the k×k matrix as a DataFrame
     (replaces MulticlassMetrics.confusionMatrix, SURVEY E2)."""
     return (
         predictions.groupBy(
-            F.col(label_col).cast("double").alias("label"),
-            F.col(prediction_col).cast("double").alias("prediction"),
+            F.col("label").cast("double").alias("label"),
+            F.col("prediction").cast("double").alias("prediction"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -74,14 +66,10 @@ def _per_class_stats(cm: DataFrame):
     return out, total, correct
 
 
-def per_class_report(
-    predictions: DataFrame,
-    label_col: str = "label",
-    prediction_col: str = "prediction",
-) -> DataFrame:
+def per_class_report(predictions: DataFrame) -> DataFrame:
     """Per-class precision/recall/F1/support as a DataFrame
     (classification_report parity, SURVEY E2/E6)."""
-    cm = confusion_matrix(predictions, label_col, prediction_col)
+    cm = confusion_matrix(predictions)
     per_class, _, _ = _per_class_stats(cm)
     spark = predictions.sparkSession
     rows = [

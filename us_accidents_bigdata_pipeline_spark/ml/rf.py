@@ -1,10 +1,9 @@
 """Random Forest severity classification (SURVEY §2.8 M5/M6/M9).
 
-Reference parity: RandomForestClassifier with the docker params
-(numTrees=100, maxDepth=10, minInstancesPerNode=10, seed=42,
-random_forest.py:101-108) and the notebook's memory-tuned variant
-(v2:cell27); the graceful-degradation retry loop (M6, v2:cell27) is a
-reusable wrapper; feature importance (M9, random_forest.py:118-119).
+Reference parity: RandomForestClassifier with the notebook's
+memory-tuned parameters (v2:cell27); the graceful-degradation retry
+loop (M6, v2:cell27) is a reusable wrapper; feature importance (M9,
+random_forest.py:118-119).
 """
 
 from __future__ import annotations
@@ -17,7 +16,8 @@ from pyspark.sql import DataFrame
 
 @dataclass
 class RFParams:
-    """Named presets mirror the reference's three configurations."""
+    """RandomForestClassifier parameters; ``notebook_tuned`` is the
+    pipeline's preset."""
 
     num_trees: int = 50
     max_depth: int = 8
@@ -43,11 +43,6 @@ class RFParams:
     cache_node_ids: bool = False
 
     @classmethod
-    def docker_full(cls) -> "RFParams":
-        # random_forest.py:101-108
-        return cls(num_trees=100, max_depth=10, min_instances_per_node=10)
-
-    @classmethod
     def notebook_tuned(cls) -> "RFParams":
         # v2:cell27 — memory-tuned for local[*]; the reference also sets
         # cacheNodeIds=True there, which this preset deliberately does
@@ -64,15 +59,12 @@ class RFParams:
 
 
 def train_rf(
-    train: DataFrame,
-    params: RFParams | None = None,
-    features_col: str = "features",
-    label_col: str = "label",
+    train: DataFrame, params: RFParams | None = None
 ) -> RandomForestClassificationModel:
     params = params or RFParams()
     rf = RandomForestClassifier(
-        featuresCol=features_col,
-        labelCol=label_col,
+        featuresCol="features",
+        labelCol="label",
         numTrees=params.num_trees,
         maxDepth=params.max_depth,
         minInstancesPerNode=params.min_instances_per_node,
@@ -86,24 +78,36 @@ def train_rf(
     return rf.fit(train)
 
 
+# the notebook's degradation ladder (v2:cell27): full train set, then
+# 50 % and 30 % samples
+RETRY_FRACTIONS = (1.0, 0.5, 0.3)
+
+
 def train_with_retry(
-    train: DataFrame,
-    params: RFParams | None = None,
-    fractions: tuple[float, ...] = (1.0, 0.5, 0.3),
-    seed: int = 42,
-    **kwargs,
+    train: DataFrame, params: RFParams | None = None
 ) -> tuple[RandomForestClassificationModel, float]:
     """Graceful-degradation trainer (M6, v2:cell27): try the full train
-    set, on failure retry on progressively smaller samples. Returns
-    (model, fraction_used)."""
+    set; when the JVM runs out of memory, retry on progressively
+    smaller samples. "OutOfMemoryError" matches both a heap
+    ``java.lang.OutOfMemoryError`` and Spark's execution-memory
+    ``SparkOutOfMemoryError`` ("Unable to acquire N bytes of memory").
+    A ``spark.driver.maxResultSize`` overflow is not retried: tree
+    aggregation's result size follows ``maxMemoryInMB`` and the tree
+    shape, not the row count, so a smaller sample does not shrink it.
+    Any other error propagates at once, so a coding error never turns
+    into a quietly smaller model. Returns (model, fraction_used)."""
     last_err: Exception | None = None
-    for frac in fractions:
-        subset = train if frac >= 1.0 else train.sample(False, frac, seed)
+    for frac in RETRY_FRACTIONS:
+        subset = train if frac >= 1.0 else train.sample(False, frac, 42)
         try:
-            return train_rf(subset, params, **kwargs), frac
-        except Exception as e:  # OOM / tree-aggregation failures
+            return train_rf(subset, params), frac
+        except Exception as e:
+            if "OutOfMemoryError" not in str(e):
+                raise
             last_err = e
-    raise RuntimeError(f"training failed at all fractions {fractions}") from last_err
+    raise RuntimeError(
+        f"training ran out of memory at all fractions {RETRY_FRACTIONS}"
+    ) from last_err
 
 
 def feature_importance(

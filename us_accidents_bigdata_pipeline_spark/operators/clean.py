@@ -4,8 +4,8 @@ declarative transform (SURVEY §2.2; BigDataPipeline/spark/data_cleaning.py).
 Reference semantics reproduced:
 - defensive projection: wanted ∩ existing columns (data_cleaning.py:45)
 - rename to safe identifiers (data_cleaning.py:52-60)
-- numeric imputation: median (approx at scale / exact for tests) or
-  constant, NaN-aware (data_cleaning.py:67-71)
+- numeric imputation: approximate median or constant, NaN-aware
+  (data_cleaning.py:67-71)
 - categorical: null/"" → 'Unknown' (data_cleaning.py:76-78)
 - boolean flags → 0/1 int (data_cleaning.py:81-86)
 - temporal features hour/dayofweek/month then drop source col
@@ -20,8 +20,6 @@ they are computed in ONE multi-column agg, not per-column round-trips
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,77 +32,83 @@ def select_existing(df: DataFrame, wanted: list[str]) -> DataFrame:
     return df.select(*existing)
 
 
-@dataclass
-class CleanSpec:
-    """Declarative cleaning configuration."""
+# The reference's accidents cleaning rules (data_cleaning.py:34-97).
+KEEP = [
+    "ID", "Severity", "Start_Time", "Start_Lat", "Start_Lng",
+    "Distance(mi)", "City", "County", "State",
+    "Temperature(F)", "Humidity(%)", "Pressure(in)", "Visibility(mi)",
+    "Wind_Speed(mph)", "Precipitation(in)", "Weather_Condition",
+    "Amenity", "Crossing", "Junction", "Railway", "Station", "Stop",
+    "Traffic_Signal", "Sunrise_Sunset",
+]
+RENAME = {
+    "Distance(mi)": "Distance_mi",
+    "Temperature(F)": "Temperature_F",
+    "Humidity(%)": "Humidity_Percent",
+    "Pressure(in)": "Pressure_in",
+    "Visibility(mi)": "Visibility_mi",
+    "Wind_Speed(mph)": "Wind_Speed_mph",
+    "Precipitation(in)": "Precipitation_in",
+}
+IMPUTE_MEDIAN = [
+    "Temperature_F", "Humidity_Percent", "Pressure_in",
+    "Visibility_mi", "Wind_Speed_mph",
+]
+IMPUTE_CONSTANT = {"Precipitation_in": 0.0, "Distance_mi": 0.0}
+CATEGORICAL_UNKNOWN = ["City", "County", "Weather_Condition", "Sunrise_Sunset"]
+BOOL_FLAGS = [
+    "Amenity", "Crossing", "Junction", "Railway", "Station", "Stop",
+    "Traffic_Signal",
+]
+TIMESTAMP_COL = "Start_Time"
+NOT_NULL = ["Start_Lat", "Start_Lng"]
+SEVERITY_RANGE = (1, 4)
 
-    keep: list[str] = field(default_factory=list)
-    rename: dict[str, str] = field(default_factory=dict)
-    impute_median: list[str] = field(default_factory=list)
-    impute_constant: dict[str, float] = field(default_factory=dict)
-    categorical_unknown: list[str] = field(default_factory=list)
-    bool_flags: list[str] = field(default_factory=list)
-    timestamp_col: str | None = None
-    drop_timestamp: bool = True
-    not_null: list[str] = field(default_factory=list)
-    range_filters: dict[str, tuple[float, float]] = field(default_factory=dict)
-    exact_median: bool = False  # exact percentile for tests; approx at scale
 
-
-def compute_medians(df: DataFrame, cols: list[str], exact: bool = False) -> dict[str, float]:
-    """Median per column in ONE aggregate job.
-
-    ``exact=False`` uses percentile_approx (Greenwald-Khanna, the
-    reference's approxQuantile path, data_cleaning.py:67) — mergeable
-    sketch, single pass, scale-safe. ``exact=True`` uses percentile
-    (exact, needs per-group sort) for oracle-checked tests.
+def compute_medians(df: DataFrame, cols: list[str]) -> dict[str, float]:
+    """Median per column in ONE aggregate job: percentile_approx
+    (Greenwald-Khanna, the reference's approxQuantile path,
+    data_cleaning.py:67) — mergeable sketch, single pass, scale-safe.
     """
     if not cols:
         return {}
-    fn = (
-        (lambda c: F.percentile(c, F.lit(0.5)))
-        if exact
-        else (lambda c: F.percentile_approx(c, F.lit(0.5), F.lit(10000)))
-    )
-    row = df.agg(*[fn(c).alias(c) for c in cols]).head()
+    row = df.agg(
+        *[F.percentile_approx(c, F.lit(0.5), F.lit(10000)).alias(c) for c in cols]
+    ).head()
     return {c: (row[c] if row[c] is not None else 0.0) for c in cols}
 
 
-def clean(df: DataFrame, spec: CleanSpec) -> DataFrame:
-    """Apply the full cleaning pipeline as one chained transform."""
-    out = select_existing(df, spec.keep) if spec.keep else df
-    for old, new in spec.rename.items():
+def clean(df: DataFrame) -> DataFrame:
+    """Apply the accidents cleaning rules as one chained transform."""
+    out = select_existing(df, KEEP)
+    for old, new in RENAME.items():
         if old in out.columns:
             out = out.withColumnRenamed(old, new)
 
-    medians = compute_medians(
-        out, [c for c in spec.impute_median if c in out.columns], spec.exact_median
-    )
+    medians = compute_medians(out, [c for c in IMPUTE_MEDIAN if c in out.columns])
     exprs = []
     for c in out.columns:
         if c in medians:
             exprs.append(impute_value(c, medians[c]).alias(c))
-        elif c in spec.impute_constant:
-            exprs.append(impute_value(c, spec.impute_constant[c]).alias(c))
-        elif c in spec.categorical_unknown:
+        elif c in IMPUTE_CONSTANT:
+            exprs.append(impute_value(c, IMPUTE_CONSTANT[c]).alias(c))
+        elif c in CATEGORICAL_UNKNOWN:
             exprs.append(normalize_empty_string(c).alias(c))
-        elif c in spec.bool_flags:
+        elif c in BOOL_FLAGS:
             exprs.append(bool_to_int(c).alias(c))
         else:
             exprs.append(F.col(c))
     out = out.select(*exprs)
 
-    if spec.timestamp_col and spec.timestamp_col in out.columns:
-        ts = spec.timestamp_col
+    if TIMESTAMP_COL in out.columns:
         out = (
-            out.withColumn("hour_of_day", F.hour(ts))
-            .withColumn("day_of_week", F.dayofweek(ts))
-            .withColumn("month", F.month(ts))
+            out.withColumn("hour_of_day", F.hour(TIMESTAMP_COL))
+            .withColumn("day_of_week", F.dayofweek(TIMESTAMP_COL))
+            .withColumn("month", F.month(TIMESTAMP_COL))
+            .drop(TIMESTAMP_COL)
         )
-        if spec.drop_timestamp:
-            out = out.drop(ts)
 
-    for c in spec.not_null:
+    for c in NOT_NULL:
         if c in out.columns:
             cond = F.col(c).isNotNull()
             # NaN-aware for floating columns: pandas/Arrow ingestion
@@ -113,44 +117,6 @@ def clean(df: DataFrame, spec: CleanSpec) -> DataFrame:
             if dict(out.dtypes).get(c) in ("double", "float"):
                 cond = cond & ~F.isnan(F.col(c))
             out = out.filter(cond)
-    for c, (lo, hi) in spec.range_filters.items():
-        if c in out.columns:
-            out = out.filter((F.col(c) >= lo) & (F.col(c) <= hi))
+    if "Severity" in out.columns:
+        out = out.filter(F.col("Severity").between(*SEVERITY_RANGE))
     return out
-
-
-# The reference's concrete accidents cleaning spec
-# (data_cleaning.py:34-97), for pipeline-parity tests on FIXTURES.md §1
-# synthetic data.
-ACCIDENTS_CLEAN_SPEC = CleanSpec(
-    keep=[
-        "ID", "Severity", "Start_Time", "Start_Lat", "Start_Lng",
-        "Distance(mi)", "City", "County", "State",
-        "Temperature(F)", "Humidity(%)", "Pressure(in)", "Visibility(mi)",
-        "Wind_Speed(mph)", "Precipitation(in)", "Weather_Condition",
-        "Amenity", "Crossing", "Junction", "Railway", "Station", "Stop",
-        "Traffic_Signal", "Sunrise_Sunset",
-    ],
-    rename={
-        "Distance(mi)": "Distance_mi",
-        "Temperature(F)": "Temperature_F",
-        "Humidity(%)": "Humidity_Percent",
-        "Pressure(in)": "Pressure_in",
-        "Visibility(mi)": "Visibility_mi",
-        "Wind_Speed(mph)": "Wind_Speed_mph",
-        "Precipitation(in)": "Precipitation_in",
-    },
-    impute_median=[
-        "Temperature_F", "Humidity_Percent", "Pressure_in",
-        "Visibility_mi", "Wind_Speed_mph",
-    ],
-    impute_constant={"Precipitation_in": 0.0, "Distance_mi": 0.0},
-    categorical_unknown=["City", "County", "Weather_Condition", "Sunrise_Sunset"],
-    bool_flags=[
-        "Amenity", "Crossing", "Junction", "Railway", "Station", "Stop",
-        "Traffic_Signal",
-    ],
-    timestamp_col="Start_Time",
-    not_null=["Start_Lat", "Start_Lng"],
-    range_filters={"Severity": (1, 4)},
-)

@@ -67,15 +67,15 @@ def stratified_sample(
 
 
 def deterministic_split(
-    df: DataFrame, key_col: str, test_fraction: float = 0.2, buckets: int = 100
+    df: DataFrame, key_col: str, test_fraction: float = 0.2
 ) -> tuple[DataFrame, DataFrame]:
-    """Partition-layout-INdependent split: hash the key column into
+    """Partition-layout-INdependent split: hash the key column into 100
     buckets and cut by bucket index. Unlike randomSplit, re-runs and
     repartitions give identical membership — required for reproducible
     ML golden tests (SURVEY §7.4.1).
     """
-    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(buckets))
-    cut = int(buckets * (1.0 - test_fraction))
+    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(100))
+    cut = int(100 * (1.0 - test_fraction))
     return df.filter(bucket < cut), df.filter(bucket >= cut)
 
 

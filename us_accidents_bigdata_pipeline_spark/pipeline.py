@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import json
 import time
-from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +31,7 @@ from .ml.kmeans import cluster_stats, fit_kmeans, k_sweep, silhouette
 from .ml.knn import broadcast_train, knn_predict
 from .ml.metrics import evaluate_classifier
 from .ml.rf import RFParams, feature_importance, train_with_retry
-from .operators.clean import ACCIDENTS_CLEAN_SPEC, CleanSpec, clean
+from .operators.clean import clean
 from .operators.sample import deterministic_split
 from .tuning import right_size_partitions
 from .sources.io import write_parquet
@@ -47,53 +46,46 @@ RF_FEATURES = [
 ]
 GEO_FEATURES = ["Start_Lat", "Start_Lng"]
 
-
-@dataclass
-class PipelineConfig:
-    clean_spec: CleanSpec = field(default_factory=lambda: ACCIDENTS_CLEAN_SPEC)
-    rf_params: RFParams = field(default_factory=RFParams.notebook_tuned)
-    rf_features: list[str] = field(default_factory=lambda: list(RF_FEATURES))
-    knn_k: int = 5
-    knn_train_fraction: float = 0.1  # knn_classification.py:132
-    # brute-force kNN scoring is O(|test|*|broadcast train|): cap the
-    # evaluated test rows at scale (the reference's Spark kNN only ever
-    # ran on a 5% dataset sample, knn_classification.py:298; its
-    # full-data kNN was driver-side sklearn KD-trees)
-    knn_max_test_rows: int = 100_000
-    kmeans_ks: tuple[int, ...] = (4, 6, 8)  # full_scale_pipeline.py:197-222
-    kmeans_max_iter: int = 30
-    # sweep on a capped sample with fewer iterations (the reference's
-    # own 200K elbow-sample pattern, v2:cell47-48) - the final fit uses
-    # the full data and full iteration budget
-    kmeans_sweep_sample_rows: int = 200_000
-    kmeans_sweep_max_iter: int = 15
-    test_fraction: float = 0.2
-    seed: int = 42
+RF_PARAMS = RFParams.notebook_tuned()
+KNN_K = 5
+KNN_TRAIN_FRACTION = 0.1  # knn_classification.py:132
+# brute-force kNN scoring is O(|test|*|broadcast train|): cap the
+# evaluated test rows at scale (the reference's Spark kNN only ever
+# ran on a 5% dataset sample, knn_classification.py:298; its
+# full-data kNN was driver-side sklearn KD-trees)
+KNN_MAX_TEST_ROWS = 100_000
+KMEANS_KS = [4, 6, 8]  # full_scale_pipeline.py:197-222
+KMEANS_MAX_ITER = 30
+# sweep on a capped sample with fewer iterations (the reference's
+# own 200K elbow-sample pattern, v2:cell47-48) - the final fit uses
+# the full data and full iteration budget
+KMEANS_SWEEP_SAMPLE_ROWS = 200_000
+KMEANS_SWEEP_MAX_ITER = 15
+TEST_FRACTION = 0.2
+SEED = 42
 
 
 def run_complete_pipeline(
     spark: SparkSession,
     raw: DataFrame,
     output_dir: str | None = None,
-    config: PipelineConfig | None = None,
 ) -> dict:
     """Run the full pipeline; returns the metrics document (the
     reference's pipeline_summary.json shape) and, when ``output_dir``
     is set, writes cleaned parquet + clustered sample + metrics JSON."""
-    cfg = config or PipelineConfig()
-    t_start = time.time()
+    t_start = time.perf_counter()
     summary: dict = {"stages": {}}
 
     # -- stage 1: clean (data_cleaning.py semantics) --------------------
-    t0 = time.time()
-    cleaned = clean(raw, cfg.clean_spec).cache()
+    t0 = time.perf_counter()
+    cleaned = clean(raw).cache()
     n_clean = cleaned.count()
-    summary["stages"]["clean"] = {"rows": n_clean, "sec": round(time.time() - t0, 2)}
+    summary["stages"]["clean"] = {"rows": n_clean, "sec": round(time.perf_counter() - t0, 2)}
 
     # -- stage 2: features + RF severity classification -----------------
-    t0 = time.time()
+    t0 = time.perf_counter()
     labeled = cleaned.withColumn("label", (F.col("Severity") - 1).cast("double"))
-    feat, _ = assemble_and_scale(labeled, cfg.rf_features, with_mean=False)
+    feat, _ = assemble_and_scale(labeled, RF_FEATURES, with_mean=False)
     # iterative trainers pay per-task overhead per iteration: size
     # partitions by rows, not by cluster width (tuning.py rationale).
     # ~5K rows/partition floor keeps small tiers at full parallelism
@@ -112,17 +104,17 @@ def run_complete_pipeline(
         max_parts=2 * sc.defaultParallelism,
         allow_grow=True,
     ).cache()
-    train, test = deterministic_split(feat, "ID", cfg.test_fraction)
+    train, test = deterministic_split(feat, "ID", TEST_FRACTION)
     n_train = train.count()
     # time the model fit separately from stage prep (scaler fit, cache
     # materialization, split count): the reference's published RF
     # throughput is fit-only (Pipeline_Collab/outputs/rf_results.json —
     # 6.18M rows / 80.37 s training), so rows_per_sec must measure the
     # same window to be comparable
-    t_fit = time.time()
-    rf_model, used_fraction = train_with_retry(train, cfg.rf_params)
-    rf_fit_sec = time.time() - t_fit
-    rf_train_sec = time.time() - t0
+    t_fit = time.perf_counter()
+    rf_model, used_fraction = train_with_retry(train, RF_PARAMS)
+    rf_fit_sec = time.perf_counter() - t_fit
+    rf_train_sec = time.perf_counter() - t0
     rf_preds = rf_model.transform(test)
     rf_metrics = evaluate_classifier(rf_preds)
     summary["stages"]["random_forest"] = {
@@ -135,45 +127,33 @@ def run_complete_pipeline(
         "metrics": {k: round(v, 4) for k, v in rf_metrics.items()},
         "feature_importance": [
             {"feature": f, "importance": round(i, 4)}
-            for f, i in feature_importance(rf_model, cfg.rf_features)[:15]
+            for f, i in feature_importance(rf_model, RF_FEATURES)[:15]
         ],
     }
 
     # -- stage 3: distributed kNN --------------------------------------
-    t0 = time.time()
+    t0 = time.perf_counter()
     knn_test = test
     n_test = test.count()
-    if n_test > cfg.knn_max_test_rows:
-        knn_test = test.sample(
-            False, cfg.knn_max_test_rows / n_test, cfg.seed
-        )
+    if n_test > KNN_MAX_TEST_ROWS:
+        knn_test = test.sample(False, KNN_MAX_TEST_ROWS / n_test, SEED)
     # broadcast created here (not inside knn_predict) so it can be
     # destroyed once metrics are materialized — otherwise each pipeline
     # run leaks one train-matrix broadcast on driver and executors
     knn_bc = broadcast_train(
-        train,
-        features_col="features",
-        label_col="label",
-        train_fraction=cfg.knn_train_fraction,
-        seed=cfg.seed,
+        train, train_fraction=KNN_TRAIN_FRACTION, seed=SEED
     )
     try:
-        knn_preds = knn_predict(
-            knn_test,
-            k=cfg.knn_k,
-            features_col="features",
-            label_col="label",
-            train_broadcast=knn_bc,
-        )
+        knn_preds = knn_predict(knn_test, k=KNN_K, train_broadcast=knn_bc)
         knn_metrics = evaluate_classifier(
             knn_preds.withColumn("prediction", F.col("prediction").cast("double"))
         )
     finally:
         knn_bc.destroy()
     summary["stages"]["knn"] = {
-        "k": cfg.knn_k,
-        "train_fraction": cfg.knn_train_fraction,
-        "sec": round(time.time() - t0, 2),
+        "k": KNN_K,
+        "train_fraction": KNN_TRAIN_FRACTION,
+        "sec": round(time.perf_counter() - t0, 2),
         "metrics": {k: round(v, 4) for k, v in knn_metrics.items()},
     }
     # the ML feature cache is dead after kNN — release it BEFORE the
@@ -182,7 +162,7 @@ def run_complete_pipeline(
     feat.unpersist()
 
     # -- stage 4: K-Means geographic clustering -------------------------
-    t0 = time.time()
+    t0 = time.perf_counter()
     geo, _ = assemble_and_scale(
         cleaned.select("ID", "Severity", *GEO_FEATURES), GEO_FEATURES
     )
@@ -191,17 +171,14 @@ def run_complete_pipeline(
     # otherwise race to populate this cache, each recomputing the
     # lineage and contending on BlockManager puts
     geo.count()
-    if n_clean > cfg.kmeans_sweep_sample_rows:
-        sweep_df = geo.sample(
-            False, cfg.kmeans_sweep_sample_rows / n_clean, cfg.seed
-        )
+    if n_clean > KMEANS_SWEEP_SAMPLE_ROWS:
+        sweep_df = geo.sample(False, KMEANS_SWEEP_SAMPLE_ROWS / n_clean, SEED)
     else:
         sweep_df = geo
     best_k, sweep = k_sweep(
-        sweep_df, list(cfg.kmeans_ks), max_iter=cfg.kmeans_sweep_max_iter,
-        seed=cfg.seed,
+        sweep_df, KMEANS_KS, max_iter=KMEANS_SWEEP_MAX_ITER, seed=SEED
     )
-    km_model = fit_kmeans(geo, best_k, max_iter=cfg.kmeans_max_iter, seed=cfg.seed)
+    km_model = fit_kmeans(geo, best_k, max_iter=KMEANS_MAX_ITER, seed=SEED)
     clustered = km_model.transform(geo)
     sil = silhouette(clustered)
     # per-cluster stats carry the RAW lat/lng means — the model's
@@ -219,11 +196,11 @@ def run_complete_pipeline(
             {"k": k, "silhouette": round(s, 4), "wssse": round(w, 2)}
             for k, s, w in sweep
         ],
-        "sec": round(time.time() - t0, 2),
+        "sec": round(time.perf_counter() - t0, 2),
         "cluster_stats": stats_rows,
     }
 
-    summary["total_seconds"] = round(time.time() - t_start, 2)
+    summary["total_seconds"] = round(time.perf_counter() - t_start, 2)
     summary["rows_processed"] = n_clean
 
     # -- stage 5: sinks (S3/S5/S7 + FIXTURES §4 result documents) -------
@@ -244,10 +221,10 @@ def run_complete_pipeline(
             str(out / "clustered_data"),
         )
         model_results = result_documents(
-            spark, "random_forest", rf_metrics, parameters=str(cfg.rf_params)
+            spark, "random_forest", rf_metrics, parameters=str(RF_PARAMS)
         ).union(
             result_documents(
-                spark, "knn", knn_metrics, parameters=f"k={cfg.knn_k}"
+                spark, "knn", knn_metrics, parameters=f"k={KNN_K}"
             )
         )
         write_parquet(model_results, str(out / "model_results"))

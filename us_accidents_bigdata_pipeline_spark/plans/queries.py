@@ -40,6 +40,7 @@ from ..functions import (
     normalize_empty_string,
     word_tokens,
 )
+from ..sources.io import read_nanos_ts
 
 
 @dataclass(frozen=True)
@@ -61,25 +62,14 @@ def _register(name: str, oracle: str | None, doc: str = ""):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a testdata table.
-
-    ``events.parquet`` stores ``ts`` as parquet TIMESTAMP(NANOS), which
-    Spark's vectorized reader rejects; read it as long nanos
-    (``spark.sql.legacy.parquet.nanosAsLong``) and rebuild the
-    microsecond timestamp with integer division (double division would
-    lose precision at 1e18 magnitudes — 53-bit mantissa). DuckDB's
-    microsecond TIMESTAMP truncates the same way, so oracles agree.
-    """
+    """Load a testdata table. ``events.parquet`` stores ``ts`` as
+    parquet TIMESTAMP(NANOS), decoded by ``sources.io.read_nanos_ts``
+    (the driver owns its SparkSession, so the decode cannot rely on
+    session.py's defaults)."""
     if name == "events":
-        # Set defensively at read time: the driver owns its SparkSession,
-        # so session.py's defaults may not be present there. Timestamp
-        # extraction must agree with DuckDB's UTC-naive semantics.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
+        return read_nanos_ts(
+            spark, lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        )
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name in _SPLIT_TABLES:
         return _adaptive_input_split(spark, df)

@@ -63,6 +63,37 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(id(sc))
 
 
+# cgroup v2 and v1 memory limits; a container's MemTotal shows the
+# host's RAM, so half of it alone can exceed the container's limit
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _half_host_memory() -> str | None:
+    """Half the memory this process may use (``MemTotal``, capped by a
+    cgroup memory limit when one is set) as a JVM size (``"7835m"``), or
+    None when ``/proc/meminfo`` cannot be read (Spark's own default then
+    applies)."""
+    try:
+        with open("/proc/meminfo") as f:
+            total = next(
+                int(line.split()[1]) * 1024 for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return None
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():  # v2 writes "max" when unlimited
+            total = min(total, int(limit))
+    return f"{total // 2**21}m"
+
+
 def get_spark(
     app_name: str = "us_accidents_bigdata_pipeline_spark",
     master: str | None = None,
@@ -72,7 +103,9 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine's default tuning.
 
     Parameters are overrides; environment variable ``SPARK_GRAFT_CPUS``
-    sets local parallelism (driver contract), defaulting to all cores.
+    sets local parallelism (driver contract), defaulting to all cores,
+    and ``SPARK_GRAFT_DRIVER_MEM`` the driver memory, defaulting to half
+    the host's RAM or of the container's cgroup memory limit if lower.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -81,13 +114,12 @@ def get_spark(
         shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
     # In local mode the driver JVM is the only memory pool (executors are
     # threads inside it) — the 1g default OOMs tree training well below
-    # the data sizes this box handles. Overridable for smaller hosts.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g")
+    # the data sizes a host handles, so default to half the host's RAM.
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_host_memory()
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.driver.memory", driver_mem)
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(shuffle_partitions))
@@ -110,6 +142,8 @@ def get_spark(
         # (region/nation/supplier) broadcast automatically. Explicit
         # F.broadcast hints are used where the stats are not available.
     )
+    if driver_mem:
+        builder = builder.config("spark.driver.memory", driver_mem)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

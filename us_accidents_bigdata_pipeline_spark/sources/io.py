@@ -10,7 +10,10 @@ partition pruning (SURVEY §4 "partition pruning" improvement).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 TESTDATA_TABLES = (
@@ -34,6 +37,27 @@ def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = Non
     return df.select(*columns) if columns else df
 
 
+def read_nanos_ts(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """Run ``read`` (a batch or stream parquet read of the events table)
+    so that its TIMESTAMP(NANOS) ``ts`` arrives as a microsecond timestamp.
+
+    Spark's vectorized reader rejects TIMESTAMP(NANOS); under
+    ``spark.sql.legacy.parquet.nanosAsLong`` it surfaces the column as
+    long nanos, rebuilt here with integer division (double division
+    would lose precision at 1e18 magnitudes — 53-bit mantissa). DuckDB's
+    microsecond TIMESTAMP truncates the same way, so oracles agree.
+    Both confs are set at read time because a caller's session may lack
+    session.py's defaults; the session timezone is pinned UTC so
+    timestamp extraction matches DuckDB's UTC-naive semantics. Columns
+    of any other type pass through untouched."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read()
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
+
+
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -54,14 +78,11 @@ def read_csv(
 
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    compression: str = "snappy",
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """Parquet sink (S3), optionally hive-partitioned for pruning."""
-    writer = df.write.mode(mode).option("compression", compression)
+    """Snappy parquet sink (S3) that overwrites ``path``, optionally
+    hive-partitioned for pruning."""
+    writer = df.write.mode("overwrite").option("compression", "snappy")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -141,8 +162,6 @@ def kafka_payload(df: DataFrame, key_col: str) -> DataFrame:
     """The (key, value) frame the Kafka sink publishes: key = key_col,
     value = whole-row JSON (the producer's message shape,
     kafka_producer.py:49-65)."""
-    from pyspark.sql import functions as F
-
     return df.select(
         F.col(key_col).cast("string").alias("key"),
         F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"),

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.io import read_nanos_ts
+
 
 def parse_kafka_frame(raw: DataFrame, schema: T.StructType) -> DataFrame:
     """(key, value) Kafka wire frame → typed event frame: the consumer
@@ -85,9 +87,8 @@ def adaptive_ts_stream(
     spark: SparkSession,
     path: str,
     glob_filter: str = "events.parquet",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """File stream whose ``ts_col`` encoding is detected, not assumed.
+    """File stream whose ``ts`` encoding is detected, not assumed.
 
     Parquet fixtures have shipped ``ts`` three ways: TIMESTAMP(NANOS)
     (Spark's vectorized reader surfaces it as **long** under
@@ -96,23 +97,20 @@ def adaptive_ts_stream(
     source needs an explicit schema, so hardcoding any one encoding
     silently corrupts the others (a micros value divided by 1000 lands
     in 1970). Probe a cheap batch read (footer-only schema resolution)
-    and mirror exactly what the batch loader would produce: long nanos
-    → rebuild a microsecond timestamp with integer division; native
-    timestamp types pass through untouched. Session timezone is pinned
-    UTC so NTZ and UTC-adjusted values agree wall-clock."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read.option("pathGlobFilter", glob_filter).parquet(path)
-    stream = parquet_stream_reader(spark, path, probe.schema, glob_filter)
-    dtype = dict(probe.dtypes).get(ts_col)
-    if dtype == "bigint":
-        stream = stream.withColumn(
-            ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
-        )
-    elif dtype == "timestamp_ntz":
+    and decode exactly as the batch loader does
+    (``sources.io.read_nanos_ts``): long nanos → a microsecond timestamp;
+    native timestamp types pass through untouched. Session timezone is
+    pinned UTC so NTZ and UTC-adjusted values agree wall-clock."""
+
+    def open_stream() -> DataFrame:
+        probe = spark.read.option("pathGlobFilter", glob_filter).parquet(path)
+        return parquet_stream_reader(spark, path, probe.schema, glob_filter)
+
+    stream = read_nanos_ts(spark, open_stream)
+    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
         # withWatermark (EVENT_TIME) accepts only TIMESTAMP; the cast is
         # wall-clock-preserving because the session tz is pinned UTC.
-        stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return stream
 
 

@@ -54,7 +54,6 @@ def right_size_partitions(
     df: DataFrame,
     n_rows: int | None = None,
     rows_per_partition: int = 20_000,
-    min_parts: int = 2,
     max_parts: int | None = None,
     allow_grow: bool = False,
 ) -> DataFrame:
@@ -77,7 +76,7 @@ def right_size_partitions(
     n = n_rows if n_rows is not None else df.count()
     sc = df.sparkSession.sparkContext
     cap = max_parts or sc.defaultParallelism
-    target = max(min_parts, min(cap, (n + rows_per_partition - 1) // rows_per_partition))
+    target = max(2, min(cap, (n + rows_per_partition - 1) // rows_per_partition))
     current = df.rdd.getNumPartitions()
     if target < current:
         return df.coalesce(int(target))
