@@ -351,27 +351,10 @@ def test_embedding_near_dup_lsh_no_false_positives_high_recall(spark):
     assert len(lsh & exact) / len(exact) >= 0.9
 
 
-def test_embedding_near_dup_lsh_degenerate_guard_raises(spark):
+def test_embedding_near_dup_lsh_degenerate_guard_fallback_exact(spark):
     """At the registered low threshold / default bucket_length the
     bucket histogram is degenerate (measured per-row fanout ~250 of a
-    500-row corpus): with ``on_degenerate="raise"`` the guard must
-    veto the ~all-pairs candidate join BEFORE running it."""
-    import pytest as _pytest
-
-    from us_accidents_bigdata_pipeline_spark.operators.similarity import (
-        DegenerateLSHBucketsError,
-        embedding_near_dup_pairs,
-    )
-
-    e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    with _pytest.raises(DegenerateLSHBucketsError, match="fanout"):
-        embedding_near_dup_pairs(
-            e, method="lsh", on_degenerate="raise"
-        ).collect()
-
-
-def test_embedding_near_dup_lsh_degenerate_guard_fallback_exact(spark):
-    """Default ``on_degenerate="fallback"``: the degenerate regime is
+    500-row corpus): the degenerate regime is
     redirected to the exact BLAS tier with a RuntimeWarning, so the
     output is exactly the exact pair set (this is why the registered
     ``embedding_near_dup_pairs_lsh`` query stays oracled-green)."""
@@ -401,7 +384,7 @@ def test_embedding_near_dup_lsh_degenerate_guard_fallback_exact(spark):
 def test_embedding_near_dup_lsh_non_degenerate_runs_lsh_path(spark):
     """With a fine bucket_length the fanout probe passes (measured
     ~24 < 64 on this corpus) and the genuine approxSimilarityJoin +
-    exact-verify path runs: no warning, no exception, and — because
+    exact-verify path runs: no warning, and — because
     the verify stage is exact — still zero false positives (recall is
     NOT asserted here; pruning may drop pairs in this regime)."""
     import warnings as _warnings
@@ -420,7 +403,7 @@ def test_embedding_near_dup_lsh_non_degenerate_runs_lsh_path(spark):
         lsh = {
             (r.doc_a, r.doc_b)
             for r in embedding_near_dup_pairs(
-                e, method="lsh", bucket_length=0.02, on_degenerate="raise"
+                e, method="lsh", bucket_length=0.02
             ).collect()
         }
     assert not any(
@@ -733,27 +716,8 @@ def test_pq_encode_arrow_matches_expr_twin(spark):
     assert arrow == expr
 
 
-def test_pq_train_mllib_mode_produces_usable_codebooks(spark):
-    """The distributed fit path (for samples beyond driver memory)
-    must stay alive: concurrent MLlib KMeans fits over the persisted
-    sample produce codebooks of the right shape that encode to valid
-    codes."""
-    from us_accidents_bigdata_pipeline_spark.operators.similarity import (
-        pq_encode,
-        pq_train,
-    )
-    from .conftest import SF_SMOKE
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    books = pq_train(emb, m=4, k_codes=8, fit_mode="mllib")
-    assert len(books) == 4 and all(len(b) == 8 for b in books)
-    rows = pq_encode(emb, books).collect()
-    assert all(len(r["codes"]) == 4 for r in rows)
-    assert all(0 <= c < 8 for r in rows for c in r["codes"])
-
-
 def test_pq_train_local_is_deterministic_across_layouts(spark):
-    """fit_mode='local' sorts the collected sample lexicographically
+    """pq_train sorts the collected sample lexicographically
     before the seeded k-means++ fit, so the codebooks are identical
     regardless of input partitioning."""
     from us_accidents_bigdata_pipeline_spark.operators.similarity import (

@@ -335,7 +335,9 @@ def test_read_parquet_evolving_merges_schemas(spark, tmp_path):
 
 
 def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from us_accidents_bigdata_pipeline_spark.sources.io import compact_parquet
+    import glob
+
+    from us_accidents_bigdata_pipeline_spark.operators.layout import compact_parquet
 
     src = str(tmp_path / "fragmented")
     dst = str(tmp_path / "compacted")
@@ -343,9 +345,9 @@ def test_compact_parquet_reduces_file_count(spark, tmp_path):
     # simulate a streaming sink's fragmentation: 64 tiny files
     e.repartition(64).write.parquet(src)
 
-    stats = compact_parquet(spark, src, dst, target_file_mb=256)
-    assert stats["in_files"] == 64
-    assert stats["out_files"] == 1  # well under 256MB at sf0.01
+    n_out = compact_parquet(spark, src, dst, target_rows_per_file=e.count())
+    assert len(glob.glob(f"{src}/*.parquet")) == 64
+    assert n_out == 1  # the whole table fits one file's row target
     back = spark.read.parquet(dst)
     assert back.count() == e.count()
     assert (
@@ -355,8 +357,8 @@ def test_compact_parquet_reduces_file_count(spark, tmp_path):
 
 
 def test_write_audit_publish_gates_bad_data(spark, tmp_path):
-    from us_accidents_bigdata_pipeline_spark.sources.io import (
-        read_published,
+    from us_accidents_bigdata_pipeline_spark.sources.table import (
+        read_current,
         write_audit_publish,
     )
 
@@ -369,20 +371,58 @@ def test_write_audit_publish_gates_bad_data(spark, tmp_path):
     ]
     r1 = write_audit_publish(good, d, checks)
     assert r1["published"] and all(r1["audit"].values())
-    assert read_published(spark, d).count() == 100
+    assert read_current(spark, d).count() == 100
 
     # a bad batch fails its audit; the LIVE pointer must not move
     bad = spark.range(10).selectExpr("id", "id * 2 + 1 AS v")
     r2 = write_audit_publish(bad, d, checks)
     assert not r2["published"]
     assert r2["audit"]["v_even"] is False
-    live = read_published(spark, d)
+    live = read_current(spark, d)
     assert live.count() == 100  # still version 1
 
     # next good batch publishes at a later version
     r3 = write_audit_publish(good.limit(7), d, checks)
     assert r3["published"] and r3["version"] > r2["version"]
-    assert read_published(spark, d).count() == 7
+    assert read_current(spark, d).count() == 7
+
+
+def test_write_audit_publish_versions_join_the_snapshot_log(spark, tmp_path):
+    """Write-Audit-Publish commits through the versioned-table protocol:
+    its versions are listed, time-travelled and vacuumed like any other,
+    and a rejected audit adds no version."""
+    from us_accidents_bigdata_pipeline_spark.sources.table import (
+        list_versions,
+        read_current,
+        read_version,
+        vacuum_versions,
+        write_audit_publish,
+    )
+
+    d = str(tmp_path / "wap_log")
+    checks = [("v_even", lambda df: df.filter("v % 2 != 0").count() == 0)]
+
+    def rows(n, odd=False):
+        return spark.range(n).selectExpr("id", f"id * 2 + {int(odd)} AS v")
+
+    assert write_audit_publish(rows(10), d, checks)["published"]
+    assert write_audit_publish(rows(4), d, checks)["published"]
+    assert list_versions(d) == [1, 2]
+    assert read_version(spark, d, 1).count() == 10
+    assert read_current(spark, d).count() == 4
+
+    rejected = write_audit_publish(rows(3, odd=True), d, checks)
+    assert not rejected["published"]
+    assert list_versions(d) == [1, 2]
+    with pytest.raises(FileNotFoundError):
+        read_version(spark, d, rejected["version"])
+    assert read_current(spark, d).count() == 4
+
+    r = write_audit_publish(rows(6), d, checks)
+    assert r["published"] and r["version"] > rejected["version"]
+    assert vacuum_versions(d, keep=2) == [1]
+    assert list_versions(d) == [2, r["version"]]
+    assert read_current(spark, d).count() == 6
 
 
 def test_observe_metrics_piggyback_on_query(spark):
@@ -491,9 +531,10 @@ def test_schema_diff_contract_check(spark):
 
 
 def test_delete_rows_tombstone_publish(spark, tmp_path):
-    from us_accidents_bigdata_pipeline_spark.sources.io import (
+    from us_accidents_bigdata_pipeline_spark.sources.table import (
         delete_rows,
-        read_published,
+        list_versions,
+        read_current,
         write_audit_publish,
     )
 
@@ -506,12 +547,11 @@ def test_delete_rows_tombstone_publish(spark, tmp_path):
     tomb = spark.createDataFrame([(3,), (50, ), (99,)], "id long")
     r = delete_rows(spark, d, tomb, "id")
     assert r["published"] and r["audit"]["tombstones_absent"]
-    live = read_published(spark, d)
+    live = read_current(spark, d)
     assert live.count() == 97
     assert live.filter("id IN (3, 50, 99)").count() == 0
     # prior version still on disk for the retention window
-    import os
-    assert any(x.startswith("v-1") for x in os.listdir(d))
+    assert 1 in list_versions(d)
 
 
 def test_dynamic_partition_overwrite(spark, tmp_path):

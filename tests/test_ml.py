@@ -37,7 +37,7 @@ from us_accidents_bigdata_pipeline_spark.ml.rf import (
 )
 from us_accidents_bigdata_pipeline_spark.operators.clean import clean
 from us_accidents_bigdata_pipeline_spark.operators.sample import deterministic_split
-from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw
+from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw_distributed
 
 from .conftest import SF_ORACLE
 
@@ -53,7 +53,7 @@ FEATURES = [
 
 @pytest.fixture(scope="module")
 def accidents_cleaned(spark):
-    raw = generate_accidents_raw(spark, n_rows=4000, seed=42)
+    raw = generate_accidents_raw_distributed(spark, n_rows=4000, seed=42)
     return clean(raw).cache()
 
 
@@ -198,7 +198,7 @@ def test_knn_learns_separable_blobs(spark):
 
 
 def test_knn_driver_local_mode(spark):
-    """J3 (driver-local kNN, sklearn-or-numpy): learns the same
+    """J3 (driver-local kNN, numpy vote): learns the same
     separable blobs and honors the safe_collect guard."""
     import numpy as np
 

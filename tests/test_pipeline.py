@@ -7,11 +7,11 @@ from __future__ import annotations
 import json
 
 from us_accidents_bigdata_pipeline_spark.pipeline import run_complete_pipeline
-from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw
+from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw_distributed
 
 
 def test_complete_pipeline_golden(spark, tmp_path):
-    raw = generate_accidents_raw(spark, n_rows=3000, seed=42)
+    raw = generate_accidents_raw_distributed(spark, n_rows=3000, seed=42)
     summary = run_complete_pipeline(spark, raw, output_dir=str(tmp_path / "out"))
 
     st = summary["stages"]

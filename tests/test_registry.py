@@ -1,7 +1,9 @@
-"""Registry export order, import hygiene and the adaptive input split."""
+"""Registry export order, import and environment hygiene, and the
+adaptive input split."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -17,7 +19,7 @@ from us_accidents_bigdata_pipeline_spark.plans.queries import (
     queries,
 )
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from .test_dead_code import PACKAGE, REPO, _py_files
 
 
 def test_queries_follow_registration_order():
@@ -56,6 +58,58 @@ def test_import_opens_no_file_in_repo_root():
     ).stdout
     in_root = [p for p in out.splitlines() if os.path.dirname(p) == REPO]
     assert in_root == []
+
+
+_ENV_MUTATORS = {"setdefault", "update", "pop", "popitem", "clear"}
+
+
+def _is_environ(node: ast.AST) -> bool:
+    if isinstance(node, ast.Attribute):
+        return (
+            node.attr == "environ"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+    return isinstance(node, ast.Name) and node.id == "environ"
+
+
+def _env_writes(tree: ast.AST) -> list[int]:
+    """Line numbers that write the process environment: assigning or
+    deleting ``os.environ`` or one of its keys, calling a mutating
+    ``os.environ`` method, or calling ``os.putenv``/``os.unsetenv``."""
+    lines = []
+    for node in ast.walk(tree):
+        targets = []
+        if isinstance(node, (ast.Assign, ast.Delete)):
+            targets = node.targets
+        elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+            targets = [node.target]
+        for t in targets:
+            if _is_environ(t) or (isinstance(t, ast.Subscript) and _is_environ(t.value)):
+                lines.append(node.lineno)
+        if isinstance(node, ast.Call):
+            f = node.func
+            if isinstance(f, ast.Attribute):
+                if (_is_environ(f.value) and f.attr in _ENV_MUTATORS) or f.attr in (
+                    "putenv",
+                    "unsetenv",
+                ):
+                    lines.append(node.lineno)
+            elif isinstance(f, ast.Name) and f.id in ("putenv", "unsetenv"):
+                lines.append(node.lineno)
+    return lines
+
+
+def test_package_never_writes_the_process_environment():
+    """Package code configures Spark through its session, never by
+    editing environment variables: an environment write leaks into every
+    later import and subprocess of the caller's process."""
+    found = []
+    for path in _py_files(os.path.join(REPO, PACKAGE)):
+        with open(path) as f:
+            lines = _env_writes(ast.parse(f.read()))
+        found += [f"{os.path.relpath(path, REPO)}:{n}" for n in lines]
+    assert found == []
 
 
 class _FilesRaise:

@@ -195,7 +195,7 @@ def test_ahash_signature_matches_digest_reference(spark):
     df = spark.createDataFrame(
         [(1, b"hello"), (2, b"world")], "media_id long, payload binary"
     )
-    feats = decode_image_features(df, dim=60, fake=True)
+    feats = decode_image_features(df, dim=60)
     got = {r["media_id"]: r["signature"] for r in ahash_signature(feats).collect()}
     assert got[1] == _ref_ahash_sig(b"hello")
     assert got[2] == _ref_ahash_sig(b"world")
@@ -216,7 +216,7 @@ def test_perceptual_near_dup_pairs_identical_payloads(spark):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
         for r in perceptual_near_dup_pairs(
-            df, id_col="media_id", fake=True
+            df, id_col="media_id"
         ).collect()
     }
     assert pairs[(1, 2)] == 0
@@ -239,7 +239,7 @@ def test_perceptual_pairs_plan_is_banded(spark):
         [(i, bytes([i])) for i in range(1, 6)],
         "media_id long, payload binary",
     )
-    assert audit_plan(perceptual_near_dup_pairs(df, fake=True)) == []
+    assert audit_plan(perceptual_near_dup_pairs(df)) == []
 
 
 def test_range_checkpoint_bucket_integral_division(spark):

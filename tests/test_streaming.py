@@ -614,48 +614,6 @@ def test_available_now_trigger_backfill(spark):
     assert got == expected
 
 
-def test_transform_with_state_totals_matches_batch():
-    """transformWithStateInPandas (state-v2 API) running totals must
-    equal the batch groupBy — same oracle as the
-    applyInPandasWithState twin (API-parity pin). Runs in a fresh
-    subprocess because the TWS protobuf runtime must be on PYTHONPATH
-    before the JVM starts; skips cleanly where no protobuf runtime
-    exists (exit 3 contract of scripts/tws_demo.py)."""
-    import json
-    import os
-    import subprocess
-    import sys
-
-    import duckdb
-    import pytest
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "scripts", "tws_demo.py"),
-         SF_ORACLE],
-        capture_output=True,
-        text=True,
-        timeout=480,
-    )
-    if proc.returncode == 3:
-        pytest.skip("no google.protobuf runtime on this host")
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["ok"], out
-
-    con = duckdb.connect()
-    expected = {
-        int(k): [int(n), float(t)]
-        for k, n, t in con.execute(
-            f"""SELECT user_id, count(*),
-                       round(sum(value), 2)
-                FROM '{SF_ORACLE}/events.parquet' GROUP BY 1"""
-        ).fetchall()
-    }
-    got = {int(k): v for k, v in out["totals"].items()}
-    assert got == expected
-
-
 def test_foreach_batch_cdc_tombstones_and_replay(spark, tmp_path):
     """CDC sink: a change stream with updates, inserts AND delete
     tombstones folds into the correct table; replaying the last batch

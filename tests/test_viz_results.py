@@ -21,14 +21,14 @@ from us_accidents_bigdata_pipeline_spark.operators.viz import (
     state_top_n,
     weather_breakdown,
 )
-from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw
+from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw_distributed
 
 import pytest
 
 
 @pytest.fixture(scope="module")
 def cleaned(spark):
-    raw = generate_accidents_raw(spark, n_rows=2000, seed=42)
+    raw = generate_accidents_raw_distributed(spark, n_rows=2000, seed=42)
     return clean(raw).cache()
 
 

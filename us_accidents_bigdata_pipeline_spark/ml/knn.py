@@ -250,10 +250,10 @@ def knn_driver_local(
 
     Both sides cross the driver boundary through ``safe_collect`` (the
     reference pulls the whole 7.7M-row frame to the driver unguarded —
-    the exact failure mode S13's guard policy exists for). Uses sklearn
-    when importable; otherwise a numpy implementation of the same
-    semantics (Euclidean distance-weighted vote, ties → smallest
-    label). Returns (id, prediction)."""
+    the exact failure mode S13's guard policy exists for). The vote is
+    a numpy implementation of the reference's sklearn semantics
+    (Euclidean inverse-distance-weighted vote, an exact-match neighbor
+    dominates, ties → smallest label). Returns (id, prediction)."""
     import numpy as np
 
     from ..tuning import safe_collect
@@ -273,27 +273,18 @@ def knn_driver_local(
     y = np.asarray([r[label_col] for r in trows])
     Q = np.asarray([r["_v"] for r in qrows], dtype=np.float64)
     ids = [r["_id"] for r in qrows]
-    try:
-        from sklearn.neighbors import KNeighborsClassifier
-
-        clf = KNeighborsClassifier(n_neighbors=k, weights="distance", n_jobs=-1)
-        clf.fit(X, y)
-        preds = clf.predict(Q)
-    except ImportError:
-        # numpy fallback, sklearn's exact semantics: inverse-distance
-        # weighted vote; an exact-match neighbor (d=0) dominates
-        preds = np.empty(len(Q), dtype=y.dtype)
-        classes = np.unique(y)
-        for i, q in enumerate(Q):
-            d = np.sqrt(((X - q) ** 2).sum(axis=1))
-            nn = np.argsort(d, kind="stable")[:k]
-            dn = d[nn]
-            if (dn == 0).any():
-                wts = (dn == 0).astype(np.float64)
-            else:
-                wts = 1.0 / dn
-            scores = {c: wts[y[nn] == c].sum() for c in classes}
-            preds[i] = max(sorted(scores), key=lambda c: scores[c])
+    preds = np.empty(len(Q), dtype=y.dtype)
+    classes = np.unique(y)
+    for i, q in enumerate(Q):
+        d = np.sqrt(((X - q) ** 2).sum(axis=1))
+        nn = np.argsort(d, kind="stable")[:k]
+        dn = d[nn]
+        if (dn == 0).any():
+            wts = (dn == 0).astype(np.float64)
+        else:
+            wts = 1.0 / dn
+        scores = {c: wts[y[nn] == c].sum() for c in classes}
+        preds[i] = max(sorted(scores), key=lambda c: scores[c])
     spark = test.sparkSession
     return spark.createDataFrame(
         [(int(i), int(p)) for i, p in zip(ids, preds)],

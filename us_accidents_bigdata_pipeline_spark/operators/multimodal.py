@@ -7,12 +7,11 @@ processes whole record batches (the only sane shape for media blobs at
 scale — one task per partition, bounded batch memory via
 ``maxRecordsPerBatch``).
 
-The actual codecs (PIL/librosa/ffmpeg) are NOT in this container, so
-``decode_image_features`` dispatches: real decoding raises
-``NotImplementedError`` unless a codec import succeeds, while
-``fake=True`` computes a deterministic digest-based feature vector —
+No real codec (PIL/librosa/ffmpeg) is integrated, so
+``decode_image_features`` and ``resize_images`` compute deterministic
+sha256-digest stand-ins for decoded features and resized payloads —
 keeping the Spark-side plumbing (schema, partitioning, UDF signature,
-batch shape) real and testable.
+batch shape) real and testable, and the outputs exactly oracle-able.
 """
 
 from __future__ import annotations
@@ -45,27 +44,14 @@ def decode_image_features(
     payload_col: str = "payload",
     id_col: str = "media_id",
     dim: int = 16,
-    fake: bool = False,
 ) -> DataFrame:
     """binary payload → feature vector via mapInPandas.
 
     Output schema: (media_id long, n_bytes int, features array<double>).
-    ``fake=False`` (the real-codec path) is not implemented and raises
-    NotImplementedError eagerly; ``fake=True`` runs the full
-    distributed plumbing with deterministic digest features.
+    The features are the payload's sha256 digest bytes tiled to ``dim``
+    lanes and scaled to [0, 1) — a deterministic stand-in for a decoded
+    image that runs the full distributed plumbing.
     """
-
-    if not fake:
-        # the real decoder is not implemented yet — raise eagerly (at
-        # plan construction, not first executor batch) and regardless of
-        # whether PIL happens to be importable, so digest features can
-        # never masquerade as decoded image features
-        raise NotImplementedError(
-            "real image decoding is not implemented (requires a codec "
-            "integration, e.g. PIL); use fake=True for the deterministic "
-            "plumbing path"
-        )
-
     out_schema = f"{id_col} long, n_bytes int, features array<double>"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -89,25 +75,16 @@ def resize_images(
     height: int,
     payload_col: str = "payload",
     id_col: str = "media_id",
-    fake: bool = False,
 ) -> DataFrame:
     """binary payload → resized binary payload via mapInPandas.
 
     Output schema: (media_id long, width int, height int, n_bytes_in
     int, payload binary) — the blob-in/blob-out shape a real resizer
     has (decode → interpolate → re-encode), so downstream stages see
-    the same contract either way. ``fake=False`` raises eagerly (no
-    codec in this container); ``fake=True`` emits a deterministic
-    digest-seeded payload of ``width*height*3`` bytes, preserving the
-    size arithmetic and Arrow batch shape.
+    the same contract a real codec would. The output payload is a
+    deterministic digest-seeded ``width*height*3`` bytes, preserving
+    the size arithmetic and Arrow batch shape.
     """
-    if not fake:
-        raise NotImplementedError(
-            "real image resizing is not implemented (requires a codec "
-            "integration, e.g. PIL); use fake=True for the deterministic "
-            "plumbing path"
-        )
-
     out_schema = (
         f"{id_col} long, width int, height int, n_bytes_in int, payload binary"
     )
@@ -560,7 +537,6 @@ def perceptual_near_dup_pairs(
     id_col: str = "media_id",
     dim: int = 60,
     max_hamming: int = 5,
-    fake: bool = False,
 ) -> DataFrame:
     """Perceptual IMAGE near-dup pairs: decode each payload to a
     ``dim``-lane feature vector, take the aHash signature, and emit
@@ -577,10 +553,9 @@ def perceptual_near_dup_pairs(
     bit_count(xor) verify is a 2-instruction projection. Same
     100 TB scale shape as the text SimHash tier.
 
-    ``fake=True`` runs the deterministic digest-feature path (the
-    sandbox configuration — exactly oracle-able end to end since the
-    lanes are sha256 byte math); ``fake=False`` requires a real codec
-    and raises until one is integrated.
+    The features come from ``decode_image_features``' digest path, so
+    the output is exactly oracle-able end to end (the lanes are sha256
+    byte math).
 
     Output: (doc_a, doc_b, hamming) — the ``_blocked_hamming_pairs``
     contract (generic pair-column names regardless of ``id_col``).
@@ -593,7 +568,7 @@ def perceptual_near_dup_pairs(
     from .dedup import _blocked_hamming_pairs
 
     feats = decode_image_features(
-        df, payload_col=payload_col, id_col=id_col, dim=dim, fake=fake
+        df, payload_col=payload_col, id_col=id_col, dim=dim
     )
     sigs = ahash_signature(feats, id_col=id_col).select(
         F.col(id_col), F.col("signature").alias("simhash")

@@ -531,9 +531,9 @@ def _nearest_cells_expr(centers, vec_col: str, m: int):
 
 
 class _LocalCentroids:
-    """Driver-side centroid holder exposing the one method the IVF
-    callers use (``clusterCenters``), so the local numpy fit and the
-    MLlib KMeansModel are interchangeable as ``index`` members."""
+    """Driver-side centroid holder for the local numpy fit, exposing the
+    one method the IVF callers use (``clusterCenters``, the MLlib
+    KMeansModel name)."""
 
     def __init__(self, centers):
         self._centers = centers
@@ -550,7 +550,6 @@ def ivf_fit_assign(
     fit_sample_rows: int = 100_000,
     seed: int = 42,
     m_assign: int = 1,
-    fit_mode: str = "local",
 ):
     """IVF coarse quantization, returning (assignments, model).
 
@@ -561,8 +560,8 @@ def ivf_fit_assign(
     assignment pass is a single map-only projection (centroids ride
     the plan as literals — see ``_nearest_cells_expr``).
 
-    ``fit_mode="local"`` (default, the ``pq_train`` discipline): the
-    count-capped sample — driver-sized by construction — is collected
+    The fit follows the ``pq_train`` discipline: the count-capped
+    sample — driver-sized by construction — is collected
     once, sorted lexicographically, and the coarse quantizer is fit
     with seeded numpy k-means++ + Lloyd, then the centroids are
     themselves lex-sorted. Whenever the sample IS the whole corpus
@@ -573,8 +572,7 @@ def ivf_fit_assign(
     lex-sort normalizes order, not membership), so the fit is
     deterministic per layout but can drift across layouts — still
     strictly better than MLlib's k-means|| init, which drifts even at
-    fixed membership. ``fit_mode="mllib"`` keeps the distributed fit
-    for samples beyond driver memory.
+    fixed membership.
 
     ``m_assign`` is cell REPLICATION: each vector is stored in its m
     nearest cells (m rows per vector), trading m× index size for
@@ -582,38 +580,24 @@ def ivf_fit_assign(
     boundary (measured on the sf0.01 corpus: nprobe=2 recall@5 goes
     0.78 → 0.95 at n_cells=4 with m=2).
     """
+    import numpy as np
+
     from .sample import count_targeted_sample
 
-    if fit_mode == "local":
-        import numpy as np
-
-        # lean job chain (round 13, the pq_train treatment): the
-        # sample is bounded at fit_sample_rows BY CONSTRUCTION
-        # (limit), so safe_to_pandas' guard count was a redundant
-        # third driver job — sizing count + one Arrow collect suffice.
-        # Same sample rows, same seed, same sort → fit bit-identical.
-        slim = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
-        sample = count_targeted_sample(
-            slim, fit_sample_rows, total=slim.count(), seed=seed
-        )
-        pdf = arrow_to_pandas(sample)
-        X = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-        X = X[np.lexsort(X.T[::-1])]
-        centers = _kmeanspp_lloyd(X, n_cells, seed)
-        centers = centers[np.lexsort(centers.T[::-1])]
-        model = _LocalCentroids([np.asarray(c) for c in centers])
-    elif fit_mode == "mllib":
-        from pyspark.ml.clustering import KMeans
-
-        feat = _to_ml_vector(df, vec_col, "_features")
-        fit_df = count_targeted_sample(feat, fit_sample_rows, seed=seed)
-        km = KMeans(
-            k=n_cells, seed=seed, featuresCol="_features",
-            predictionCol="cell",
-        )
-        model = km.fit(fit_df)
-    else:
-        raise ValueError(f"ivf_fit_assign: unknown fit_mode {fit_mode!r}")
+    # lean job chain (round 13, the pq_train treatment): the sample is
+    # bounded at fit_sample_rows BY CONSTRUCTION (limit), so a guard
+    # count would be a redundant third driver job — sizing count + one
+    # Arrow collect suffice.
+    slim = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
+    sample = count_targeted_sample(
+        slim, fit_sample_rows, total=slim.count(), seed=seed
+    )
+    pdf = arrow_to_pandas(sample)
+    X = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
+    X = X[np.lexsort(X.T[::-1])]
+    centers = _kmeanspp_lloyd(X, n_cells, seed)
+    centers = centers[np.lexsort(centers.T[::-1])]
+    model = _LocalCentroids([np.asarray(c) for c in centers])
     cells = _nearest_cells_expr(model.clusterCenters(), vec_col, m_assign)
     assigned = df.select(
         F.col(id_col), F.explode(cells).alias("_dc")
@@ -1053,7 +1037,6 @@ def pq_train(
     vec_col: str = "embedding",
     fit_sample_rows: int = 100_000,
     seed: int = 42,
-    fit_mode: str = "local",
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks: split the vector into ``m``
     contiguous subspaces and fit a ``k_codes``-centroid KMeans per
@@ -1065,17 +1048,13 @@ def pq_train(
     centroid) — m·k_codes·(dim/m) = k_codes·dim doubles total, a
     driver-sized object that rides query plans as literals.
 
-    ``fit_mode="local"`` (default): the count-capped sample — already
-    a driver-sized object by construction — is collected once, sorted
-    lexicographically (layout-independent determinism), and the m
+    The count-capped sample — already a driver-sized object by
+    construction — is collected once, sorted lexicographically
+    (layout-independent determinism), and the m
     codebooks are fit with seeded numpy k-means++ + Lloyd. This is the
     FAISS idiom: PQ training data is always a bounded sample; running
     an iterative distributed fit over it buys nothing but per-job
     scheduler latency (measured 8× wall at sf0.1).
-    ``fit_mode="mllib"``: the m per-subspace MLlib KMeans fits run
-    CONCURRENTLY from a thread pool over the persisted sample (Spark
-    schedules jobs from multiple driver threads) — the path for
-    callers who raise ``fit_sample_rows`` beyond driver memory.
 
     PQ is THE memory-bounded ANN shape: each vector compresses to m
     small codes (m bytes at k_codes ≤ 256), so a 100 TB float corpus
@@ -1088,84 +1067,37 @@ def pq_train(
 
     slim = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
 
-    if fit_mode == "local":
-        # Lean job chain (round 13): the old path ran FOUR sequential
-        # driver jobs — count_targeted_sample's count, a head() for the
-        # dim, safe_to_pandas' guard count, the collect. The sample is
-        # bounded at fit_sample_rows BY CONSTRUCTION (limit), so the
-        # guard count is redundant, and the dim reads off the collected
-        # frame. Two jobs: the sizing count + one Arrow collect. Same
-        # sample rows, same seed, same sort → codebooks bit-identical.
-        n = slim.count()
-        sample = count_targeted_sample(
-            slim, fit_sample_rows, total=n, seed=seed
-        )
-        pdf = arrow_to_pandas(sample)
-        if len(pdf) == 0:
-            raise ValueError("pq_train: empty input")
-        dim = len(pdf["_v"].iloc[0])
-        if dim % m != 0:
-            raise ValueError(
-                f"pq_train: dim {dim} not divisible by m={m}"
-            )
-        sub = dim // m
-        X = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-        # collect order depends on partition layout — sort rows so the
-        # codebooks are byte-identical on any cluster/partitioning
-        X = X[np.lexsort(X.T[::-1])]
-        books = []
-        for j in range(m):
-            centers = _kmeanspp_lloyd(
-                X[:, j * sub : (j + 1) * sub], k_codes, seed + j
-            )
-            centers = centers[np.lexsort(centers.T[::-1])]
-            books.append([[float(x) for x in c] for c in centers])
-        return books
-
-    if fit_mode != "mllib":
-        raise ValueError(f"pq_train: unknown fit_mode {fit_mode!r}")
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sample = count_targeted_sample(slim, fit_sample_rows, seed=seed).persist()
-    n_total = sample.select(F.size("_v").alias("d")).head()
-    if n_total is None:
+    # Lean job chain (round 13): the old path ran FOUR sequential
+    # driver jobs — count_targeted_sample's count, a head() for the
+    # dim, safe_to_pandas' guard count, the collect. The sample is
+    # bounded at fit_sample_rows BY CONSTRUCTION (limit), so the
+    # guard count is redundant, and the dim reads off the collected
+    # frame. Two jobs: the sizing count + one Arrow collect. Same
+    # sample rows, same seed, same sort → codebooks bit-identical.
+    n = slim.count()
+    sample = count_targeted_sample(
+        slim, fit_sample_rows, total=n, seed=seed
+    )
+    pdf = arrow_to_pandas(sample)
+    if len(pdf) == 0:
         raise ValueError("pq_train: empty input")
-    dim = n_total["d"]
+    dim = len(pdf["_v"].iloc[0])
     if dim % m != 0:
-        raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")
+        raise ValueError(
+            f"pq_train: dim {dim} not divisible by m={m}"
+        )
     sub = dim // m
-    # fully materialize the cache once, so the concurrent fits below
-    # all read the same cached sample instead of racing to compute it
-    sample.count()
-
-    def _fit_subspace(j: int) -> list[list[float]]:
-        feats = sample.select(
-            array_to_vector(
-                F.slice(F.col("_v"), j * sub + 1, sub)
-            ).alias("_features")
+    X = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
+    # collect order depends on partition layout — sort rows so the
+    # codebooks are byte-identical on any cluster/partitioning
+    X = X[np.lexsort(X.T[::-1])]
+    books = []
+    for j in range(m):
+        centers = _kmeanspp_lloyd(
+            X[:, j * sub : (j + 1) * sub], k_codes, seed + j
         )
-        # quantizer fits converge in a few iterations and exactness
-        # comes from the downstream re-rank, so cap the iteration
-        # budget (k-means|| init stays: random init measurably hurt
-        # codebook quality enough to cost recall at sf0.1)
-        km = KMeans(
-            k=k_codes, seed=seed + j, featuresCol="_features",
-            predictionCol="_c", maxIter=10,
-        )
-        model = km.fit(feats)
-        return [[float(x) for x in c] for c in model.clusterCenters()]
-
-    # the m per-subspace fits are independent jobs over the SAME
-    # cached sample — submit them concurrently (Spark's scheduler
-    # interleaves jobs from multiple driver threads; each fit's jobs
-    # are small, so this turns m sequential fit latencies into ~1)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=m) as pool:
-        books = list(pool.map(_fit_subspace, range(m)))
-    sample.unpersist()
+        centers = centers[np.lexsort(centers.T[::-1])]
+        books.append([[float(x) for x in c] for c in centers])
     return books
 
 
@@ -1479,13 +1411,6 @@ def quantize_embeddings(
     )
 
 
-class DegenerateLSHBucketsError(RuntimeError):
-    """Raised when the LSH bucket histogram shows the candidate join
-    would degenerate to ~all-pairs (per-row bucket fanout above the
-    cap), so running ``approxSimilarityJoin`` would cost O(n²) with
-    none of the pruning that justifies LSH over the exact tier."""
-
-
 def _lsh_bucket_fanout(model, feat: DataFrame, hash_col: str = "_hashes") -> float:
     """Expected per-row, per-table candidate fanout of an LSH model:
     Σ c² / Σ c over the (table, bucket) size histogram — the average
@@ -1522,7 +1447,6 @@ def embedding_near_dup_pairs(
     bucket_length: float = 2.0,
     num_hash_tables: int = 8,
     max_bucket_fanout: float = 64.0,
-    on_degenerate: str = "fallback",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (doc_a, doc_b, cosine)
     with cosine ≥ threshold and doc_a < doc_b — the embedding-space
@@ -1555,12 +1479,11 @@ def embedding_near_dup_pairs(
     candidate join, a linear-cost probe (:func:`_lsh_bucket_fanout`)
     measures the per-row bucket fanout from the (table, bucket) size
     histogram. If it exceeds ``max_bucket_fanout`` the candidate join
-    would be ~all-pairs, so the call either falls back to the exact
-    BLAS tier (``on_degenerate="fallback"``, default — semantics are
-    identical, the output is the exact pair set) or raises
-    :class:`DegenerateLSHBucketsError` (``on_degenerate="raise"``)
-    with the measured fanout so the caller can re-tune
-    ``bucket_length`` / ``num_hash_tables``.
+    would be ~all-pairs, so the call warns loudly (``RuntimeWarning``
+    with the measured fanout, so the caller can re-tune
+    ``bucket_length`` / ``num_hash_tables``) and falls back to the
+    exact BLAS tier — semantics are identical, the output is the exact
+    pair set.
     """
     if method == "blas":
         return _embedding_pairs_blas(df, threshold, id_col, vec_col)
@@ -1595,15 +1518,6 @@ def embedding_near_dup_pairs(
         model = lsh.fit(feat)
         fanout = _lsh_bucket_fanout(model, feat)
         if fanout > max_bucket_fanout:
-            if on_degenerate == "raise":
-                raise DegenerateLSHBucketsError(
-                    f"LSH buckets are degenerate: per-row bucket fanout "
-                    f"{fanout:.1f} > cap {max_bucket_fanout:.1f} "
-                    f"(bucket_length={bucket_length}, "
-                    f"num_hash_tables={num_hash_tables}) — the candidate "
-                    f"join would be ~all-pairs; re-tune bucket_length or "
-                    f"use method='blas'/'exact'"
-                )
             import warnings
 
             warnings.warn(

@@ -2078,7 +2078,7 @@ def q_lsh_ann_verified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        ORDER BY cosine DESC, e.vec_id LIMIT 5""",
     doc="product-quantization ANN with exact re-rank: per-subspace "
     "k-means++ codebooks fit on the count-capped driver-sized sample "
-    "(FAISS idiom; concurrent-MLlib fit_mode kept for larger samples), "
+    "(FAISS idiom), "
     "map-only Arrow-batched BLAS encode to m-code words (einsum argmin "
     "per batch; JVM struct-min expression twin pinned code-identical "
     "in tests), asymmetric-distance "
@@ -2802,7 +2802,7 @@ def q_multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
-    feats = decode_image_features(d, id_col="doc_id", dim=16, fake=True)
+    feats = decode_image_features(d, id_col="doc_id", dim=16)
     return feats.select(
         "doc_id",
         "n_bytes",
@@ -2826,7 +2826,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
-    resized = resize_images(d, width=8, height=8, id_col="doc_id", fake=True)
+    resized = resize_images(d, width=8, height=8, id_col="doc_id")
     return resized.select(
         "doc_id",
         "width",
@@ -5309,7 +5309,7 @@ def q_multimodal_patch_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("media_id"),
         F.encode("text", "UTF-8").alias("payload"),
     )
-    resized = resize_images(docs, width=32, height=32, fake=True)
+    resized = resize_images(docs, width=32, height=32)
     return extract_patches(resized, width=32, height=32, patch=16)
 
 
@@ -16956,7 +16956,7 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
     return perceptual_near_dup_pairs(
-        d, id_col="doc_id", dim=60, max_hamming=5, fake=True
+        d, id_col="doc_id", dim=60, max_hamming=5
     )
 
 

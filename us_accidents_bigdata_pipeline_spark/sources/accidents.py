@@ -1,8 +1,8 @@
 """Synthetic accidents-raw fixture generator (FIXTURES.md §1).
 
-Deterministic (numpy seed) generator of the reference's 46-column-style
-raw table — the subset the cleaning pipeline consumes — with the
-reference's data quirks: nulls at realistic rates, empty strings,
+Deterministic (seeded ``rand``/``randn``) generator of the reference's
+46-column-style raw table — the subset the cleaning pipeline consumes —
+with the reference's data quirks: nulls at realistic rates, empty strings,
 quoted commas in free text, Severity skewed to 2, and a learnable
 severity signal (so ML golden tests have a floor to assert against:
 severity correlates with Distance, Visibility, Wind and the
@@ -12,105 +12,21 @@ findings, BASELINE.md 'Distance_mi ≈ 0.56').
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 
 STATES = ["CA", "TX", "FL", "NY", "PA", "OH", "IL", "NC"]
 WEATHER = ["Fair", "Mostly Cloudy", "Cloudy", "Light Rain", "Rain", "Light Snow", "Fog"]
 
 
-def generate_accidents_raw(
-    spark: SparkSession, n_rows: int = 5000, seed: int = 42
-) -> DataFrame:
-    rng = np.random.default_rng(seed)
-    n = n_rows
-
-    lat = rng.uniform(24.5, 49.5, n)
-    lng = rng.uniform(-125.0, -66.5, n)
-    distance = rng.exponential(0.8, n)
-    visibility = np.clip(rng.normal(8.5, 2.5, n), 0, 10)
-    wind = np.clip(rng.gamma(2.0, 5.0, n), 0, 60)
-    signal = rng.random(n) < 0.2
-
-    # learnable severity: long accidents in bad visibility/high wind and
-    # away from signals skew severe; base class distribution ~80% sev 2
-    score = (
-        1.1 * distance
-        + 0.18 * (10 - visibility)
-        + 0.045 * wind
-        - 0.8 * signal.astype(float)
-        + rng.normal(0, 0.55, n)
-    )
-    severity = np.full(n, 2)
-    severity[score < 0.35] = 1
-    severity[score > 2.2] = 3
-    severity[score > 3.6] = 4
-
-    start = pd.Timestamp("2016-02-01").value + rng.integers(
-        0, int(7 * 365.25 * 24 * 3600 * 1e9), n
-    )
-    # floor to microseconds: Spark timestamps are µs, and leftover
-    # sub-µs precision makes Arrow's safe ns→µs cast fail, silently
-    # dropping createDataFrame to the slow non-Arrow row path
-    start_ts = pd.to_datetime(start).floor("us")
-
-    def with_nulls(arr: np.ndarray, rate: float) -> pd.Series:
-        s = pd.Series(arr, dtype="float64")
-        s[rng.random(n) < rate] = np.nan
-        return s
-
-    city = rng.choice(["Springfield", "Fairview", "", "Riverton", "Midland"], n)
-    desc = np.where(
-        rng.random(n) < 0.3,
-        'Accident on I-5, "heavy traffic", lane blocked',
-        "Minor incident reported",
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "ID": [f"A-{i}" for i in range(n)],
-            "Severity": severity.astype("int32"),
-            "Start_Time": start_ts,
-            "Description": desc,
-            "Start_Lat": with_nulls(lat, 0.01),
-            "Start_Lng": with_nulls(lng, 0.01),
-            "Distance(mi)": with_nulls(distance, 0.05),
-            "City": city,
-            "County": rng.choice(["North", "South", "East", "West"], n),
-            "State": rng.choice(STATES, n),
-            "Temperature(F)": with_nulls(rng.uniform(-20, 115, n), 0.03),
-            "Humidity(%)": with_nulls(rng.uniform(0, 100, n), 0.03),
-            "Pressure(in)": with_nulls(rng.uniform(28, 31, n), 0.03),
-            "Visibility(mi)": with_nulls(visibility, 0.03),
-            "Wind_Speed(mph)": with_nulls(wind, 0.08),
-            "Precipitation(in)": with_nulls(rng.exponential(0.05, n), 0.2),
-            "Weather_Condition": rng.choice(WEATHER + [""], n),
-            "Amenity": rng.random(n) < 0.05,
-            "Crossing": rng.random(n) < 0.1,
-            "Junction": rng.random(n) < 0.15,
-            "Railway": rng.random(n) < 0.03,
-            "Station": rng.random(n) < 0.05,
-            "Stop": rng.random(n) < 0.08,
-            "Traffic_Signal": signal,
-            "Sunrise_Sunset": rng.choice(["Day", "Night"], n),
-        }
-    )
-    return spark.createDataFrame(pdf)
-
-
 def generate_accidents_raw_distributed(
     spark: SparkSession, n_rows: int = 1_000_000, seed: int = 42
 ) -> DataFrame:
-    """Executor-parallel variant for large fixtures (bench / scale runs).
-
-    Same schema and the same planted severity signal as
-    ``generate_accidents_raw``, built from seeded ``rand()/randn()``
-    column expressions over ``spark.range`` — generation runs where the
-    data will live instead of serializing a driver-side pandas frame
-    (150s → seconds at ~800k rows). Distributions match in shape, not
-    bit-for-bit (different RNG streams).
+    """The accidents fixture, generated on the executors: seeded
+    ``rand()/randn()`` column expressions over ``spark.range``, so
+    generation runs where the data will live instead of serializing a
+    driver-side frame (150s → seconds at ~800k rows). The output is
+    deterministic for a given seed and ``spark.range`` partition count
+    (each partition draws its own seeded stream).
 
     CORRECTNESS TRAP (hit in round 1): nondeterministic expressions
     like ``rand()`` advance their per-partition stream on EVERY

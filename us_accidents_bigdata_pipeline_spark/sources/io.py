@@ -245,118 +245,6 @@ def read_parquet_evolving(
     )
 
 
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_file_mb: int = 256,
-) -> dict[str, int]:
-    """Small-file compaction: rewrite a parquet directory into files
-    sized for scan efficiency.
-
-    The 100 TB failure mode this fixes: streaming sinks and
-    fine-grained partition writes leave thousands of KB-sized files;
-    every query then pays per-file open/footer/scheduling overhead
-    that dwarfs the data read (a 10,000-file listing can cost more
-    than the scan). Compaction is the standard maintenance pass
-    (Delta/Iceberg OPTIMIZE; `spark.sql.files.maxPartitionBytes`
-    only groups at READ time, it cannot fix the files on disk).
-
-    Target file count derives from the SOURCE'S ON-DISK BYTES (file
-    metadata, no data scan), then one job re-reads and rewrites via
-    ``repartition(n)`` — round-robin, so output files are uniformly
-    sized regardless of input skew. Returns counts for audit.
-
-    Writes to ``dst`` rather than in place: an in-place rewrite that
-    dies mid-job loses data; swap-after-success is the caller's
-    atomic-rename step (same discipline as ``streaming_upsert``'s
-    versioned snapshot pointer).
-    """
-    import glob as _glob
-    import os as _os
-
-    files = [
-        f
-        for f in _glob.glob(f"{src}/**/*.parquet", recursive=True)
-        if _os.path.isfile(f)
-    ]
-    total_bytes = sum(_os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total_bytes // (target_file_mb << 20)))  # ceil
-    df = spark.read.parquet(src)
-    df.repartition(n_out).write.mode("overwrite").parquet(dst)
-    out_files = [
-        f
-        for f in _glob.glob(f"{dst}/**/*.parquet", recursive=True)
-        if _os.path.isfile(f)
-    ]
-    return {
-        "in_files": len(files),
-        "out_files": len(out_files),
-        "in_bytes": total_bytes,
-        "out_bytes": sum(_os.path.getsize(f) for f in out_files),
-    }
-
-
-def write_audit_publish(
-    df: DataFrame,
-    table_dir: str,
-    checks,
-) -> dict:
-    """Write-Audit-Publish: stage the data, run quality checks against
-    the STAGED copy, and only then atomically flip the live pointer —
-    readers never observe data that failed its checks, and a failed
-    audit leaves the previous version live and the bad data inspectable.
-
-    The Iceberg/Delta WAP branch pattern on plain parquet:
-      1. WRITE  → ``<dir>/staging-<n>`` (never the live path),
-      2. AUDIT  → each check is ``(name, fn: DataFrame -> bool)`` run
-         on a re-READ of the staged files (what readers would see —
-         catches writer-side truncation/corruption, not just logical
-         errors in the in-memory frame),
-      3. PUBLISH → write ``_LIVE`` pointer via atomic rename, same
-         commit discipline as ``streaming_upsert``'s snapshot log.
-
-    Returns {"published": bool, "version": n, "audit": {name: ok}}.
-    Read the live table with ``read_published``.
-    """
-    import json as _json
-    import os as _os
-
-    _os.makedirs(table_dir, exist_ok=True)
-    existing = [
-        d
-        for d in _os.listdir(table_dir)
-        if d.startswith("staging-") or d.startswith("v-")
-    ]
-    n = 1 + max(
-        [int(d.split("-")[1]) for d in existing] or [0]
-    )
-    spark = df.sparkSession
-    staged = f"{table_dir}/staging-{n}"
-    df.write.mode("errorifexists").parquet(staged)
-
-    staged_df = spark.read.parquet(staged)
-    audit = {name: bool(fn(staged_df)) for name, fn in checks}
-    if not all(audit.values()):
-        return {"published": False, "version": n, "audit": audit}
-
-    final = f"{table_dir}/v-{n}"
-    _os.rename(staged, final)
-    tmp = f"{table_dir}/_LIVE.tmp.{n}"
-    with open(tmp, "w") as f:
-        _json.dump({"version": n, "path": final}, f)
-    _os.replace(tmp, f"{table_dir}/_LIVE")  # atomic on POSIX
-    return {"published": True, "version": n, "audit": audit}
-
-
-def read_published(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Read the live version of a write-audit-publish table."""
-    import json as _json
-
-    with open(f"{table_dir}/_LIVE") as f:
-        return spark.read.parquet(_json.load(f)["path"])
-
-
 def schema_diff(before, after) -> dict:
     """Schema contract check between two StructTypes (or DataFrames):
     added / removed / type-changed / nullability-tightened columns.
@@ -386,40 +274,3 @@ def schema_diff(before, after) -> dict:
             if b[n].nullable and not a[n].nullable
         ),
     }
-
-
-def delete_rows(
-    spark: SparkSession,
-    table_dir: str,
-    tombstones,
-    key_col: str,
-    checks=(),
-):
-    """Right-to-be-forgotten deletion over a write-audit-publish table:
-    anti-join the LIVE version against a tombstone key set and publish
-    the survivor rows as a new version (the old version stays on disk
-    for the retention window — physical erasure is the vacuum step).
-
-    Composes the existing primitives — read_published → broadcast
-    anti-join → write_audit_publish — so the delete inherits the WAP
-    guarantees: a failed audit (e.g. a tombstoned key still present)
-    leaves the previous version live.
-    """
-    from pyspark.sql import functions as F
-
-    live = read_published(spark, table_dir)
-    tomb = tombstones.select(F.col(key_col).alias("_tomb_key")).distinct()
-    survivors = live.join(
-        F.broadcast(tomb),
-        live[key_col] == F.col("_tomb_key"),
-        "left_anti",
-    )
-    tomb_keys = {r._tomb_key for r in tomb.collect()}
-    audit_checks = [
-        (
-            "tombstones_absent",
-            lambda df: df.filter(df[key_col].isin(tomb_keys)).count() == 0,
-        ),
-        *checks,
-    ]
-    return write_audit_publish(survivors, table_dir, audit_checks)

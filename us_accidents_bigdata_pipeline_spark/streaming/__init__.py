@@ -1,13 +1,5 @@
-from .foreach_batch import (
-    cdc_batch_fn,
-    list_versions,
-    read_current,
-    read_version,
-    streaming_cdc,
-    streaming_upsert,
-    upsert_batch_fn,
-    vacuum_versions,
-)
+from ..sources.table import list_versions, read_current, read_version, vacuum_versions
+from .foreach_batch import cdc_batch_fn, streaming_cdc, streaming_upsert, upsert_batch_fn
 from .stateful import counts_with_timeout, dedup_stream, running_totals_stateful
 from .windows import (
     adaptive_ts_stream,

@@ -9,16 +9,14 @@ transactional table format the engine-native primitive is
 (operators/merge.py::merge_upsert) producing the NEXT snapshot, written
 to a fresh version directory, then a pointer file is atomically
 replaced — a minimal snapshot-log, the same commit shape Delta/Iceberg
-implement with manifests.
+implement with manifests (``sources/table.py``).
 
 Correctness properties:
 
-- **Replay idempotence.** After a failure, Structured Streaming re-runs
-  the last uncommitted batch with the SAME batch_id. The sink writes
-  version ``v{batch_id}`` with overwrite mode and derives it from the
-  PREVIOUS version's pointer recorded at first attempt, so a replay
-  rewrites the identical snapshot and re-points the same pointer —
-  exactly-once table state from at-least-once batch delivery.
+- **Replay idempotence.** Each micro-batch commits version
+  ``v{batch_id}`` through ``sources.table.commit``, whose replay guard
+  rebuilds a re-delivered batch from the version before it — exactly-
+  once table state from at-least-once batch delivery.
 - **Latest-wins within a batch.** A key updated twice in one batch is
   collapsed by (order_col DESC, tie-break) row_number before merging,
   so merge_upsert's key-unique precondition holds.
@@ -33,71 +31,11 @@ prune by the batch's touched partitions to get the same amortization).
 
 from __future__ import annotations
 
-import json
-import os
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.merge import merge_upsert
-
-_POINTER = "_CURRENT.json"
-
-
-def _pointer_path(root: str) -> str:
-    return os.path.join(root, _POINTER)
-
-
-def _read_pointer(root: str) -> dict | None:
-    """The pointer record ``{version, batch_id, prev}`` of the last
-    commit, or None before the first one."""
-    p = _pointer_path(root)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _commit(
-    spark: SparkSession,
-    root: str,
-    batch_id: int,
-    build_next: Callable[[DataFrame | None], DataFrame],
-) -> None:
-    """The one commit protocol of the versioned table: write
-    ``build_next(previous snapshot or None)`` to ``v{batch_id}``, then
-    atomically replace the pointer.
-
-    Replay guard: if this batch_id already committed, the previous
-    snapshot is the version BEFORE it (recorded as ``prev`` in its
-    pointer), so the rewrite is identical instead of double-applied."""
-    os.makedirs(root, exist_ok=True)
-    meta = _read_pointer(root) or {}
-    replay = meta.get("batch_id") == batch_id
-    prev_version = meta.get("prev" if replay else "version")
-    base = None
-    if prev_version:
-        base = spark.read.parquet(os.path.join(root, prev_version))
-    version = f"v{batch_id}"
-    build_next(base).write.mode("overwrite").parquet(os.path.join(root, version))
-    p = _pointer_path(root)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"version": version, "batch_id": batch_id, "prev": prev_version}, f
-        )
-    os.replace(tmp, p)
-
-
-def read_current(spark: SparkSession, root: str) -> DataFrame | None:
-    """Load the snapshot the pointer file names (None before the first
-    commit). Readers never see a half-written version: the pointer is
-    replaced only after its version directory is fully written."""
-    meta = _read_pointer(root)
-    if meta is None:
-        return None
-    return spark.read.parquet(os.path.join(root, meta["version"]))
+from ..operators.merge import cdc_apply, merge_upsert
+from ..sources.table import commit
 
 
 def upsert_batch_fn(
@@ -122,7 +60,7 @@ def upsert_batch_fn(
         def build_next(base: DataFrame | None) -> DataFrame:
             return updates if base is None else merge_upsert(base, updates, key_cols)
 
-        _commit(batch_df.sparkSession, root, batch_id, build_next)
+        commit(batch_df.sparkSession, root, batch_id, build_next)
 
     return apply
 
@@ -152,51 +90,6 @@ def streaming_upsert(
         q.stop()
 
 
-def read_version(spark: SparkSession, root: str, batch_id: int) -> DataFrame:
-    """Time travel: load the snapshot a given batch committed
-    (``v{batch_id}``). Every commit leaves its full snapshot directory
-    in place, so any historical table state remains readable until
-    ``vacuum_versions`` removes it — the same contract table formats
-    expose as VERSION AS OF."""
-    path = os.path.join(root, f"v{batch_id}")
-    if not os.path.isdir(path):
-        raise FileNotFoundError(f"no committed version v{batch_id} in {root}")
-    return spark.read.parquet(path)
-
-
-def list_versions(root: str) -> list[int]:
-    """Committed batch ids, ascending (the snapshot log)."""
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for name in os.listdir(root):
-        if name.startswith("v") and name[1:].isdigit():
-            out.append(int(name[1:]))
-    return sorted(out)
-
-
-def vacuum_versions(root: str, keep: int = 2) -> list[int]:
-    """Drop all but the newest ``keep`` snapshot versions (never the
-    one the pointer names). Returns the removed batch ids. The replay
-    guard needs the CURRENT version's predecessor to rebuild after a
-    failure mid-commit, so ``keep`` must be >= 2 — enforced."""
-    import shutil
-
-    if keep < 2:
-        raise ValueError("vacuum_versions: keep must be >= 2 (replay guard)")
-    versions = list_versions(root)
-    meta = _read_pointer(root)
-    current = meta["version"] if meta is not None else None
-    doomed = versions[:-keep] if len(versions) > keep else []
-    removed = []
-    for b in doomed:
-        if f"v{b}" == current:
-            continue
-        shutil.rmtree(os.path.join(root, f"v{b}"), ignore_errors=True)
-        removed.append(b)
-    return removed
-
-
 def cdc_batch_fn(
     root: str,
     key_cols: list[str],
@@ -216,7 +109,6 @@ def cdc_batch_fn(
     operators/merge.py::cdc_apply — one hash shuffle of base ∪ batch
     on the key, latest-seq-wins, tombstones drop.
     """
-    from ..operators.merge import cdc_apply
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -227,7 +119,7 @@ def cdc_batch_fn(
                 base = spark.createDataFrame([], batch_df.select(*payload).schema)
             return cdc_apply(base, batch_df, key_cols, seq_col, op_col)
 
-        _commit(spark, root, batch_id, build_next)
+        commit(spark, root, batch_id, build_next)
 
     return apply
 
