@@ -25,8 +25,7 @@ from us_accidents_bigdata_pipeline_spark.plans import REGISTRY
 from us_accidents_bigdata_pipeline_spark.session import get_spark
 
 # Headline set: scan-heavy agg, fact-fact join, windows, broadcast-dim
-# join, plus the LLM-pipeline operators once registered. Names absent
-# from the registry are skipped so bench.py never breaks mid-round.
+# join, plus the LLM-pipeline operators. Every name must be registered.
 HEADLINE = [
     "pricing_summary",
     "join_revenue_topk",
@@ -40,7 +39,6 @@ HEADLINE = [
     "text_quality_scores",
     "repetition_quality_docs",
     "minhash_banded_pairs",
-    "near_dup_resolve_banded",
     "embedding_near_dup_pairs_blas",
     "knn_cosine_topk",
     "knn_cosine_batch",
@@ -105,8 +103,6 @@ HEADLINE = [
     "zorder_keys_events",
     "normalized_exact_dedup_docs",
     "incremental_dedup_new_batch",
-    "minhash_lsh_verified_pairs",
-    "lsh_ann_verified_topk",
     "cogrouped_ks_by_event_type",
     "group_quantiles_events",
     "temperature_mixture_sample_docs",
@@ -120,13 +116,6 @@ HEADLINE = [
     "minhash_estimate_calibration",
     "pca_2d_exact",
     "fpgrowth_itemsets",
-    # embedding_near_dup_pairs_lsh is NOT benched: at threshold 0.42
-    # the candidate radius approaches the random-pair distance and
-    # every bucket collides (see its docstring) — measured 172 s vs
-    # the blas exact tier's 3.4 s at sf0.1. LSH prunes at the
-    # production thresholds (>= ~0.8); benching the degenerate regime
-    # would report the wrong number for the operator. It stays
-    # correctness-checked in the oracle sweep.
     "point_in_time_state_join",
     "session_overlap_pairs",
     # round 8/9: mixture + graph tier
@@ -314,9 +303,7 @@ def main() -> None:
     total = 0.0
     _n_benched = 0
     for name in HEADLINE:
-        spec = REGISTRY.get(name)
-        if spec is None:
-            continue
+        spec = REGISTRY[name]
         # mini health probe every 10 queries (~0.2 s each): the final
         # health stamp is the MIN over the run, so a mid-run throttle
         # dip cannot hide behind a healthy end-of-run reading
@@ -426,43 +413,6 @@ def main() -> None:
     except Exception as e:
         times["pq_build"] = -1.0
         print(f"pq bench failed: {e}", file=sys.stderr)
-
-    # Production-threshold embedding near-dup (round 13, VERDICT item
-    # 4): the 0.42-threshold entry stays un-benched by design (its
-    # candidate radius ~ the random-pair distance), and at a
-    # production threshold (0.85) this call prices what the operator
-    # actually does there: the linear fanout probe fires the
-    # degenerate-bucket guard (BRP on isotropic d=64 data cannot
-    # prune: far-pair projections concentrate at ~d/sqrt(dim)=0.15,
-    # so any recall-preserving bucket width collides ~2/3 of far
-    # pairs through the 8 OR-tables — measured fanout 227-1000 across
-    # bucket_length 0.05-2.0) and the exact BLAS tier answers. That
-    # guard+fallback IS the honest production price on unclustered
-    # data; a corpus with real cluster structure is where the LSH
-    # join itself would run.
-    try:
-        import warnings as _warnings
-
-        from us_accidents_bigdata_pipeline_spark.operators.similarity import (
-            embedding_near_dup_pairs,
-        )
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            with _warnings.catch_warnings():
-                # the degenerate-bucket RuntimeWarning is the expected
-                # (documented) path on this corpus
-                _warnings.simplefilter("ignore", RuntimeWarning)
-                embedding_near_dup_pairs(
-                    emb, threshold=0.85, method="lsh"
-                ).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        times["embedding_near_dup_prod_threshold"] = round(best, 3)
-        total += best
-    except Exception as e:
-        print(f"embedding prod-threshold bench failed: {e}", file=sys.stderr)
 
     # Pipeline-level throughput on the seeded accidents fixture, sized
     # by SF (sf0.1 → 60k rows) — directly comparable to BASELINE.md's

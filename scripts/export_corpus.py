@@ -197,7 +197,7 @@ def main(argv: list[str] | None = None) -> int:
     # straddle train/eval — same construction as the oracled
     # leakage_safe_split_docs catalog entry)
     resolved = near_dup_resolve(
-        curated.select("doc_id", "text"), threshold=0.5, method="banded"
+        curated.select("doc_id", "text"), threshold=0.5
     ).select("doc_id", "canonical_id")
     u16 = F.conv(
         F.substring(_shuffle_key("canonical_id", args.seed), 9, 4), 16, 10

@@ -128,26 +128,13 @@ def test_near_dup_resolve_planted_clusters(spark):
         (20, "completely different text with no shared trigrams at all here"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    rows = near_dup_resolve(df, threshold=0.4, method="exact").collect()
+    rows = near_dup_resolve(df, threshold=0.4).collect()
     canon = {r.doc_id: r.canonical_id for r in rows}
     survivors = sorted(r.doc_id for r in rows if r.keep)
     assert canon[0] == canon[1] == canon[2] == 0
     assert canon[10] == canon[11] == 10
     assert canon[20] == 20
     assert survivors == [0, 10, 20]
-
-
-def test_near_dup_resolve_banded_agrees_with_exact(spark):
-    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-    exact = {
-        (r.doc_id, r.canonical_id)
-        for r in near_dup_resolve(docs, threshold=0.5, method="exact").collect()
-    }
-    banded = {
-        (r.doc_id, r.canonical_id)
-        for r in near_dup_resolve(docs, threshold=0.5, method="banded").collect()
-    }
-    assert exact == banded
 
 
 def test_exact_dedup_null_patterns_stay_distinct(spark):
@@ -260,15 +247,15 @@ def test_simhash_near_dup_pairs_pigeonhole_exact(spark):
     hamming<=k pair set: recall 1 by pigeonhole (a pair within budget
     agrees on >=1 of k+1 blocks), precision 1 by the bit_count verify."""
     from us_accidents_bigdata_pipeline_spark.operators.dedup import (
-        simhash_buckets,
-        simhash_near_dup_pairs,
+        simhash_near_dup_pairs_md5,
+        simhash_signatures,
     )
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-    sims = {r.doc_id: r.simhash for r in simhash_buckets(docs).collect()}
+    sims = {r.doc_id: r.simhash for r in simhash_signatures(docs).collect()}
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_near_dup_pairs(docs, max_hamming=5).collect()
+        for r in simhash_near_dup_pairs_md5(docs, max_hamming=5).collect()
     }
 
     def ham(a: int, b: int) -> int:
@@ -285,131 +272,52 @@ def test_simhash_near_dup_pairs_pigeonhole_exact(spark):
     assert expect, "corpus should contain simhash near-dups"
 
 
-def test_embedding_near_dup_blas_matches_exact(spark):
-    """The broadcast-matrix-product form is semantically identical to
-    the per-pair expression form: same pairs, same rounded cosines."""
+def test_embedding_near_dup_blas_matches_exact(spark, emb_np):
+    """The broadcast matrix product returns exactly the brute-force
+    all-pairs set: every upper-triangle pair at cosine >= 0.42, with
+    the cosine rounded to 4 places."""
     from us_accidents_bigdata_pipeline_spark.operators.similarity import (
         embedding_near_dup_pairs,
     )
 
+    ids, X = emb_np
+    unit = X / np.linalg.norm(X, axis=1)[:, None]
+    cos = unit @ unit.T
+    expect = {
+        (int(min(ids[i], ids[j])), int(max(ids[i], ids[j]))): cos[i, j]
+        for i, j in zip(*np.nonzero(np.triu(cos >= 0.42, k=1)))
+    }
     e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    exact = {
+    got = {
         (r.doc_a, r.doc_b): r.cosine
-        for r in embedding_near_dup_pairs(e, method="exact").collect()
+        for r in embedding_near_dup_pairs(e).collect()
     }
-    blas = {
-        (r.doc_a, r.doc_b): r.cosine
-        for r in embedding_near_dup_pairs(e, method="blas").collect()
-    }
-    assert exact.keys() == blas.keys()
-    assert all(abs(exact[k] - blas[k]) < 1e-6 for k in exact)
+    assert expect, "expected near-dup pairs at the default threshold"
+    assert got.keys() == expect.keys()
+    assert all(abs(got[k] - expect[k]) <= 5e-5 + 1e-9 for k in got)
 
 
 def test_embedding_blas_tiling_bounds_memory(spark):
     """The dense cosine block is tiled over corpus column blocks: with a
     budget far below what the untiled B×n product needs, the path must
     run inside the cap (many tiles) and stay bitwise-parity with the
-    exact expression form. Untiled, this corpus (n=1000, batches up to
+    default single-tile run. Untiled, this corpus (n=1000, batches up to
     1000 rows) would allocate 8·B·n ≈ 8 MB blocks — the 64 KB budget
     forces ≥100 column tiles."""
     from us_accidents_bigdata_pipeline_spark.operators.similarity import (
-        _embedding_pairs_blas,
         embedding_near_dup_pairs,
     )
 
     e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    exact = {
+    untiled = {
         (r.doc_a, r.doc_b): r.cosine
-        for r in embedding_near_dup_pairs(e, method="exact").collect()
+        for r in embedding_near_dup_pairs(e).collect()
     }
     tiled = {
         (r.doc_a, r.doc_b): r.cosine
-        for r in _embedding_pairs_blas(
-            e, 0.42, "vec_id", "embedding", tile_mem_bytes=64 << 10
-        ).collect()
+        for r in embedding_near_dup_pairs(e, tile_mem_bytes=64 << 10).collect()
     }
-    assert tiled == exact
-
-
-def test_embedding_near_dup_lsh_no_false_positives_high_recall(spark):
-    """The LSH path's exact-cosine verify means zero false positives;
-    at the default threshold, candidate recall on this corpus is 1.0
-    (8 hash tables, Euclidean radius = cosine threshold identity)."""
-    from us_accidents_bigdata_pipeline_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-    )
-
-    e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    exact = {
-        (r.doc_a, r.doc_b) for r in embedding_near_dup_pairs(e, method="exact").collect()
-    }
-    lsh = {
-        (r.doc_a, r.doc_b) for r in embedding_near_dup_pairs(e, method="lsh").collect()
-    }
-    assert exact, "expected near-dup pairs at the default threshold"
-    assert lsh - exact == set(), "LSH path produced false positives"
-    assert len(lsh & exact) / len(exact) >= 0.9
-
-
-def test_embedding_near_dup_lsh_degenerate_guard_fallback_exact(spark):
-    """At the registered low threshold / default bucket_length the
-    bucket histogram is degenerate (measured per-row fanout ~250 of a
-    500-row corpus): the degenerate regime is
-    redirected to the exact BLAS tier with a RuntimeWarning, so the
-    output is exactly the exact pair set (this is why the registered
-    ``embedding_near_dup_pairs_lsh`` query stays oracled-green)."""
-    import warnings as _warnings
-
-    from us_accidents_bigdata_pipeline_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-    )
-
-    e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    exact = {
-        (r.doc_a, r.doc_b)
-        for r in embedding_near_dup_pairs(e, method="exact").collect()
-    }
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        lsh = {
-            (r.doc_a, r.doc_b)
-            for r in embedding_near_dup_pairs(e, method="lsh").collect()
-        }
-    assert lsh == exact
-    assert any(
-        "degenerate LSH buckets" in str(w.message) for w in caught
-    ), "fallback must be loud, not silent"
-
-
-def test_embedding_near_dup_lsh_non_degenerate_runs_lsh_path(spark):
-    """With a fine bucket_length the fanout probe passes (measured
-    ~24 < 64 on this corpus) and the genuine approxSimilarityJoin +
-    exact-verify path runs: no warning, and — because
-    the verify stage is exact — still zero false positives (recall is
-    NOT asserted here; pruning may drop pairs in this regime)."""
-    import warnings as _warnings
-
-    from us_accidents_bigdata_pipeline_spark.operators.similarity import (
-        embedding_near_dup_pairs,
-    )
-
-    e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    exact = {
-        (r.doc_a, r.doc_b)
-        for r in embedding_near_dup_pairs(e, method="exact").collect()
-    }
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        lsh = {
-            (r.doc_a, r.doc_b)
-            for r in embedding_near_dup_pairs(
-                e, method="lsh", bucket_length=0.02
-            ).collect()
-        }
-    assert not any(
-        "degenerate LSH buckets" in str(w.message) for w in caught
-    )
-    assert lsh - exact == set(), "LSH path produced false positives"
+    assert tiled == untiled
 
 
 # ------------------------------------------------------------------- guards
@@ -490,19 +398,19 @@ def test_ngram_hot_shingle_cap_bounds_join(spark):
 
 
 def test_simhash_max_hamming_zero_single_block(spark):
-    """max_hamming=0 → one 64-bit block: the mask (1<<64)-1 overflows
-    LongType, so the single-block case must join on the unmasked hash.
-    Result = exact-simhash-equality pairs only."""
+    """max_hamming=0 → one block holding the whole 60-bit signature:
+    the block join is then a join on the signature itself. Result =
+    exact-simhash-equality pairs only."""
     from us_accidents_bigdata_pipeline_spark.operators.dedup import (
-        simhash_buckets,
-        simhash_near_dup_pairs,
+        simhash_near_dup_pairs_md5,
+        simhash_signatures,
     )
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-    sims = {r.doc_id: r.simhash for r in simhash_buckets(docs).collect()}
+    sims = {r.doc_id: r.simhash for r in simhash_signatures(docs).collect()}
     got = {
         (r.doc_a, r.doc_b)
-        for r in simhash_near_dup_pairs(docs, max_hamming=0).collect()
+        for r in simhash_near_dup_pairs_md5(docs, max_hamming=0).collect()
     }
     ids = sorted(sims)
     expect = {
@@ -512,45 +420,6 @@ def test_simhash_max_hamming_zero_single_block(spark):
         if sims[a] == sims[b]
     }
     assert got == expect
-
-
-def test_prefix_filtered_jaccard_matches_plain(spark):
-    """AllPairs prefix filtering is an optimization, not an
-    approximation: pair sets and jaccard values must match the plain
-    inverted-index join exactly — including on a stopword-skewed corpus
-    where every doc shares one hot shingle (the regime prefix filtering
-    exists for)."""
-    from us_accidents_bigdata_pipeline_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        prefix_filtered_jaccard_pairs,
-    )
-
-    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-    base = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, threshold=0.5).collect())
-    )
-    pf = sorted(
-        map(
-            tuple,
-            prefix_filtered_jaccard_pairs(docs, threshold=0.5).collect(),
-        )
-    )
-    assert base == pf and len(base) > 0
-
-    # stopword-skewed corpus: common prefix phrase in every doc
-    rows = [
-        (i, "the quick brown fox " + ("jumps over dog %d " % (i % 7)) * 3)
-        for i in range(60)
-    ]
-    skew = spark.createDataFrame(rows, "doc_id long, text string")
-    b2 = sorted(map(tuple, ngram_jaccard_pairs(skew, threshold=0.6).collect()))
-    p2 = sorted(
-        map(
-            tuple,
-            prefix_filtered_jaccard_pairs(skew, threshold=0.6).collect(),
-        )
-    )
-    assert b2 == p2 and len(b2) > 0
 
 
 def test_semantic_dedup_no_false_positives_high_recall(spark):
@@ -567,7 +436,7 @@ def test_semantic_dedup_no_false_positives_high_recall(spark):
     e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     exact = {
         (r.doc_a, r.doc_b): r.cosine
-        for r in embedding_near_dup_pairs(e, method="exact").collect()
+        for r in embedding_near_dup_pairs(e).collect()
     }
     sem = {
         (r.doc_a, r.doc_b): r.cosine
@@ -599,7 +468,7 @@ def test_semantic_dedup_recall_cost_curve(spark):
     e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     exact = {
         (r.doc_a, r.doc_b)
-        for r in embedding_near_dup_pairs(e, method="exact").collect()
+        for r in embedding_near_dup_pairs(e).collect()
     }
     assert exact
     recall = {}
@@ -691,29 +560,6 @@ def test_pq_encode_shapes_and_reconstruction(spark):
         errs.append(np.linalg.norm(orig[vid] - rec))
         norms.append(np.linalg.norm(orig[vid]))
     assert np.mean(errs) < np.mean(norms), (np.mean(errs), np.mean(norms))
-
-
-def test_pq_encode_arrow_matches_expr_twin(spark):
-    """The Arrow-batched BLAS encode (default) and the pure-JVM
-    struct-min expression form must assign identical codes — the
-    expression twin is the cross-check for the fast path."""
-    from us_accidents_bigdata_pipeline_spark.operators.similarity import (
-        pq_encode,
-        pq_train,
-    )
-    from .conftest import SF_ORACLE
-
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    books = pq_train(emb, m=8, k_codes=16)
-    arrow = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_encode(emb, books, mode="arrow").collect()
-    }
-    expr = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_encode(emb, books, mode="expr").collect()
-    }
-    assert arrow == expr
 
 
 def test_pq_train_local_is_deterministic_across_layouts(spark):

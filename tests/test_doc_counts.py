@@ -64,9 +64,8 @@ def test_verify_skill_counts():
 
 
 def test_bench_headline_names_exist():
-    """bench.py silently skips unknown names (so mid-round edits never
-    break it) — this test makes a typo'd headline name loud instead of
-    silently unbenched."""
+    """bench.py looks every headline name up in the registry; this test
+    catches a stale or typo'd name before a bench run does."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(

@@ -106,3 +106,43 @@ def unset_knobs() -> list[str]:
 
 def test_every_pipeline_knob_is_set_by_some_caller():
     assert unset_knobs() == []
+
+
+# A parameter with one of these names chooses between alternative
+# implementations of one result; the package keeps one implementation.
+SELECTORS = {"method", "hash_fn", "fit_mode"}
+# a ``mode`` parameter is fine when it forwards a DataFrameWriter mode
+SAVE_MODES = {"overwrite", "append", "ignore", "error", "errorifexists"}
+
+
+def selector_options() -> list[str]:
+    """``module::function.param`` for every parameter in the package
+    named like an implementation selector, and every ``mode`` parameter
+    whose string default is not a Spark save mode."""
+    found = []
+    for path in _py_files(os.path.join(REPO, PACKAGE)):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        rel = os.path.relpath(path, os.path.join(REPO, PACKAGE))
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            positional = a.posonlyargs + a.args
+            defaults = [None] * (len(positional) - len(a.defaults)) + a.defaults
+            for arg, default in zip(
+                positional + a.kwonlyargs, defaults + a.kw_defaults
+            ):
+                non_save_mode = (
+                    arg.arg == "mode"
+                    and isinstance(default, ast.Constant)
+                    and isinstance(default.value, str)
+                    and default.value not in SAVE_MODES
+                )
+                if arg.arg in SELECTORS or non_save_mode:
+                    found.append(f"{rel}::{node.name}.{arg.arg}")
+    return found
+
+
+def test_no_implementation_selector_options():
+    assert selector_options() == []

@@ -197,38 +197,6 @@ def test_knn_learns_separable_blobs(spark):
     assert max(accs.values()) > 0.95, accs
 
 
-def test_knn_driver_local_mode(spark):
-    """J3 (driver-local kNN, numpy vote): learns the same
-    separable blobs and honors the safe_collect guard."""
-    import numpy as np
-
-    from us_accidents_bigdata_pipeline_spark.ml.knn import knn_driver_local
-    from us_accidents_bigdata_pipeline_spark.tuning import DriverCollectGuard
-
-    rng = np.random.default_rng(7)
-    rows = []
-    for cls, center in enumerate([(0.0, 0.0), (6.0, 6.0)]):
-        pts = rng.normal(center, 0.5, size=(40, 2))
-        rows += [
-            (cls * 40 + i, [float(x), float(y)], cls)
-            for i, (x, y) in enumerate(pts)
-        ]
-    df = spark.createDataFrame(rows, "id long, embedding array<double>, label int")
-    train = df.filter(F.col("id") % 2 == 0)
-    test = df.filter(F.col("id") % 2 == 1)
-    preds = knn_driver_local(
-        test, train, k=3, features_col="embedding", label_col="label"
-    )
-    truth = {r.id: r.label for r in test.collect()}
-    got = {r.id: r.prediction for r in preds.collect()}
-    acc = sum(1 for i in got if got[i] == truth[i]) / len(got)
-    assert acc > 0.95, acc
-    with pytest.raises(DriverCollectGuard):
-        knn_driver_local(
-            test, train, k=3, features_col="embedding", label_col="label", max_rows=5
-        )
-
-
 def test_kmeans_sweep_and_stats(accidents_cleaned):
     geo = accidents_cleaned.select("Start_Lat", "Start_Lng", "Severity")
     feat, _ = assemble_and_scale(geo, ["Start_Lat", "Start_Lng"])

@@ -322,11 +322,11 @@ def test_blocked_hamming_banded_frame_shared(spark):
     # per-bit aggregates) must appear as a checkpointed RDD, not be
     # re-derived per branch
     from us_accidents_bigdata_pipeline_spark.operators.dedup import (
-        simhash_near_dup_pairs,
+        simhash_near_dup_pairs_md5,
     )
 
     docs = _edge_docs(spark).filter(F.col("text").isNotNull())
-    frame = simhash_near_dup_pairs(docs, max_hamming=10)
+    frame = simhash_near_dup_pairs_md5(docs, max_hamming=10)
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan
     # the per-bit signature aggregation runs once, not once per branch

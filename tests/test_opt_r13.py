@@ -60,11 +60,11 @@ def test_pq_certified_bound_exact_across_queries(spark):
         codes.unpersist()
 
 
-def test_pq_encode_qe2_is_reconstruction_error_both_modes(spark):
-    """_qe2 must equal the squared reconstruction error of each
-    vector against its assigned codewords (the quantity the certified
-    search bound relies on), in both the Arrow and the expression
-    encode modes, and the two modes must agree on codes."""
+def test_pq_encode_qe2_is_reconstruction_error(spark):
+    """Each code must be its subspace's nearest codeword (brute-force
+    argmin), and _qe2 must equal the squared reconstruction error of
+    the vector against those codewords (the quantity the certified
+    search bound relies on)."""
     from us_accidents_bigdata_pipeline_spark.operators.similarity import (
         pq_encode,
         pq_train,
@@ -77,18 +77,16 @@ def test_pq_encode_qe2_is_reconstruction_error_both_modes(spark):
         r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
         for r in emb.collect()
     }
-    for mode in ("arrow", "expr"):
-        out = pq_encode(emb, books, mode=mode).collect()
-        assert {r["vec_id"] for r in out} == set(orig)
-        for r in out:
-            rec = np.concatenate(
-                [C[j, c] for j, c in enumerate(r["codes"])]
-            )
-            want = float(((orig[r["vec_id"]] - rec) ** 2).sum())
-            assert r["_qe2"] == pytest.approx(want, abs=1e-9), (
-                mode,
-                r["vec_id"],
-            )
+    out = pq_encode(emb, books).collect()
+    assert {r["vec_id"] for r in out} == set(orig)
+    m, _, sub = C.shape
+    for r in out:
+        xs = orig[r["vec_id"]].reshape(m, sub)
+        nearest = ((xs[:, None, :] - C) ** 2).sum(axis=2).argmin(axis=1)
+        assert list(r["codes"]) == nearest.tolist(), r["vec_id"]
+        rec = np.concatenate([C[j, c] for j, c in enumerate(r["codes"])])
+        want = float(((orig[r["vec_id"]] - rec) ** 2).sum())
+        assert r["_qe2"] == pytest.approx(want, abs=1e-9), r["vec_id"]
 
 
 def test_pq_legacy_index_without_qe2_still_works(spark):
@@ -112,80 +110,6 @@ def test_pq_legacy_index_without_qe2_still_works(spark):
     ).collect()
     assert len(got) == 5
     assert all(r["cosine"] is not None for r in got)
-
-
-def test_minhash_lsh_verified_native_candidates(spark):
-    """Round-13 rewrite: the candidate stage joins MLlib's own hash
-    values natively — no approxSimilarityJoin (whose plan signature is
-    a join condition evaluating the Scala keyDistance UDF), and the
-    verified output still equals the exact all-pairs Jaccard (the
-    candidate set is a superset of the old one, so recall holds)."""
-    from pyspark.sql import functions as F
-
-    from us_accidents_bigdata_pipeline_spark.operators import dedup
-    from us_accidents_bigdata_pipeline_spark.operators.dedup import (
-        _doc_shingles,
-        minhash_lsh_verified_pairs,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-
-    # plan pin: no ScalaUDF-evaluating join condition (the
-    # approxSimilarityJoin signature), checked on the unshared plan so
-    # localCheckpoints hide nothing
-    orig = dedup._shared
-    dedup._shared = lambda frame: frame
-    try:
-        plan = (
-            minhash_lsh_verified_pairs(docs, threshold=0.5)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    finally:
-        dedup._shared = orig
-    assert "approxSimilarityJoin" not in plan
-    for line in plan.splitlines():
-        if "Join" in line and "condition" in line.lower():
-            assert "UDF(" not in line, line
-
-    # value pin: equals exact all-pairs Jaccard >= threshold
-    got = sorted(
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in minhash_lsh_verified_pairs(docs, threshold=0.5).collect()
-    )
-    sh = _doc_shingles(docs, "doc_id", "text", 3)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    pairs = (
-        sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            "shingle",
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("c") / (F.col("na") + F.col("nb") - F.col("c")), 4).alias(
-                "jaccard"
-            ),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
-    want = sorted(
-        (r["doc_a"], r["doc_b"], r["jaccard"]) for r in pairs.collect()
-    )
-    assert got == want
 
 
 def test_shingle_prefilter_matches_guarded_filter_form(spark):

@@ -96,7 +96,6 @@ _AUDIT_ALLOW: dict[str, set[str]] = {
     "int8_vs_float_topk": {"nested_loop"},         # 1 query point
     # int8_vs_float scoring (1 query point) + 5-row depth suffix frame
     "rbo_int8_vs_float": {"nested_loop", "single_partition_window"},
-    "lsh_ann_verified_topk": {"nested_loop"},      # 1 query point re-rank
     "pq_ann_verified_topk": {"nested_loop"},       # 1 query point re-rank
     "lsh_ann_candidates": {"nested_loop"},         # 1 query point + 5-row
     # exact-top-5 left join against the 50-row candidate broadcast
@@ -108,10 +107,7 @@ _AUDIT_ALLOW: dict[str, set[str]] = {
     # AGGREGATE (tie-correct exact form); sort-sweep is the scale path
     "pareto_frontier_suppliers": {"nested_loop"},
     "tfidf_top_terms": {"nested_loop"},            # 1-row doc count
-    # the documented QUADRATIC reference tier (exact all-pairs cosine);
-    # the banded/blas/lsh variants are the scale paths and stay clean
-    "embedding_near_dup_pairs": {"nested_loop"},
-    # same quadratic audit tier (eager max_rows cap) + 1-row moments
+    # quadratic audit tier (eager max_rows cap) + 1-row moments
     "hubness_profile_embeddings": {"nested_loop"},
     # k^2 centroid pairs + 1-row extrema/meta frames
     "dunn_index_embeddings": {"nested_loop"},
@@ -288,11 +284,11 @@ def test_simhash_near_dups_close(spark):
     within small Hamming distance; random pairs far."""
     from us_accidents_bigdata_pipeline_spark.operators.dedup import (
         ngram_jaccard_pairs,
-        simhash_buckets,
+        simhash_signatures,
     )
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet").limit(200)
-    sh = {r.doc_id: r.simhash for r in simhash_buckets(docs).collect()}
+    sh = {r.doc_id: r.simhash for r in simhash_signatures(docs).collect()}
     dups = ngram_jaccard_pairs(docs, threshold=0.5).collect()
 
     def hamming(a: int, b: int) -> int:
@@ -307,8 +303,9 @@ def test_simhash_near_dups_close(spark):
         if (a, b) not in set(dup_pairs)
     ]
     # the corpus's ~40-word shared vocabulary correlates all simhashes
-    # (random-pair mean ≈ 18, not 32), so assert SEPARATION rather than
-    # absolute distances: near-dups must sit clearly below random pairs
+    # (random-pair mean ≈ 18 of 60 bits, not 30), so assert SEPARATION
+    # rather than absolute distances: near-dups must sit clearly below
+    # random pairs
     mean_dup = sum(dup_dists) / len(dup_dists)
     mean_rand = sum(rand_dists) / len(rand_dists)
     assert max(dup_dists) < 16, dup_dists

@@ -32,6 +32,27 @@ def test_oracle_sql_holds_oracled_names_in_registration_order():
     assert all(oracle_sql()[n] == REGISTRY[n].oracle for n in oracled)
 
 
+# Pairs that share one oracle on purpose: both benchmark-mix queries
+# (exact and LSH batch top-k), and a batch operator next to the only
+# query that covers its streaming path.
+SHARED_ORACLE = {
+    frozenset({"knn_cosine_batch", "lsh_ann_batch"}),
+    frozenset({"incremental_dedup_new_batch", "streaming_incremental_dedup"}),
+    frozenset({"cdc_apply_orders", "streaming_cdc_orders"}),
+}
+
+
+def test_one_registry_entry_per_oracle():
+    """Two entries with the same oracle compute the same result; the
+    registry keeps one implementation per result."""
+    by_oracle: dict[str, set[str]] = {}
+    for name, spec in REGISTRY.items():
+        if spec.oracle:
+            by_oracle.setdefault(" ".join(spec.oracle.split()), set()).add(name)
+    shared = {frozenset(g) for g in by_oracle.values() if len(g) > 1}
+    assert shared - SHARED_ORACLE == set()
+
+
 def test_import_opens_no_file_in_repo_root():
     """Importing the package must not read anything next to it (such as
     result artifacts in the checkout root)."""

@@ -233,65 +233,6 @@ def knn_predict_exact(
     return df.join(preds, id_col)
 
 
-def knn_driver_local(
-    test: DataFrame,
-    train: DataFrame,
-    k: int = 5,
-    id_col: str = "id",
-    features_col: str = "features",
-    label_col: str = "label",
-    max_rows: int = 500_000,
-) -> DataFrame:
-    """J3: the reference's driver-local sklearn kNN mode (v2:cell35-40 —
-    ``toPandas()`` → ``KNeighborsClassifier(weights='distance',
-    n_jobs=-1)``), kept as an OPTIONAL small-data mode per SURVEY §2.6;
-    the Spark-native broadcast kNN (J1, ``knn_predict``) is the
-    production path.
-
-    Both sides cross the driver boundary through ``safe_collect`` (the
-    reference pulls the whole 7.7M-row frame to the driver unguarded —
-    the exact failure mode S13's guard policy exists for). The vote is
-    a numpy implementation of the reference's sklearn semantics
-    (Euclidean inverse-distance-weighted vote, an exact-match neighbor
-    dominates, ties → smallest label). Returns (id, prediction)."""
-    import numpy as np
-
-    from ..tuning import safe_collect
-
-    tdf, tcol = _as_array_col(train, features_col)
-    trows = safe_collect(
-        tdf.select(F.col(tcol).alias("_v"), label_col), max_rows=max_rows
-    )
-    qdf, qcol = _as_array_col(test, features_col)
-    qrows = safe_collect(
-        qdf.select(F.col(id_col).alias("_id"), F.col(qcol).alias("_v")),
-        max_rows=max_rows,
-    )
-    if not trows or not qrows:
-        return test.sparkSession.createDataFrame([], f"{id_col} long, prediction int")
-    X = np.asarray([r["_v"] for r in trows], dtype=np.float64)
-    y = np.asarray([r[label_col] for r in trows])
-    Q = np.asarray([r["_v"] for r in qrows], dtype=np.float64)
-    ids = [r["_id"] for r in qrows]
-    preds = np.empty(len(Q), dtype=y.dtype)
-    classes = np.unique(y)
-    for i, q in enumerate(Q):
-        d = np.sqrt(((X - q) ** 2).sum(axis=1))
-        nn = np.argsort(d, kind="stable")[:k]
-        dn = d[nn]
-        if (dn == 0).any():
-            wts = (dn == 0).astype(np.float64)
-        else:
-            wts = 1.0 / dn
-        scores = {c: wts[y[nn] == c].sum() for c in classes}
-        preds[i] = max(sorted(scores), key=lambda c: scores[c])
-    spark = test.sparkSession
-    return spark.createDataFrame(
-        [(int(i), int(p)) for i, p in zip(ids, preds)],
-        f"{id_col} long, prediction int",
-    )
-
-
 def optimal_k_sweep(
     train: DataFrame,
     validation: DataFrame,

@@ -342,7 +342,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 5,
     window: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing document fingerprints (the MOSS rolling-hash scheme):
     hash every word k-gram by position, slide a ``window`` of
@@ -361,23 +360,13 @@ def winnow_fingerprints(
     shuffle on id), a rolling-min frame over the same partitioning
     (reused exchange), then distinct.
 
-    ``hash_fn``: ``"xxhash64"`` (default — compact 8-byte fingerprints,
-    engine-specific so rows-only checkable) or ``"md5"`` (hex-string
-    order as the pseudo-random total order — 4x wider fingerprints but
-    every engine agrees on it, enabling an exact cross-engine oracle).
-    Winnowing only needs SOME deterministic pseudo-random order on
-    grams; both satisfy it.
+    The gram order is ``md5`` of the gram text: any deterministic
+    pseudo-random order satisfies winnowing, and md5's is one every
+    engine agrees on, so a SQL engine can reproduce the selection
+    exactly (the ``winnow_fingerprints_md5`` oracle).
     """
-    from pyspark.sql import Window as W
-
-    if hash_fn == "md5":
-        gh = F.md5("gram")
-    elif hash_fn == "xxhash64":
-        gh = F.xxhash64("gram")
-    else:
-        raise ValueError(f"winnow_fingerprints: unknown hash_fn {hash_fn!r}")
     grams = _positional_grams(df, id_col, text_col, k).select(
-        F.col(id_col), F.col("pos"), gh.alias("_gh")
+        F.col(id_col), F.col("pos"), F.md5("gram").alias("_gh")
     )
     rolling = W.partitionBy(id_col).orderBy("pos").rowsBetween(0, window - 1)
     return (
@@ -751,140 +740,6 @@ def lsh_banding_planner(
     )
 
 
-def minhash_lsh_verified_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """MLlib MinHashLSH candidates + EXACT-Jaccard verify — the
-    LSH-then-verify pipeline every production dedup stack runs, and
-    the step that turns the approximate MLlib path into an
-    oracle-checkable operator.
-
-    Stage 1 (rewritten in optimization round 13, the ``lsh_ann_batch``
-    treatment): fit MLlib's ``MinHashLSH`` and take the SAME per-table
-    hash values from ``model.transform``, but generate candidates with
-    a native slim self-join on the exploded (table, hash) ints instead
-    of ``approxSimilarityJoin`` — MLlib's join explodes FAT rows (raw
-    features + all hash vectors, both sides), runs ``.distinct()``
-    over them, and evaluates a per-pair Scala keyDistance UDF whose
-    value the verify stage recomputes exactly anyway. The native
-    candidate set is every pair colliding in ≥1 hash table — a
-    SUPERSET of ``approxSimilarityJoin``'s (which post-filters by
-    keyDistance), so verified recall can only match or improve:
-    since the verify stage is exact and the old output equalled the
-    exact all-pairs oracle, the output is provably unchanged.
-    (``approxSimilarityJoin`` itself stays priced and oracle-gated in
-    ``minhash_near_dup_pairs``, whose estimate column needs it.)
-
-    Stage 2 recomputes EXACT shingle-set Jaccard on the candidate
-    pairs only (same verify join as ``minhash_banded_pairs``) and
-    filters at the true ``threshold``.
-
-    Output (doc_a, doc_b, jaccard) therefore has no false positives;
-    banding only bounds recall, and with 8 OR-amplified tables the
-    per-pair miss probability at the corpus's planted s>=0.9 near-dups
-    is (1-s)^8 ~ 1e-8 — deterministic in practice, so the DuckDB
-    exact all-pairs oracle doubles as a standing recall assertion.
-
-    At 100 TB: candidate generation is one slim (id, table, hash)
-    self-join (collision-bound), and the verify join touches candidate
-    pairs only — shingle sets and feature vectors never cross-join.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-    from pyspark.ml.functions import vector_to_array
-
-    # same featurization as minhash_near_dup_pairs (let-bound token
-    # array; shingle array built in its own Project for HashingTF)
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    base = df.select(F.col(id_col), toks.alias("_toks"))
-    gen = F.transform(
-        F.sequence(F.lit(1), F.size(F.col("_toks")) - (n - 1)),
-        lambda i: F.array_join(F.slice(F.col("_toks"), i, n), " "),
-    )
-    # filter on the TOKEN count, BEFORE the generator projection —
-    # row-identical to the former filter(size(sh) > 0) over a guarded
-    # gen (gen yields size-n+1 >= 1 shingles iff size >= n), but the
-    # optimizer pushed that filter below the Project, substituting the
-    # whole shingle-HOF into the predicate: the generator ran TWICE
-    # per row and fell off codegen (measured 3.48 -> 0.41 s noop at
-    # sf0.1, optimization round 13)
-    docs = base.filter(F.size("_toks") >= n).select(
-        F.col(id_col), gen.alias("sh")
-    )
-    # the shingle-array frame feeds BOTH the featurize path and the
-    # verify stage's (id, shingle) explode below — materialize it once
-    # so the corpus is tokenized exactly once per query
-    docs = _shared(docs)
-    tf = HashingTF(
-        inputCol="sh", outputCol="features",
-        numFeatures=num_features, binary=True,
-    )
-    feat = _shared(tf.transform(docs).select(F.col(id_col), "features"))
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes",
-        numHashTables=num_hash_tables, seed=42,
-    )
-    model = lsh.fit(feat)
-    # slim (id, table, hash) bands — each table's hash is a 1-dim
-    # vector; both self-join branches read ONE materialized derivation
-    bands = _shared(
-        model.transform(feat)
-        .select(F.col(id_col), F.posexplode("hashes"))
-        .select(
-            F.col(id_col),
-            F.col("pos").alias("_t"),
-            vector_to_array(F.col("col")).getItem(0).alias("_h"),
-        )
-    )
-    cand = (
-        bands.select(F.col(id_col).alias("doc_a"), "_t", "_h")
-        .join(
-            bands.select(F.col(id_col).alias("doc_b"), "_t", "_h"),
-            ["_t", "_h"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    # verify-stage shingles derive from the SAME checkpointed docs
-    # frame (explode + distinct is row-identical to
-    # _doc_shingles(df): docs holds exactly the size>=n rows, and
-    # explode of an empty array yields nothing) — no second
-    # tokenize+generate pass over the corpus
-    sh = _shared(
-        docs.select(F.col(id_col), F.explode("sh").alias("shingle"))
-        .distinct()
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("_n_sh"))
-    sh_a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    sizes_a = sizes.select(F.col(id_col).alias("doc_a"), F.col("_n_sh").alias("_na"))
-    sizes_b = sizes.select(F.col(id_col).alias("doc_b"), F.col("_n_sh").alias("_nb"))
-    return (
-        inter.join(sizes_a, "doc_a")
-        .join(sizes_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter")), 4
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def resolve_components(
     nodes: DataFrame,
     pairs: DataFrame,
@@ -993,104 +848,20 @@ def near_dup_resolve(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    method: str = "banded",
 ) -> DataFrame:
     """The keep/drop decision the dedup tier exists for: near-dup pair
     detection → connected components → one deterministic survivor
     (min id) per duplicate cluster. Returns (id, canonical_id, keep);
     filtering ``keep`` yields the deduplicated corpus.
 
-    ``method``: "banded" (default — ``minhash_banded_pairs``, the
-    100 TB path: banded candidates, exact-Jaccard verify), "exact"
-    (``ngram_jaccard_pairs`` — all pairs sharing a shingle; the
-    correctness reference, quadratic worst case), or "simhash"
-    (``simhash_near_dup_pairs`` — Hamming-distance pairs, pigeonhole
-    recall 1; ``threshold`` is ignored, the distance budget is the
-    operator's ``max_hamming`` default). Components over banded pairs
-    equal components over exact pairs whenever banding recall is 1 on
-    the above-threshold pairs (P[miss] = (1-s^r)^b per pair — and a
-    missed edge only splits a cluster if it was the sole
-    connection)."""
-    if method == "banded":
-        pairs = minhash_banded_pairs(df, id_col, text_col, n, threshold)
-    elif method == "exact":
-        pairs = ngram_jaccard_pairs(df, id_col, text_col, n, threshold)
-    elif method == "simhash":
-        pairs = simhash_near_dup_pairs(df, id_col, text_col)
-    else:
-        raise ValueError(f"unknown near-dup method: {method!r}")
+    Pairs come from the exact ``ngram_jaccard_pairs``, so a component
+    never splits on a missed edge: banded candidates (P[miss] =
+    (1-s^r)^b per pair) are close to recall 1 only well above the
+    threshold, and callers resolve at thresholds as low as 0.4."""
+    pairs = ngram_jaccard_pairs(df, id_col, text_col, n, threshold)
     return resolve_components(
         df.select(id_col), pairs, id_col=id_col, src_col="doc_a", dst_col="doc_b"
     )
-
-
-def _bit_mask(bit: int) -> int:
-    """Two's-complement long mask for a bit position (bit 63's mask is
-    Long.MIN_VALUE — ``1 << 63`` overflows the signed long literal)."""
-    v = 1 << bit
-    return v - (1 << 64) if bit == 63 else v
-
-
-def simhash_buckets(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Docs with their simhash and a 16-bit band key — candidate pairs
-    share a band (block-and-verify pattern).
-
-    Relational formulation: tokens are exploded and hashed ONCE
-    (projection under the aggregate — Catalyst keeps the hash
-    materialized per token row); the 64 bit positions are cheap
-    bit-test sum aggregates; the sign vector re-packs into a long.
-    Scale shape: one shuffle on id, same as any groupBy.
-    """
-    toks = df.select(
-        F.col(id_col), F.explode(word_tokens(text_col)).alias("_tok")
-    ).select(id_col, F.xxhash64("_tok").alias("_h"))
-    aggs = [
-        F.sum(
-            F.when(F.col("_h").bitwiseAND(F.lit(_bit_mask(b))) != 0, 1).otherwise(
-                -1
-            )
-        ).alias(f"_b{b}")
-        for b in range(64)
-    ]
-    sums = toks.groupBy(id_col).agg(*aggs)
-    sim = F.lit(0).cast("long")
-    for b in range(64):
-        sim = sim + F.when(F.col(f"_b{b}") > 0, F.lit(_bit_mask(b))).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sums.select(
-        F.col(id_col),
-        sim.alias("simhash"),
-    ).withColumn(
-        "band_lo16", F.col("simhash").bitwiseAND(F.lit(0xFFFF).cast("long"))
-    )
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 5,
-) -> DataFrame:
-    """SimHash near-dup pairs with EXACT recall: (doc_a, doc_b, hamming)
-    for every pair whose simhash Hamming distance ≤ ``max_hamming``.
-
-    Block-and-verify: the 64-bit simhash splits into ``max_hamming+1``
-    blocks — by pigeonhole, any pair within the distance budget agrees
-    EXACTLY on at least one block, so the block-key equi-join has
-    recall 1 (unlike MinHash banding's probabilistic recall); the
-    ``bit_count(xor)`` verify then removes block-collision false
-    positives. Scale shape mirrors ``minhash_banded_pairs``: the
-    banded frame carries (id, simhash, block) only, the join is
-    key-partitioned, verification is a 2-instruction projection.
-    Rows-only check: xxhash64 is engine-specific, so no SQL oracle can
-    recompute the simhashes — the pigeonhole-exactness test
-    (tests/test_dedup_ann.py) is the correctness evidence.
-    """
-    sims = simhash_buckets(df, id_col, text_col).select(id_col, "simhash")
-    return _blocked_hamming_pairs(sims, id_col, max_hamming, n_bits=64)
 
 
 def _blocked_hamming_pairs(
@@ -1106,14 +877,11 @@ def _blocked_hamming_pairs(
     offsets = [sum(widths[:i]) for i in range(nb)]
 
     def _block_value(i: int) -> Column:
-        # width 64 (max_hamming=0 → one block = the whole hash) cannot
-        # be masked: (1 << 64) - 1 overflows LongType and F.lit raises
-        # at plan build. The shifted value IS the block value then —
-        # and 63 is fine ((1 << 63) - 1 == Long.MAX_VALUE).
-        shifted = F.shiftrightunsigned("simhash", offsets[i])
-        if widths[i] >= 64:
-            return shifted
-        return shifted.bitwiseAND(F.lit((1 << widths[i]) - 1))
+        # signatures are at most 62 bits, so even the single block of
+        # max_hamming=0 has a mask that fits LongType
+        return F.shiftrightunsigned("simhash", offsets[i]).bitwiseAND(
+            F.lit((1 << widths[i]) - 1)
+        )
 
     blocks = F.array(
         *[
@@ -1158,21 +926,17 @@ def _blocked_hamming_pairs(
     ).filter(F.col("hamming") <= max_hamming)
 
 
-def simhash_near_dup_pairs_md5(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 5,
+def simhash_signatures(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """``simhash_near_dup_pairs`` twin whose token hash is the first 15
-    hex digits of ``md5(token)`` parsed to a 60-bit integer — an
+    """(id, simhash): a 60-bit SimHash per document. The token hash is
+    the first 15 hex digits of ``md5(token)`` parsed to an integer — an
     engine-agnostic hash any ANSI-SQL engine can recompute, which is
-    what makes the SimHash family SQL-oracle-checkable (the xxhash64
-    variant stays the fast engine-specific path; this twin pins its
-    semantics the same way ``winnow_fingerprints_md5`` anchors the
-    winnowing family). Same relational plan shape: hash once per
-    exploded token, 60 bit-test sum aggregates, block-and-verify join.
-    """
+    what makes the SimHash pairs SQL-oracle-checkable. Tokens are
+    exploded and hashed ONCE (projection under the aggregate); the 60
+    bit positions are bit-test sum aggregates and the sign vector
+    re-packs into a long. Scale shape: one shuffle on id, same as any
+    groupBy."""
     hv = F.conv(F.substring(F.md5(F.col("_tok")), 1, 15), 16, 10).cast("long")
     toks = df.select(
         F.col(id_col), F.explode(word_tokens(text_col)).alias("_tok")
@@ -1180,19 +944,39 @@ def simhash_near_dup_pairs_md5(
     hashed = toks.select(id_col, hv.alias("_h"))
     aggs = [
         F.sum(
-            F.when(
-                F.col("_h").bitwiseAND(F.lit(_bit_mask(b))) != 0, 1
-            ).otherwise(-1)
+            F.when(F.col("_h").bitwiseAND(F.lit(1 << b)) != 0, 1).otherwise(-1)
         ).alias(f"_b{b}")
         for b in range(60)
     ]
     sums = hashed.groupBy(id_col).agg(*aggs)
     sim = F.lit(0).cast("long")
     for b in range(60):
-        sim = sim + F.when(
-            F.col(f"_b{b}") > 0, F.lit(_bit_mask(b))
-        ).otherwise(F.lit(0).cast("long"))
-    sims = sums.select(F.col(id_col), sim.alias("simhash"))
+        sim = sim + F.when(F.col(f"_b{b}") > 0, F.lit(1 << b)).otherwise(
+            F.lit(0).cast("long")
+        )
+    return sums.select(F.col(id_col), sim.alias("simhash"))
+
+
+def simhash_near_dup_pairs_md5(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 5,
+) -> DataFrame:
+    """SimHash near-dup pairs with EXACT recall: (doc_a, doc_b, hamming)
+    for every pair whose ``simhash_signatures`` Hamming distance is at
+    most ``max_hamming``.
+
+    Block-and-verify: the signature splits into ``max_hamming+1``
+    blocks — by pigeonhole, any pair within the distance budget agrees
+    EXACTLY on at least one block, so the block-key equi-join has
+    recall 1 (unlike MinHash banding's probabilistic recall); the
+    ``bit_count(xor)`` verify then removes block-collision false
+    positives. Scale shape mirrors ``minhash_banded_pairs``: the
+    banded frame carries (id, simhash, block) only, the join is
+    key-partitioned, verification is a 2-instruction projection.
+    """
+    sims = simhash_signatures(df, id_col, text_col)
     return _blocked_hamming_pairs(sims, id_col, max_hamming, n_bits=60)
 
 
@@ -1282,108 +1066,6 @@ def minhash_banded_pairs(
             "doc_b",
             F.round(
                 F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter")), 4
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def prefix_filtered_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs via PREFIX FILTERING (the AllPairs/
-    PPJoin family, Bayardo et al. WWW'07) — result-identical to
-    ``ngram_jaccard_pairs`` but joins only on each document's prefix
-    instead of its full shingle set.
-
-    Theorem: order all shingles by one global total order (document
-    frequency ASC, shingle ASC as tie-break — rare shingles first).
-    If Jaccard(A, B) >= t then |A∩B| >= ceil(t·max(|A|,|B|)) — so A
-    and B must share at least one shingle among the FIRST
-    p(x) = |x| − ceil(t·|x|) + 1 shingles of each (were all shared
-    shingles outside both prefixes, the intersection couldn't reach
-    that bound). Candidates therefore come from an equi-join on
-    prefix shingles only; with t = 0.5 that halves each doc's join
-    rows, and because prefixes hold the RAREST shingles, the join's
-    per-key fanout collapses — the hot-stopword key that degenerates
-    the full inverted-index self-join to all-pairs never enters the
-    prefix. A size filter (t·|A| <= |B|) prunes further before exact
-    verification by set intersection on the original shingle strings
-    (string arrays keep verification bit-exact with the SQL oracle; at
-    100 TB hash the shingles to 64-bit first and verify on hashes —
-    collision odds ~|d|²/2⁶⁴ per pair).
-
-    Scale shape: shuffle = prefix rows (≈ (1−t)·shingle rows) for the
-    candidate join + one array-build groupBy; verification is
-    candidate-local (array_intersect, JVM-side), never a second pass
-    over the corpus.
-
-    Measured crossover (local[32]): on the synthetic fixture corpus
-    (uniform shingle frequencies, no stopword skew) the plain
-    inverted-index join wins (5.7 s vs 15.6 s at sf0.1) because prefix
-    filtering's extra shuffles (df-rank, set-build) buy nothing when no
-    key is hot; on natural text whose stopword shingles degenerate the
-    full self-join quadratically, the prefix join is the exact-
-    semantics survivor. ``curate_corpus`` therefore defaults to the
-    plain join; switch on corpora with skewed shingle frequencies.
-    """
-    sh = _shared(_doc_shingles(df, id_col, text_col, n))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    w = W.partitionBy(id_col).orderBy(F.col("_df").asc(), F.col("shingle").asc())
-    ordered = (
-        sh.join(dfreq, "shingle")
-        .withColumn("_rn", F.row_number().over(w))
-        .join(sizes, id_col)
-        .withColumn(
-            "_plen",
-            F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1,
-        )
-    )
-    prefix = ordered.filter(F.col("_rn") <= F.col("_plen")).select(
-        id_col, "shingle", "n_sh"
-    )
-    a = prefix.select(
-        F.col(id_col).alias("doc_a"), "shingle", F.col("n_sh").alias("n_a")
-    )
-    b = prefix.select(
-        F.col(id_col).alias("doc_b"), "shingle", F.col("n_sh").alias("n_b")
-    )
-    cands = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        # length filter: Jaccard >= t forces t·|A| <= |B| and t·|B| <= |A|
-        .filter(
-            (F.lit(threshold) * F.col("n_a") <= F.col("n_b"))
-            & (F.lit(threshold) * F.col("n_b") <= F.col("n_a"))
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sets = sh.groupBy(id_col).agg(F.collect_set("shingle").alias("_set"))
-    sa = sets.select(
-        F.col(id_col).alias("doc_a"),
-        F.col("_set").alias("_set_a"),
-        F.size("_set").alias("n_a"),
-    )
-    sb = sets.select(
-        F.col(id_col).alias("doc_b"),
-        F.col("_set").alias("_set_b"),
-        F.size("_set").alias("n_b"),
-    )
-    n_common = F.size(F.array_intersect("_set_a", "_set_b"))
-    return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                n_common / (F.col("n_a") + F.col("n_b") - n_common), 4
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)

@@ -348,38 +348,42 @@ def lsh_ann_batch_verified(
     bucket_length: float = 1.0,
     num_hash_tables: int = 16,
 ) -> DataFrame:
-    """Batch ANN with an exact re-rank — ``lsh_ann_verified_topk``'s
-    query-SET form: ``approxSimilarityJoin`` on L2-NORMALIZED vectors
-    generates same-bucket candidate pairs, then EXACT cosine on the
-    RAW vectors re-ranks each query's candidates and keeps the top k.
+    """Batch ANN with an exact re-rank, the serving pattern every vector
+    store runs, for a query SET: LSH on L2-NORMALIZED vectors generates
+    same-bucket candidate pairs, then EXACT cosine on the RAW vectors
+    re-ranks each query's candidates and keeps the top k.
 
     Output (query_id, neighbor_id, cosine) equals the brute-force
     ``cosine_topk_batch`` whenever every true top-k neighbor collides
-    with its query in at least one of the 16 OR-amplified hash tables
-    (per-neighbor miss ~1e-6 at w=1.0 on the unit sphere; see
-    ``lsh_ann_verified_topk``'s analysis) — so the exact-batch oracle
-    doubles as a standing recall assertion: a bucket miss surfaces as
-    a hash mismatch instead of being assumed away.
+    with its query in at least one of the 16 OR-amplified hash tables.
+    The per-table collision probability is ~0.58 at unit-sphere
+    distance 1.13 with w=1.0, so the combined per-neighbor miss is
+    ~1e-6 — which makes this the rare APPROXIMATE operator that is
+    still oracle-checkable: the exact-batch oracle doubles as a
+    standing recall assertion, and a bucket miss surfaces as a hash
+    mismatch instead of being assumed away.
 
     At scale: hashing is one map pass over corpus+queries, candidate
     generation is a bucket equi-join (cost ~ collisions, never
     |queries|·|corpus|), and the exact re-rank touches candidate pairs
-    only. The normalization matters: Euclidean LSH on unnormalized
-    embeddings loses cosine-near but long vectors (measured — see
-    ``lsh_ann_verified_topk``).
+    only. The normalization matters: Euclidean LSH ranks by distance,
+    and on unnormalized embeddings a cosine-near but long vector is
+    Euclidean-far — no amount of overfetch recovers it (measured:
+    single-query recall stuck at 4/5 on sf0.01 at any k). On the unit
+    sphere ||a-b||^2 = 2(1-cos), so Euclidean candidates ARE cosine
+    candidates.
 
-    r12 optimization: the candidate stage is NATIVE BRP-LSH (seeded
-    unit projections via one Arrow-BLAS matmul per batch, posexplode
-    to (table, bucket), slim integer equi-join + distinct) instead of
-    MLlib ``approxSimilarityJoin``, which shuffled and DISTINCTed fat
-    rows (raw + unit + ml-vector + 16 hash vectors per side) and ran a
+    The candidate stage is NATIVE BRP-LSH (seeded unit projections via
+    one Arrow-BLAS matmul per batch, posexplode to (table, bucket),
+    slim integer equi-join + distinct) instead of MLlib
+    ``approxSimilarityJoin``, which shuffled and DISTINCTed fat rows
+    (raw + unit + ml-vector + 16 hash vectors per side) and ran a
     per-pair Scala distance UDF it then threw away — measured 6.9 s of
-    this query's 10.5 s at sf0.1 (the MLlib LSH surface stays priced
-    by ``minhash_lsh_verified_pairs``). Same table count, same bucket
-    width, same unit-direction geometry ⇒ the documented per-neighbor
-    miss analysis is unchanged, and the exact re-rank on raw vectors
-    is expression-identical, so the output still equals brute force
-    (re-verified against the exact oracle at sf0.001/0.01/0.1).
+    this query's 10.5 s at sf0.1. Same table count, same bucket width,
+    same unit-direction geometry ⇒ the miss analysis above holds, and
+    the exact re-rank on raw vectors is expression-identical, so the
+    output still equals brute force (verified against the exact oracle
+    at sf0.001/0.01/0.1).
     """
     cand_bkts = _brp_bucket_udf(num_hash_tables, bucket_length, seed=42)
     c_e = df.select(
@@ -433,73 +437,6 @@ def lsh_ann_batch_verified(
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .drop("rn")
-    )
-
-
-def lsh_ann_verified_topk(
-    df: DataFrame,
-    query_id: int,
-    k: int = 5,
-    overfetch: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 1.0,
-    num_hash_tables: int = 16,
-) -> DataFrame:
-    """ANN with an exact re-rank — the serving pattern every vector
-    store runs: LSH prunes the corpus to ``k*overfetch`` candidates,
-    then EXACT cosine re-ranks the candidates and keeps the top ``k``.
-
-    Output (``id_col``, cosine) is identical to the brute-force
-    ``cosine_topk`` whenever the true top-k survive the candidate
-    stage — with 16 OR-amplified hash tables (per-table collision
-    probability ~0.58 at unit-sphere distance 1.13 with w=1.0 →
-    combined miss ~1e-6) and a 10x overfetch, the per-neighbor miss
-    probability is negligible, which makes this the rare APPROXIMATE
-    operator that is still oracle-checkable: the DuckDB oracle is the
-    exact top-k, and a hash mismatch IS a recall failure, surfaced
-    rather than assumed (verified exact-equal at sf0.001/0.01/0.1).
-
-    At scale the candidate stage cost is bucket-collision bound
-    (~O(corpus) hashing + one bucketed probe, never corpus x queries),
-    and the re-rank touches only k*overfetch rows.
-
-    The candidate stage runs on L2-NORMALIZED vectors: Euclidean LSH
-    ranks by distance, and on unnormalized embeddings a cosine-near
-    but long vector is Euclidean-far — no amount of overfetch recovers
-    it (measured: recall stuck at 4/5 on sf0.01 at any k). On the unit
-    sphere ||a-b||^2 = 2(1-cos), so Euclidean candidates ARE cosine
-    candidates.
-    """
-    unit = _unit_normalized(df, vec_col)
-    cand = lsh_topk_candidates(
-        unit,
-        query_id,
-        k=k * overfetch,
-        id_col=id_col,
-        vec_col="_unit",
-        bucket_length=bucket_length,
-        num_hash_tables=num_hash_tables,
-    ).select(id_col)
-    # query norm let-bound on the 1-row broadcast side (was re-folded
-    # per candidate row) — same IEEE ops, values unchanged
-    q = df.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("_qv"), l2_norm(vec_col).alias("_qn")
-    )
-    return (
-        df.join(F.broadcast(cand), id_col, "left_semi")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != query_id)
-        .select(
-            F.col(id_col),
-            F.round(
-                dot_product(vec_col, "_qv")
-                / (l2_norm(vec_col) * F.col("_qn")),
-                4,
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
     )
 
 
@@ -1106,7 +1043,6 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "arrow",
 ) -> DataFrame:
     """Map-only PQ encoding: (id, codes array<int>, _qe2 double) — per
     subspace the argmin-distance centroid id, plus the vector's total
@@ -1115,105 +1051,53 @@ def pq_encode(
     the search tier CERTIFIABLY exact: by the triangle inequality the
     true distance of x to any query lies within ±√_qe2 of the ADC
     distance, so ``pq_ann_verified_topk`` can bound its candidate set
-    instead of gambling on a fixed overfetch. No join, no shuffle
-    either way; encoding 100 TB is a pure scan.
+    instead of gambling on a fixed overfetch. No join, no shuffle;
+    encoding 100 TB is a pure scan.
 
-    ``mode="arrow"`` (default): one Arrow-batched pandas_udf computes
-    all m argmins per batch as a single ``einsum`` against the
-    codebook tensor (B×m×k distance block via the ‖c‖²−2x·c
-    expansion) — BLAS does the m·k·sub flops per row at memory
-    bandwidth. The expression form builds m·k_codes literal
-    ``aggregate(zip_with(...))`` lambdas (128 at the defaults), whose
-    per-row interpreted evaluation and plan-compile cost measure ~5×
-    the Arrow path even at sf0.1.
-    ``mode="expr"``: the pure-JVM struct-min over codebook literals
-    (the ``_nearest_cells_expr`` idiom) — zero Python in the plan,
-    kept as the cross-check twin (ties break identically: numpy
-    argmin and the (d2, code) struct-min both pick the lowest code;
-    the two modes' ``_qe2`` agree to FP rounding — the expr form sums
-    (a−b)² directly while arrow expands ‖x‖²+‖c‖²−2x·c — which the
-    search tier's certification pad absorbs).
+    One Arrow-batched pandas_udf computes all m argmins per batch as a
+    single ``einsum`` against the codebook tensor (B×m×k distance block
+    via the ‖c‖²−2x·c expansion) — BLAS does the m·k·sub flops per row
+    at memory bandwidth. Ties break to the lowest code (numpy argmin).
+    A JVM expression form (m·k_codes literal ``aggregate(zip_with(...))``
+    lambdas, 128 at the defaults) measured ~5× slower even at sf0.1:
+    per-row interpreted evaluation plus plan-compile cost.
     """
     import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
-    if mode == "arrow":
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
+    C = np.asarray(codebooks, dtype=np.float64)  # m × k × sub
+    m_, _, sub_ = C.shape
+    c2 = (C**2).sum(axis=2)  # m × k
 
-        C = np.asarray(codebooks, dtype=np.float64)  # m × k × sub
-        m_, _, sub_ = C.shape
-        c2 = (C**2).sum(axis=2)  # m × k
+    # no type hints: `from __future__ import annotations` turns them
+    # into strings, which pandas_udf's inference rejects — the bare
+    # signature selects the scalar eval type directly
+    @pandas_udf("struct<codes:array<int>,qe2:double>")
+    def _codes(v):
+        X = np.asarray(v.tolist(), dtype=np.float64)
+        if X.size == 0:
+            return pd.DataFrame({"codes": [], "qe2": []})
+        Xs = X.reshape(X.shape[0], m_, sub_)
+        dots = np.einsum("bms,mks->bmk", Xs, C)
+        part = c2[None, :, :] - 2.0 * dots  # ‖c‖²−2x·c per (b,m,k)
+        codes = part.argmin(axis=2)
+        # add the omitted ‖x_j‖² back to get the true min distance per
+        # subspace; clamp tiny FP negatives at 0
+        x2 = (Xs**2).sum(axis=2)  # b × m
+        qe2 = np.maximum(part.min(axis=2) + x2, 0.0).sum(axis=1)
+        return pd.DataFrame({"codes": list(codes.astype(np.int32)), "qe2": qe2})
 
-        # no type hints: `from __future__ import annotations` turns
-        # them into strings, which pandas_udf's inference rejects —
-        # the bare signature selects the scalar eval type directly
-        @pandas_udf("struct<codes:array<int>,qe2:double>")
-        def _codes(v):
-            X = np.asarray(v.tolist(), dtype=np.float64)
-            if X.size == 0:
-                return pd.DataFrame({"codes": [], "qe2": []})
-            Xs = X.reshape(X.shape[0], m_, sub_)
-            dots = np.einsum("bms,mks->bmk", Xs, C)
-            part = c2[None, :, :] - 2.0 * dots  # ‖c‖²−2x·c per (b,m,k)
-            codes = part.argmin(axis=2)
-            # add the omitted ‖x_j‖² back to get the true min distance
-            # per subspace; clamp tiny FP negatives at 0
-            x2 = (Xs**2).sum(axis=2)  # b × m
-            qe2 = np.maximum(part.min(axis=2) + x2, 0.0).sum(axis=1)
-            return pd.DataFrame(
-                {"codes": list(codes.astype(np.int32)), "qe2": qe2}
-            )
-
-        # single-aliased struct then field projection: the UDF runs
-        # once per row (two direct _codes(...) calls would be two
-        # ArrowEvalPython columns)
-        return df.select(
-            F.col(id_col),
-            _codes(F.col(vec_col).cast("array<double>")).alias("_pq"),
-        ).select(
-            F.col(id_col),
-            F.col("_pq.codes").alias("codes"),
-            F.col("_pq.qe2").alias("_qe2"),
-        )
-    if mode != "expr":
-        raise ValueError(f"pq_encode: unknown mode {mode!r}")
-    sub = len(codebooks[0][0])
-    best_cols = []
-    for j, book in enumerate(codebooks):
-        subvec = F.slice(
-            F.col(vec_col).cast("array<double>"), j * sub + 1, sub
-        )
-        structs = [
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        subvec,
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
-                F.lit(i).alias("code"),
-            )
-            for i, c in enumerate(book)
-        ]
-        best_cols.append(F.array_min(F.array(*structs)).alias(f"_b{j}"))
-    # two-step select: the struct-min itself is a multi-referenced
-    # alias, so the m HOF folds evaluate once per subspace — a plain
-    # getField pair on the same expression would re-run the fold
-    # (codegen does not CSE higher-order functions)
-    staged = df.select(F.col(id_col), *best_cols)
-    qe2 = None
-    for j in range(len(codebooks)):
-        term = F.greatest(F.col(f"_b{j}.d2"), F.lit(0.0))
-        qe2 = term if qe2 is None else qe2 + term
-    return staged.select(
+    # single-aliased struct then field projection: the UDF runs once
+    # per row (two direct _codes(...) calls would be two ArrowEvalPython
+    # columns)
+    return df.select(
         F.col(id_col),
-        F.array(
-            *[F.col(f"_b{j}.code") for j in range(len(codebooks))]
-        ).alias("codes"),
-        qe2.alias("_qe2"),
+        _codes(F.col(vec_col).cast("array<double>")).alias("_pq"),
+    ).select(
+        F.col(id_col),
+        F.col("_pq.codes").alias("codes"),
+        F.col("_pq.qe2").alias("_qe2"),
     )
 
 
@@ -1230,7 +1114,7 @@ def pq_ann_verified_topk(
     index=None,
 ) -> DataFrame:
     """PQ asymmetric-distance search with an exact re-rank — the third
-    verified ANN tier next to LSH (``lsh_ann_verified_topk``) and IVF
+    verified ANN tier next to LSH (``lsh_ann_batch_verified``) and IVF
     (``ivf_search``): encode the L2-NORMALIZED corpus to m-code words,
     prune by the query's per-subspace lookup table (ADC), then EXACT
     cosine re-rank on the RAW vectors picks the top k.
@@ -1411,177 +1295,26 @@ def quantize_embeddings(
     )
 
 
-def _lsh_bucket_fanout(model, feat: DataFrame, hash_col: str = "_hashes") -> float:
-    """Expected per-row, per-table candidate fanout of an LSH model:
-    Σ c² / Σ c over the (table, bucket) size histogram — the average
-    bucket size weighted by membership, i.e. how many same-bucket rows
-    a random corpus row joins with in one hash table (including
-    itself). ~1–2 means the buckets prune; ~n means one giant bucket
-    and the candidate join is the cartesian product.
-
-    Cost: one ``transform`` + explode + groupBy-count with map-side
-    combine — linear scan, no join. At 100 TB this probe is noise next
-    to the O(n²) join it can veto.
-    """
-    from pyspark.ml.functions import vector_to_array
-
-    hashed = model.transform(feat).select(
-        F.posexplode(F.col(hash_col)).alias("_t", "_h")
-    )
-    sizes = hashed.groupBy(
-        "_t", vector_to_array(F.col("_h")).getItem(0).alias("_b")
-    ).count()
-    row = sizes.agg(
-        F.sum(F.col("count") * F.col("count")).alias("sq"),
-        F.sum("count").alias("tot"),
-    ).collect()[0]
-    return float(row["sq"]) / float(row["tot"]) if row["tot"] else 0.0
-
-
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "exact",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 8,
-    max_bucket_fanout: float = 64.0,
+    tile_mem_bytes: int = 32 << 20,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (doc_a, doc_b, cosine)
     with cosine ≥ threshold and doc_a < doc_b — the embedding-space
     member of the dedup tier (exact text / n-gram Jaccard / MinHash /
-    SimHash are the lexical members).
+    SimHash are the lexical members). Exact all-pairs semantics,
+    executed as a broadcast matrix product.
 
-    ``method="exact"``: upper-triangle self-join scoring every pair —
-    O(n²) per-pair expression evaluation, the correctness reference
-    (and the oracle-checked form).
-    ``method="blas"``: identical exact semantics, executed as a
-    broadcast matrix product — the corpus matrix rides a guarded
-    broadcast and every partition computes column-tiled chunk @ corpusᵀ
-    BLAS calls inside ``mapInPandas`` (dense intermediates capped per
-    tile), emitting only above-threshold pairs. Still O(n²) flops but
-    ~50× fewer per-flop overheads than the expression form; the right
-    shape while the corpus matrix fits a broadcast (2M × 64 float64 =
-    1 GB, the enforced default ceiling). Beyond that, or whenever
-    the threshold leaves a real distance gap, use ``method="lsh"``:
-    BucketedRandomProjectionLSH approxSimilarityJoin generates
-    candidates within Euclidean ``sqrt(2 − 2·threshold)`` (the
-    cosine↔L2 identity on unit-norm embeddings), then the EXACT cosine
-    filter runs on candidates only — no false positives, recall
-    bounded by bucket misses. Note LSH prunes only when near-dups are
-    actually NEAR (threshold ≳ 0.8, the production regime): at low
-    thresholds the candidate radius approaches the typical random-pair
-    distance and every bucket collides — measured at threshold 0.42 on
-    this corpus the LSH path costs the same as exact.
-
-    The degenerate regime is GUARDED, not assumed away: before the
-    candidate join, a linear-cost probe (:func:`_lsh_bucket_fanout`)
-    measures the per-row bucket fanout from the (table, bucket) size
-    histogram. If it exceeds ``max_bucket_fanout`` the candidate join
-    would be ~all-pairs, so the call warns loudly (``RuntimeWarning``
-    with the measured fanout, so the caller can re-tune
-    ``bucket_length`` / ``num_hash_tables``) and falls back to the
-    exact BLAS tier — semantics are identical, the output is the exact
-    pair set.
-    """
-    if method == "blas":
-        return _embedding_pairs_blas(df, threshold, id_col, vec_col)
-    # norms let-bound once per VECTOR (a Project below the pair join)
-    # instead of re-folded per PAIR: 2n folds replace 2n² — same IEEE
-    # division, values unchanged
-    a = df.select(
-        F.col(id_col).alias("doc_a"),
-        F.col(vec_col).alias("_va"),
-        l2_norm(vec_col).alias("_na"),
-    )
-    b = df.select(
-        F.col(id_col).alias("doc_b"),
-        F.col(vec_col).alias("_vb"),
-        l2_norm(vec_col).alias("_nb"),
-    )
-    if method == "exact":
-        cand = a.join(b, F.col("doc_a") < F.col("doc_b"))
-    elif method == "lsh":
-        from pyspark.ml.feature import BucketedRandomProjectionLSH
-
-        import math
-
-        feat = _to_ml_vector(df, vec_col, "_features")
-        lsh = BucketedRandomProjectionLSH(
-            inputCol="_features",
-            outputCol="_hashes",
-            bucketLength=bucket_length,
-            numHashTables=num_hash_tables,
-            seed=42,
-        )
-        model = lsh.fit(feat)
-        fanout = _lsh_bucket_fanout(model, feat)
-        if fanout > max_bucket_fanout:
-            import warnings
-
-            warnings.warn(
-                f"embedding_near_dup_pairs: degenerate LSH buckets "
-                f"(fanout {fanout:.1f} > {max_bucket_fanout:.1f}); "
-                f"falling back to the exact BLAS tier",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return _embedding_pairs_blas(df, threshold, id_col, vec_col)
-        max_dist = math.sqrt(max(2.0 - 2.0 * threshold, 0.0))
-        joined = model.approxSimilarityJoin(feat, feat, max_dist, distCol="_d")
-        # per-vector norms are LET-BOUND per candidate pair in the
-        # projection below the join output (ADVICE r12: they are NOT
-        # computed pre-join on this branch — approxSimilarityJoin
-        # consumes its own featurized frames, so the saving here is
-        # only that each pair's two norm folds are not duplicated
-        # across the filter and the select; the 2n-vs-2n² pre-join
-        # binding applies to the exact tier, not this one)
-        cand = joined.filter(
-            F.col(f"datasetA.{id_col}") < F.col(f"datasetB.{id_col}")
-        ).select(
-            F.col(f"datasetA.{id_col}").alias("doc_a"),
-            F.col(f"datasetA.{vec_col}").alias("_va"),
-            F.col(f"datasetB.{id_col}").alias("doc_b"),
-            F.col(f"datasetB.{vec_col}").alias("_vb"),
-        ).select(
-            "doc_a",
-            "_va",
-            "doc_b",
-            "_vb",
-            l2_norm("_va").alias("_na"),
-            l2_norm("_vb").alias("_nb"),
-        )
-    else:
-        raise ValueError(f"unknown embedding near-dup method: {method!r}")
-    cos = dot_product("_va", "_vb") / (F.col("_na") * F.col("_nb"))
-    # threshold on the raw cosine (rounding only for display): the two
-    # engines' float folds agree to ~1e-15, and the corpus has no pair
-    # within 1e-5 of the default threshold — filtering rounded values
-    # would instead make .00005-boundary behavior engine-dependent
-    return (
-        cand.select("doc_a", "doc_b", cos.alias("_cos"))
-        .filter(F.col("_cos") >= threshold)
-        .select("doc_a", "doc_b", F.round("_cos", 4).alias("cosine"))
-    )
-
-
-def _embedding_pairs_blas(
-    df: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    max_broadcast_rows: int = 2_000_000,
-    tile_mem_bytes: int = 32 << 20,
-) -> DataFrame:
-    """Exact all-pairs cosine via broadcast matrix product.
-
-    The (id, vector) corpus is collected through ``safe_collect`` and
+    The (id, vector) corpus is collected through ``safe_to_pandas`` and
     broadcast once; each ``mapInPandas`` batch of corpus rows computes
     ``chunk @ corpusᵀ`` (dgemm — BLAS does n·d flops at memory
-    bandwidth instead of one Catalyst lambda-chain per pair) and emits
-    the above-threshold upper-triangle pairs. Map-only: no shuffle at
-    all; the only data movement is the one broadcast.
+    bandwidth instead of one Catalyst lambda-chain per pair, ~50×
+    fewer per-flop overheads than a self-join expression form) and
+    emits the above-threshold upper-triangle pairs. Map-only: no
+    shuffle at all; the only data movement is the one broadcast.
 
     Memory bounds, explicitly: the DENSE cosine block for a batch of B
     rows against the full corpus is 8·B·n bytes — at B≈10K Arrow rows
@@ -1594,10 +1327,15 @@ def _embedding_pairs_blas(
     same sizing lesson ml/knn.py's distance block learned, where 256 MB
     blocks cost 22x on the first call) and hits are emitted per tile,
     so peak executor memory is broadcast + one tile regardless of
-    corpus size. The remaining
-    ceiling is the broadcast itself — ``max_broadcast_rows`` defaults
-    to 2M rows (2M × 64 dims × 8 B = 1 GB), the honest bound for this
-    path; beyond it use the LSH/banded candidates instead.
+    corpus size. The remaining ceiling is the broadcast itself: 2M
+    rows (2M × 64 dims × 8 B = 1 GB); above it the collect guard
+    raises instead of running.
+
+    LSH candidates do not replace this path on embeddings: at the
+    registered threshold the candidate radius approaches the typical
+    random-pair distance, and BRP buckets on isotropic 64-dim data
+    collide for most far pairs at any recall-preserving bucket width
+    (measured per-row fanout 227-1000 across bucket_length 0.05-2.0).
     """
     import numpy as np
     import pandas as pd
@@ -1606,8 +1344,7 @@ def _embedding_pairs_blas(
     # pickled-row collect of the same frame, values bit-identical
     # (float32→float64 widening is exact on both paths)
     pdf0 = safe_to_pandas(
-        df.select(F.col(id_col), F.col(vec_col)),
-        max_rows=max_broadcast_rows,
+        df.select(F.col(id_col), F.col(vec_col)), max_rows=2_000_000
     )
     ids = np.array(pdf0[id_col].to_numpy(), dtype=np.int64)
     mat = np.array(pdf0[vec_col].tolist(), dtype=np.float64)
@@ -1647,9 +1384,9 @@ def _embedding_pairs_blas(
                 )
 
     out_schema = "doc_a long, doc_b long, cosine double"
-    # rounding happens in a Spark projection so the blas and expression
-    # paths share ONE rounding function (F.round, HALF_UP) — np.round's
-    # half-to-even would diverge at .xxxx5 boundaries
+    # rounding happens in a Spark projection (F.round, HALF_UP, the
+    # oracle's rounding) — np.round's half-to-even would diverge at
+    # .xxxx5 boundaries
     return (
         df.select(F.col(id_col), F.col(vec_col))
         .mapInPandas(score, out_schema)
@@ -1662,17 +1399,14 @@ def embedding_near_dup_resolve(
     threshold: float = 0.42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "blas",
 ) -> DataFrame:
     """Keep/drop decision over embedding near-dup pairs: connected
     components → one deterministic survivor (min id) per cluster.
     Returns (id, canonical_id, keep) like the lexical
-    ``near_dup_resolve``. Default pair generation is the blas form —
-    exact semantics at ~20x the expression form's speed (measured 79 s
-    → 4 s at sf0.1)."""
+    ``near_dup_resolve``."""
     from .dedup import resolve_components
 
-    pairs = embedding_near_dup_pairs(df, threshold, id_col, vec_col, method)
+    pairs = embedding_near_dup_pairs(df, threshold, id_col, vec_col)
     return resolve_components(
         df.select(id_col), pairs, id_col=id_col, src_col="doc_a", dst_col="doc_b"
     )
@@ -1750,7 +1484,7 @@ def semantic_dedup_pairs(
     n²/k, and the matrix form pays ~10ns/pair where the per-pair
     HOF-expression form pays ~15µs (measured 22.8s → 3s at sf0.1).
     Stragglers are bounded by the largest cell; a pathological
-    mega-cell would need the _embedding_pairs_blas tiling.
+    mega-cell would need the embedding_near_dup_pairs tiling.
 
     Output: (doc_a, doc_b, cosine) with doc_a < doc_b, distinct
     (a pair found in two shared cells emits once).
@@ -1775,7 +1509,7 @@ def semantic_dedup_pairs(
     def _cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         # one BLAS product per cell — the published SemDeDup kernel.
         # |cell| is bounded (~n/k by construction); a pathological
-        # mega-cell would need tiling like _embedding_pairs_blas, but
+        # mega-cell would need tiling like embedding_near_dup_pairs, but
         # the quantizer's whole job is to prevent that.
         ids = pdf["_id"].to_numpy()
         mat = np.array(pdf["_v"].tolist(), dtype=np.float64)

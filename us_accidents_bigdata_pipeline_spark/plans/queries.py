@@ -1134,37 +1134,6 @@ def q_repetition_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "ngram_jaccard_pairs",
-    r"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-                  FROM documents),
-       sh AS (SELECT DISTINCT doc_id,
-                     toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-              FROM t, UNNEST(generate_series(1, greatest(len(toks) - 2, 0)))
-                   AS u(i)),
-       sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                        count(*) AS n_common
-                 FROM sh a JOIN sh b
-                   ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2)
-       SELECT p.doc_a, p.doc_b,
-              round(CAST(p.n_common AS DOUBLE)
-                    / (sa.n_sh + sb.n_sh - p.n_common), 4) AS jaccard
-       FROM pairs p
-       JOIN sizes sa ON p.doc_a = sa.doc_id
-       JOIN sizes sb ON p.doc_b = sb.doc_id
-       WHERE round(CAST(p.n_common AS DOUBLE)
-                   / (sa.n_sh + sb.n_sh - p.n_common), 4) >= 0.5""",
-    doc="exact 3-gram Jaccard near-dup pairs — the correctness reference "
-    "for MinHash (operators/dedup.py::ngram_jaccard_pairs)",
-)
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
-
-
-@_register(
     "near_dup_resolve",
     r"""WITH RECURSIVE
        t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
@@ -1200,9 +1169,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_near_dup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import near_dup_resolve
 
-    return near_dup_resolve(
-        _t(spark, sf_dir, "documents"), threshold=0.5, method="exact"
-    )
+    return near_dup_resolve(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
 @_register(
@@ -1255,7 +1222,7 @@ def q_leakage_safe_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.shard import _shuffle_key
 
     resolved = near_dup_resolve(
-        _t(spark, sf_dir, "documents"), threshold=0.5, method="exact"
+        _t(spark, sf_dir, "documents"), threshold=0.5
     ).select("doc_id", "canonical_id")
     u16 = F.conv(
         F.substring(_shuffle_key("canonical_id", 42), 9, 4), 16, 10
@@ -1318,56 +1285,8 @@ def q_near_dup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import keep_best_per_cluster, near_dup_resolve
 
     docs = _t(spark, sf_dir, "documents")
-    resolved = near_dup_resolve(docs, threshold=0.5, method="exact")
+    resolved = near_dup_resolve(docs, threshold=0.5)
     return keep_best_per_cluster(docs, resolved, "n_chars")
-
-
-@_register(
-    "near_dup_resolve_banded",
-    # Same exact recursive-CTE oracle as near_dup_resolve: the banded
-    # candidate stage is oracle-verified equal to the exact pair set
-    # every round (minhash_banded_pairs passes the all-pairs Jaccard
-    # oracle — 16-band/8-row recall at the corpus's planted s>=0.5
-    # near-dups is ~1), so the resolution over banded pairs must equal
-    # the exact resolution; a banding recall failure now surfaces as
-    # an oracle mismatch instead of being assumed away.
-    r"""WITH RECURSIVE
-       t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-             FROM documents),
-       sh AS (SELECT DISTINCT doc_id,
-                     toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-              FROM t, UNNEST(generate_series(1, greatest(len(toks) - 2, 0)))
-                   AS u(i)),
-       sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       p0 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-              FROM sh a JOIN sh b
-                ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-       pairs AS (SELECT p.doc_a, p.doc_b FROM p0 p
-                 JOIN sizes sa ON p.doc_a = sa.doc_id
-                 JOIN sizes sb ON p.doc_b = sb.doc_id
-                 WHERE round(CAST(p.n_common AS DOUBLE)
-                             / (sa.n_sh + sb.n_sh - p.n_common), 4) >= 0.5),
-       edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
-                 UNION SELECT doc_b, doc_a FROM pairs),
-       reach(node, r) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT e.d, reach.r FROM reach JOIN edges e ON e.s = reach.node)
-       SELECT node AS doc_id, min(r) AS canonical_id,
-              node = min(r) AS keep
-       FROM reach GROUP BY node""",
-    doc="near-dup resolution over banded-MinHash pairs — the 100 TB "
-    "path; oracled against the EXACT-pair resolution because the "
-    "banded candidate set is itself oracle-equal to the exact pair "
-    "set (operators/dedup.py::near_dup_resolve method='banded')",
-)
-def q_near_dup_resolve_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import near_dup_resolve
-
-    return near_dup_resolve(
-        _t(spark, sf_dir, "documents"), threshold=0.5, method="banded"
-    )
 
 
 @_register(
@@ -1427,21 +1346,6 @@ def q_minhash_estimate_calibration(
 
 
 @_register(
-    "simhash_near_dup_pairs",
-    None,  # engine-specific xxhash64 simhashes → rows-only; pigeonhole
-    # exactness (recall 1 vs brute-force hamming) tested in
-    # tests/test_dedup_ann.py
-    doc="SimHash near-dup pairs: block-decomposition candidates "
-    "(recall 1 by pigeonhole) + bit_count(xor) verify "
-    "(operators/dedup.py::simhash_near_dup_pairs)",
-)
-def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import simhash_near_dup_pairs
-
-    return simhash_near_dup_pairs(_t(spark, sf_dir, "documents"), max_hamming=5)
-
-
-@_register(
     "minhash_near_dup_pairs",
     None,  # approximate (LSH) → rows-only; exact reference above
     doc="MinHash LSH near-dup candidates at scale "
@@ -1451,50 +1355,6 @@ def q_minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_near_dup_pairs
 
     return minhash_near_dup_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
-
-
-@_register(
-    "minhash_lsh_verified_pairs",
-    # Exact all-pairs Jaccard oracle (same SQL as minhash_banded_pairs):
-    # the LSH stage only GENERATES candidates at a slackened threshold;
-    # exact-Jaccard verification makes the output false-positive-free,
-    # and the 8-table OR-amplified recall at the corpus's planted
-    # s>=0.9 near-dups is 1-(1-s)^8 ~ 1-1e-8 — a hash mismatch here IS
-    # a recall failure, surfaced by the oracle instead of assumed.
-    r"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-                  FROM documents),
-       sh AS (SELECT DISTINCT doc_id,
-                     toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-              FROM t, UNNEST(generate_series(1, greatest(len(toks) - 2, 0)))
-                   AS u(i)),
-       sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                        count(*) AS n_common
-                 FROM sh a JOIN sh b
-                   ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2)
-       SELECT p.doc_a, p.doc_b,
-              round(CAST(p.n_common AS DOUBLE)
-                    / (sa.n_sh + sb.n_sh - p.n_common), 4) AS jaccard
-       FROM pairs p
-       JOIN sizes sa ON p.doc_a = sa.doc_id
-       JOIN sizes sb ON p.doc_b = sb.doc_id
-       WHERE round(CAST(p.n_common AS DOUBLE)
-                   / (sa.n_sh + sb.n_sh - p.n_common), 4) >= 0.5""",
-    doc="MLlib MinHashLSH candidates + exact-Jaccard verify — the "
-    "LSH-then-verify production dedup shape, oracle-checkable "
-    "(operators/dedup.py::minhash_lsh_verified_pairs). Measured 13.3s "
-    "vs 1.9s for minhash_banded_pairs at sf0.1: MLlib's "
-    "approxSimilarityJoin explodes per-table hash buckets where the "
-    "banded path joins on one band key — this entry exists to cover "
-    "(and price) the MLlib surface; banded is the scale path",
-)
-def q_minhash_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import minhash_lsh_verified_pairs
-
-    return minhash_lsh_verified_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.5
-    )
 
 
 @_register(
@@ -1509,8 +1369,7 @@ def q_minhash_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash-agnostic dedup structure (keeper doc_id, multiplicity) — "
     "identical under any collision-free fingerprint, so DuckDB "
     "reproduces it by grouping on an md5 of the same normalization "
-    "(fp values themselves stay engine-internal; fingerprint_dedup_md5 "
-    "is the twin that exposes them)",
+    "(fp values themselves stay engine-internal)",
 )
 def q_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textstats import fingerprint64
@@ -2016,46 +1875,18 @@ def q_lsh_ann_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
        SELECT query_id, neighbor_id, cosine FROM scored
        QUALIFY row_number() OVER (PARTITION BY query_id
                                   ORDER BY cosine DESC, neighbor_id) <= 5""",
-    doc="batch ANN with exact re-rank: approxSimilarityJoin between a "
-    "query SET and the corpus (unit-normalized, 16 hash tables) "
-    "generates candidate pairs, exact cosine re-ranks per query "
-    "(operators/similarity.py::lsh_ann_batch_verified); the raw "
+    doc="batch ANN with exact re-rank: bucketed random-projection LSH "
+    "between a query SET and the corpus (unit-normalized, 16 hash "
+    "tables) generates candidate pairs, exact cosine re-ranks per "
+    "query (operators/similarity.py::lsh_ann_batch_verified); the raw "
     "candidate join without verify is lsh_ann_batch in the same "
-    "module, recall-pinned in tests/test_similarity_ann.py",
+    "module, recall-pinned in tests/test_dedup_ann.py",
 )
 def q_lsh_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import lsh_ann_batch_verified
 
     e = _t(spark, sf_dir, "embeddings")
     return lsh_ann_batch_verified(e, e.filter(F.col("vec_id") < 10), k=5)
-
-
-@_register(
-    "lsh_ann_verified_topk",
-    # Exact top-k oracle (same SQL as knn_cosine_topk): LSH only
-    # PRUNES the corpus to k*overfetch candidates; the exact cosine
-    # re-rank makes the output identical to brute force whenever the
-    # true top-k survive pruning — so the oracle doubles as a standing
-    # recall@5 assertion on the approximate stage.
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                 FROM embeddings),
-       q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-       SELECT e.vec_id,
-              round(list_dot_product(e.v, q.qv)
-                    / (sqrt(list_dot_product(e.v, e.v))
-                       * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cosine
-       FROM e, q WHERE e.vec_id <> 0
-       ORDER BY cosine DESC, e.vec_id LIMIT 5""",
-    doc="ANN serving pattern: LSH candidate prune + exact cosine "
-    "re-rank, top-5 for query 0 "
-    "(operators/similarity.py::lsh_ann_verified_topk)",
-)
-def q_lsh_ann_verified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import lsh_ann_verified_topk
-
-    return lsh_ann_verified_topk(
-        _t(spark, sf_dir, "embeddings"), query_id=0, k=5
-    )
 
 
 @_register(
@@ -2080,8 +1911,7 @@ def q_lsh_ann_verified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "k-means++ codebooks fit on the count-capped driver-sized sample "
     "(FAISS idiom), "
     "map-only Arrow-batched BLAS encode to m-code words (einsum argmin "
-    "per batch; JVM struct-min expression twin pinned code-identical "
-    "in tests), asymmetric-distance "
+    "per batch), asymmetric-distance "
     "prune via a query LUT riding the plan as literals, exact cosine "
     "re-rank on the k*overfetch survivors — the memory-bounded ANN "
     "tier: a 100 TB float corpus becomes an m-bytes/vector code table "
@@ -2097,57 +1927,6 @@ def q_pq_ann_verified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "embedding_near_dup_pairs",
-    """SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-              round(list_cosine_similarity(a.embedding, b.embedding), 4)
-                  AS cosine
-       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-       WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.42""",
-    doc="embedding-cosine near-dup pairs, exact upper-triangle form "
-    "(operators/similarity.py::embedding_near_dup_pairs); the LSH "
-    "variant below is the at-scale candidate generator",
-)
-def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import embedding_near_dup_pairs
-
-    return embedding_near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.42, method="exact"
-    )
-
-
-@_register(
-    "embedding_near_dup_pairs_lsh",
-    # Same exact all-pairs oracle as the exact twin: the LSH stage
-    # only generates candidates within the cosine↔L2 radius on the
-    # unit-norm corpus, and the exact-cosine filter on candidates
-    # admits no false positives — so the output equals the exact pair
-    # set unless a bucket miss drops a true pair, which now surfaces
-    # as an oracle mismatch instead of being assumed away (verified
-    # set-equal at sf0.001/0.01/0.1).
-    """SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-              round(list_cosine_similarity(a.embedding, b.embedding), 4)
-                  AS cosine
-       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-       WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.42""",
-    doc="embedding-cosine near-dup pairs via approxSimilarityJoin "
-    "candidates + exact-cosine verify (no false positives); oracled "
-    "against the exact all-pairs set — a recall failure of the LSH "
-    "stage is a surfaced mismatch, not an assumption. The degenerate "
-    "bucket regime is guarded: a linear-cost fanout probe runs before "
-    "the candidate join, and at this registered threshold (0.42, "
-    "fanout ~250 > cap 64) it redirects to the exact BLAS tier with a "
-    "RuntimeWarning instead of executing an ~all-pairs join "
-    "(operators/similarity.py::embedding_near_dup_pairs method='lsh')",
-)
-def q_embedding_near_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import embedding_near_dup_pairs
-
-    return embedding_near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.42, method="lsh"
-    )
-
-
-@_register(
     "embedding_near_dup_pairs_blas",
     """SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
               round(list_cosine_similarity(a.embedding, b.embedding), 4)
@@ -2156,15 +1935,12 @@ def q_embedding_near_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFram
        WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.42""",
     doc="exact all-pairs cosine as a broadcast matrix product: "
     "mapInPandas chunk @ corpus.T, one BLAS call per batch, map-only "
-    "(operators/similarity.py::_embedding_pairs_blas) — same oracle "
-    "as the expression form, ~50x faster at sf0.1",
+    "(operators/similarity.py::embedding_near_dup_pairs)",
 )
 def q_embedding_near_dup_pairs_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import embedding_near_dup_pairs
 
-    return embedding_near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.42, method="blas"
-    )
+    return embedding_near_dup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.42)
 
 
 @_register(
@@ -2190,10 +1966,8 @@ def q_embedding_near_dup_pairs_blas(spark: SparkSession, sf_dir: str) -> DataFra
 def q_embedding_near_dup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import embedding_near_dup_resolve
 
-    # blas pair generation: exact semantics (parity-tested), so the
-    # recursive-CTE oracle over exact pairs still applies
     return embedding_near_dup_resolve(
-        _t(spark, sf_dir, "embeddings"), threshold=0.42, method="blas"
+        _t(spark, sf_dir, "embeddings"), threshold=0.42
     )
 
 
@@ -2837,22 +2611,8 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "winnow_fingerprints",
-    None,  # xxhash64 fingerprints are engine-specific → rows-only; the
-    # shared-substring guarantee is pinned in tests/test_dedup_ann.py
-    doc="winnowing (MOSS rolling-hash) document fingerprints: min hash "
-    "per sliding window of k-gram hashes "
-    "(operators/dedup.py::winnow_fingerprints)",
-)
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import winnow_fingerprints
-
-    return winnow_fingerprints(_t(spark, sf_dir, "documents"))
-
-
-@_register(
     "minhash_banded_pairs",
-    # Same oracle as the exact operator: banded candidates are verified
+    # Exact all-pairs Jaccard oracle: banded candidates are verified
     # with exact Jaccard (no false positives), and on this corpus every
     # >=0.5 pair has jaccard >= 0.9, where the banding miss probability
     # is (1-0.81)^8 ~ 2e-6 - deterministic in practice.
@@ -3048,7 +2808,7 @@ def q_dedup_provenance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import near_dup_resolve
 
     docs = _t(spark, sf_dir, "documents")
-    resolved = near_dup_resolve(docs, threshold=0.5, method="exact")
+    resolved = near_dup_resolve(docs, threshold=0.5)
     return (
         resolved.join(docs.select("doc_id", "source"), "doc_id")
         .groupBy("canonical_id")
@@ -3183,7 +2943,7 @@ def q_dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import near_dup_resolve
 
     docs = _t(spark, sf_dir, "documents")
-    resolved = near_dup_resolve(docs, threshold=0.5, method="exact")
+    resolved = near_dup_resolve(docs, threshold=0.5)
     redundant = F.when(
         F.col("doc_id") != F.col("canonical_id"), F.lit(1)
     ).otherwise(F.lit(0))
@@ -3248,9 +3008,7 @@ def q_dup_cluster_size_histogram(
 ) -> DataFrame:
     from ..operators.dedup import near_dup_resolve
 
-    resolved = near_dup_resolve(
-        _t(spark, sf_dir, "documents"), threshold=0.5, method="exact"
-    )
+    resolved = near_dup_resolve(_t(spark, sf_dir, "documents"), threshold=0.5)
     cs = resolved.groupBy("canonical_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -3551,26 +3309,6 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "fingerprint_dedup_md5",
-    r"""SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp,
-              CAST(min(doc_id) AS BIGINT) AS doc_id,
-              CAST(count(*) AS BIGINT) AS n_copies
-       FROM documents GROUP BY fp""",
-    doc="normalized-content fingerprint dedup with an engine-agnostic "
-    "md5 fingerprint (whitespace-collapsed, lowercased) — the oracled "
-    "twin of fingerprint_dedup's compact xxhash64 form",
-)
-def q_fingerprint_dedup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
-    return (
-        d.select("doc_id", fp.alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
-
-
-@_register(
     "winnow_fingerprints_md5",
     r"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
                   FROM documents),
@@ -3586,15 +3324,12 @@ def q_fingerprint_dedup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
        SELECT DISTINCT doc_id, fingerprint FROM w""",
     doc="winnowing (MOSS) with md5 as the pseudo-random gram order — "
     "engine-agnostic, so the rolling-min selection is exactly "
-    "reproducible in SQL (operators/dedup.py::winnow_fingerprints; "
-    "the xxhash64 default stays the compact production form)",
+    "reproducible in SQL (operators/dedup.py::winnow_fingerprints)",
 )
 def q_winnow_fingerprints_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import winnow_fingerprints
 
-    return winnow_fingerprints(
-        _t(spark, sf_dir, "documents"), k=3, window=4, hash_fn="md5"
-    )
+    return winnow_fingerprints(_t(spark, sf_dir, "documents"), k=3, window=4)
 
 
 @_register(
@@ -6232,27 +5967,6 @@ def q_fuzzy_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("dist", F.levenshtein("name_a", "name_b"))
         .filter(F.col("dist") == 1)
         .select("key_a", "key_b", "dist")
-    )
-
-
-@_register(
-    "jaccard_pairs_prefix_filtered",
-    REGISTRY["ngram_jaccard_pairs"].oracle,
-    doc="AllPairs/PPJoin prefix-filtered EXACT Jaccard join "
-    "(operators/dedup.py::prefix_filtered_jaccard_pairs) — same "
-    "oracle as ngram_jaccard_pairs because prefix filtering is a "
-    "candidate-pruning optimization with a correctness theorem, not "
-    "an approximation; the exact-join survivor on stopword-skewed "
-    "corpora where the plain inverted-index self-join degenerates "
-    "quadratically",
-)
-def q_jaccard_pairs_prefix_filtered(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..operators.dedup import prefix_filtered_jaccard_pairs
-
-    return prefix_filtered_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), n=3, threshold=0.5
     )
 
 
