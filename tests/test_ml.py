@@ -200,12 +200,17 @@ def test_knn_learns_separable_blobs(spark):
 def test_kmeans_sweep_and_stats(accidents_cleaned):
     geo = accidents_cleaned.select("Start_Lat", "Start_Lng", "Severity")
     feat, _ = assemble_and_scale(geo, ["Start_Lat", "Start_Lng"])
-    best_k, results = k_sweep(feat, [2, 3, 4], max_iter=20)
+    best_k, results, model = k_sweep(feat, [2, 3, 4], max_iter=20)
     assert best_k in (2, 3, 4)
     assert all(-1 <= s <= 1 for _, s, _ in results)
-    model = fit_kmeans(feat, best_k, max_iter=20)
+    # the returned winner is the model a refit of best_k would give
+    refit = fit_kmeans(feat, best_k, max_iter=20)
+    assert [c.tolist() for c in model.clusterCenters()] == [
+        c.tolist() for c in refit.clusterCenters()
+    ]
     pred = model.transform(feat)
     sil = silhouette(pred)
+    assert sil == {k: s for k, s, _ in results}[best_k]
     assert sil > 0.3  # uniform geo data still separates under kmeans
     stats = cluster_stats(pred, stat_cols=["Severity"])
     rows = stats.collect()

@@ -5,6 +5,9 @@ accidents fixture and assert metrics within tolerance bands."""
 from __future__ import annotations
 
 import json
+import os
+
+import pytest
 
 from us_accidents_bigdata_pipeline_spark.pipeline import run_complete_pipeline
 from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw_distributed
@@ -51,12 +54,94 @@ def test_complete_pipeline_golden(spark, tmp_path):
     with open(tmp_path / "out" / "pipeline_summary.json") as f:
         assert json.load(f)["rows_processed"] == st["clean"]["rows"]
 
-    # determinism: same seed + same data → same RF accuracy
-    summary2 = run_complete_pipeline(spark, raw)
-    assert (
-        summary2["stages"]["random_forest"]["metrics"]["accuracy"]
-        == st["random_forest"]["metrics"]["accuracy"]
-    )
+    # determinism: same seed + same data → the same summary, charts and
+    # sinks. The branches run concurrently, so this is also the check
+    # that their scheduling never leaks into the results.
+    summary2 = run_complete_pipeline(spark, raw, output_dir=str(tmp_path / "out2"))
+    assert _untimed(summary2) == _untimed(summary)
+    for chart in summary["charts"]:
+        again = tmp_path / "out2" / "charts" / os.path.basename(chart)
+        with open(chart, "rb") as a, open(again, "rb") as b:
+            assert a.read() == b.read(), chart
+    for sink in ("cleaned_data", "clustered_data", "model_results", "cluster_centers"):
+        rows = [
+            sorted(map(repr, spark.read.parquet(str(tmp_path / d / sink)).collect()))
+            for d in ("out", "out2")
+        ]
+        assert rows[0] == rows[1], sink
+
+
+TIMING_FIELDS = {
+    "sec", "stage_seconds", "training_time_seconds", "rows_per_sec",
+    "fit_rows_per_sec", "total_seconds",
+}
+
+
+def _untimed(doc):
+    """``doc`` without its wall-time fields, chart paths reduced to
+    file names."""
+    if isinstance(doc, dict):
+        return {
+            k: [os.path.basename(c) for c in v] if k == "charts" else _untimed(v)
+            for k, v in doc.items()
+            if k not in TIMING_FIELDS
+        }
+    if isinstance(doc, list):
+        return [_untimed(v) for v in doc]
+    return doc
+
+
+def test_failed_branch_releases_caches_and_threads(spark, monkeypatch):
+    """A failing branch's error reaches the caller only after every
+    branch has stopped, and the run leaves no frame cached and no pool
+    thread running."""
+    import threading
+
+    from us_accidents_bigdata_pipeline_spark import pipeline
+
+    def boom(*a, **k):
+        raise RuntimeError("sweep failed")
+
+    monkeypatch.setattr(pipeline, "k_sweep", boom)
+    raw = generate_accidents_raw_distributed(spark, n_rows=3000, seed=42)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    threads = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="sweep failed"):
+        run_complete_pipeline(spark, raw)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert [t for t in set(threading.enumerate()) - threads if t.is_alive()] == []
+
+
+# Spark jobs one pipeline run launches on the 3,000-row fixture, as
+# measured when the branches began to overlap and the unsampled K-Means
+# sweep's winner stopped being refit
+MAX_PIPELINE_JOBS = 169
+
+
+def test_pipeline_job_count_and_single_kmeans_fit(spark, tmp_path, monkeypatch):
+    """Guard against extra Spark jobs creeping back in, in particular a
+    second fit of the K-Means sweep's winner: below the sweep's sample
+    size every candidate is fit exactly once."""
+    from us_accidents_bigdata_pipeline_spark import pipeline
+    from us_accidents_bigdata_pipeline_spark.ml import kmeans
+
+    fits = []
+    fit_kmeans = kmeans.fit_kmeans
+
+    def counting(df, k, **kw):
+        fits.append(k)
+        return fit_kmeans(df, k, **kw)
+
+    monkeypatch.setattr(kmeans, "fit_kmeans", counting)
+    monkeypatch.setattr(pipeline, "fit_kmeans", counting)
+    raw = generate_accidents_raw_distributed(spark, n_rows=3000, seed=42)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    summary = run_complete_pipeline(spark, raw, output_dir=str(tmp_path / "out"))
+    jobs = dag.nextJobId() - before
+    assert summary["rows_processed"] <= pipeline.KMEANS_SWEEP_SAMPLE_ROWS
+    assert sorted(fits) == sorted(pipeline.KMEANS_KS)
+    assert jobs <= MAX_PIPELINE_JOBS, jobs
 
 
 def test_cli_main_runs_end_to_end(spark, tmp_path):

@@ -43,10 +43,12 @@ def silhouette(predictions: DataFrame) -> float:
 
 def k_sweep(
     df: DataFrame, ks: list[int], max_iter: int = 30, seed: int = 42
-) -> tuple[int, list[tuple[int, float, float]]]:
+) -> tuple[int, list[tuple[int, float, float]], KMeansModel]:
     """Silhouette sweep over candidate k (E7). Returns
-    (best_k, [(k, silhouette, wssse), ...]); best = argmax silhouette
-    (the reference's 'elbow', kmeans_clustering.py:133-137).
+    (best_k, [(k, silhouette, wssse), ...], best model); best = argmax
+    silhouette (the reference's 'elbow', kmeans_clustering.py:133-137).
+    The winning model is returned so that a caller that sweeps its full
+    data at its final iteration budget need not fit it again.
 
     The per-k fits are INDEPENDENT Spark jobs, so they run from
     concurrent driver threads (Spark's scheduler interleaves their
@@ -57,17 +59,17 @@ def k_sweep(
     pool only changes scheduling, never the math."""
     from concurrent.futures import ThreadPoolExecutor
 
-    def one(k: int) -> tuple[int, float, float]:
+    def one(k: int) -> tuple[tuple[int, float, float], KMeansModel]:
         model = fit_kmeans(df, k, max_iter=max_iter, seed=seed)
         pred = model.transform(df)
         sil = silhouette(pred)
         wssse = model.summary.trainingCost
-        return (k, sil, wssse)
+        return (k, sil, wssse), model
 
     with ThreadPoolExecutor(max_workers=min(len(ks), 4)) as pool:
-        results = list(pool.map(one, ks))
-    best_k = max(results, key=lambda t: t[1])[0]
-    return best_k, results
+        fits = list(pool.map(one, ks))
+    (best_k, _, _), best_model = max(fits, key=lambda f: f[0][1])
+    return best_k, [r for r, _ in fits], best_model
 
 
 def cluster_stats(

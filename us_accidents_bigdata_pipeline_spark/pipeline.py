@@ -7,6 +7,29 @@ Spark flow:
     classification → distributed kNN → K-Means geographic clustering
     → metrics/JSON export → parquet sink
 
+The stages form a small graph, not a sequence. RF and kNN read only
+the feature frame, K-Means reads only the cleaned frame, and so does
+the ``cleaned_data`` sink. After ``cleaned.count()`` and the RF
+feature assembly, three branches run at the same time from one thread
+pool (the mechanism ``ml.kmeans.k_sweep`` uses for its candidate
+fits), and the calling thread waits for all of them:
+
+    clean ─┬─ RF → kNN → model_results sink
+           ├─ geo features → K-Means sweep → clustered_data and
+           │  cluster_centers sinks
+           └─ cleaned_data sink
+                                   ──► charts → pipeline_summary.json
+
+Spark's scheduler interleaves the branches' jobs, which fills the
+cores that each small job leaves idle. Threads change scheduling,
+never results: every model and sink is the same as a sequential run's.
+Timing fields change meaning, though. Each stage's ``sec`` (and RF's
+``stage_seconds`` / ``training_time_seconds``) is a wall time measured
+while the other branches run, so the stage times overlap and do not sum
+to ``total_seconds``; ``fit_rows_per_sec`` is measured while K-Means
+runs. ``total_seconds`` ends when the branches have joined, so with an
+``output_dir`` it includes the parquet sinks but not the charts.
+
 Differences from the reference, by design (SURVEY §7):
 - one cached cleaned frame feeds all three model stages (the reference
   re-reads parquet per job);
@@ -21,6 +44,7 @@ from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +53,7 @@ from pyspark.sql import functions as F
 from .ml.features import assemble_and_scale
 from .ml.kmeans import cluster_stats, fit_kmeans, k_sweep, silhouette
 from .ml.knn import broadcast_train, knn_predict
-from .ml.metrics import evaluate_classifier
+from .ml.metrics import cluster_centers_document, evaluate_classifier, result_documents
 from .ml.rf import RFParams, feature_importance, train_with_retry
 from .operators.clean import clean
 from .operators.sample import deterministic_split
@@ -56,9 +80,11 @@ KNN_TRAIN_FRACTION = 0.1  # knn_classification.py:132
 KNN_MAX_TEST_ROWS = 100_000
 KMEANS_KS = [4, 6, 8]  # full_scale_pipeline.py:197-222
 KMEANS_MAX_ITER = 30
-# sweep on a capped sample with fewer iterations (the reference's
-# own 200K elbow-sample pattern, v2:cell47-48) - the final fit uses
-# the full data and full iteration budget
+# above KMEANS_SWEEP_SAMPLE_ROWS the sweep runs on a capped sample with
+# fewer iterations (the reference's own 200K elbow-sample pattern,
+# v2:cell47-48) and the winning k is refit on the full data at the full
+# iteration budget; at or below it the sweep already sees the full data
+# at KMEANS_MAX_ITER, so its winning model is the final model
 KMEANS_SWEEP_SAMPLE_ROWS = 200_000
 KMEANS_SWEEP_MAX_ITER = 15
 TEST_FRACTION = 0.2
@@ -72,20 +98,94 @@ def run_complete_pipeline(
 ) -> dict:
     """Run the full pipeline; returns the metrics document (the
     reference's pipeline_summary.json shape) and, when ``output_dir``
-    is set, writes cleaned parquet + clustered sample + metrics JSON."""
+    is set, writes cleaned parquet + clustered sample + metrics JSON.
+
+    Every frame the run caches is released in one ``finally``, after
+    the branches have stopped, whether the run succeeds or fails; a
+    failing branch's error is raised only once every branch is done."""
     t_start = time.perf_counter()
-    summary: dict = {"stages": {}}
+    out = Path(output_dir) if output_dir else None
+    cached: list[DataFrame] = []
+    try:
+        # -- stage 1: clean (data_cleaning.py semantics) ----------------
+        t0 = time.perf_counter()
+        cleaned = clean(raw).cache()
+        cached.append(cleaned)
+        n_clean = cleaned.count()
+        clean_doc = {"rows": n_clean, "sec": round(time.perf_counter() - t0, 2)}
 
-    # -- stage 1: clean (data_cleaning.py semantics) --------------------
-    t0 = time.perf_counter()
-    cleaned = clean(raw).cache()
-    n_clean = cleaned.count()
-    summary["stages"]["clean"] = {"rows": n_clean, "sec": round(time.perf_counter() - t0, 2)}
+        # the RF features are assembled (and their scaler fit) on this
+        # thread before any branch starts: clean() returns a lazy frame,
+        # and perfbench's tracer closes its span at the next traced
+        # call, from the thread that makes it. The calling thread then
+        # only waits, so every branch's spans nest under the run's.
+        t0 = time.perf_counter()
+        labeled = cleaned.withColumn("label", (F.col("Severity") - 1).cast("double"))
+        feat, _ = assemble_and_scale(labeled, RF_FEATURES, with_mean=False)
+        if out:
+            out.mkdir(parents=True, exist_ok=True)
+        with ThreadPoolExecutor(max_workers=3, thread_name_prefix="pipeline") as pool:
+            branches = [
+                pool.submit(_classify, spark, feat, n_clean, t0, cached, out),
+                pool.submit(_cluster, spark, cleaned, n_clean, cached, out),
+            ]
+            if out:
+                # hive-partition the cleaned output by State (SURVEY §4's
+                # named improvement): downstream per-state queries prune
+                # to one directory instead of scanning the full dataset.
+                # ~50 states → bounded partition count; no repartition
+                # first, so each task writes only the states it holds
+                # (file count = tasks × local states, acceptable at this
+                # partition cardinality).
+                branches.append(pool.submit(lambda: write_parquet(
+                    cleaned, str(out / "cleaned_data"), partition_by=["State"]
+                )))
+        # leaving the pool waited for every branch: a failed branch's
+        # error is raised only now, once none is still running
+        (rf_doc, knn_doc, rf_preds), (km_doc, clustered), *_ = [
+            b.result() for b in branches
+        ]
 
-    # -- stage 2: features + RF severity classification -----------------
-    t0 = time.perf_counter()
-    labeled = cleaned.withColumn("label", (F.col("Severity") - 1).cast("double"))
-    feat, _ = assemble_and_scale(labeled, RF_FEATURES, with_mean=False)
+        summary = {
+            "stages": {
+                "clean": clean_doc,
+                "random_forest": rf_doc,
+                "knn": knn_doc,
+                "kmeans": km_doc,
+            },
+            "total_seconds": round(time.perf_counter() - t_start, 2),
+            "rows_processed": n_clean,
+        }
+        if out:
+            # chart rendering (generate_visualizations.py parity):
+            # distributed aggregation -> tiny collect -> dependency-free SVG
+            from .operators.viz import export_chart_suite
+
+            summary["charts"] = export_chart_suite(
+                cleaned,
+                str(out / "charts"),
+                clustered=clustered.select("Start_Lat", "Start_Lng", "cluster"),
+                predictions=rf_preds.select("label", "prediction"),
+            )
+            with open(out / "pipeline_summary.json", "w") as f:
+                json.dump(summary, f, indent=2)
+        return summary
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _classify(
+    spark: SparkSession,
+    feat: DataFrame,
+    n_clean: int,
+    t0: float,
+    cached: list[DataFrame],
+    out: Path | None,
+) -> tuple[dict, dict, DataFrame]:
+    """Branch 1: RF severity classification, then distributed kNN on
+    the same split, then the ``model_results`` sink. Returns the RF and
+    kNN summary stages and the RF test predictions (for the charts)."""
     # iterative trainers pay per-task overhead per iteration: size
     # partitions by rows, not by cluster width (tuning.py rationale).
     # ~5K rows/partition floor keeps small tiers at full parallelism
@@ -104,6 +204,7 @@ def run_complete_pipeline(
         max_parts=2 * sc.defaultParallelism,
         allow_grow=True,
     ).cache()
+    cached.append(feat)
     train, test = deterministic_split(feat, "ID", TEST_FRACTION)
     n_train = train.count()
     # time the model fit separately from stage prep (scaler fit, cache
@@ -117,7 +218,7 @@ def run_complete_pipeline(
     rf_train_sec = time.perf_counter() - t0
     rf_preds = rf_model.transform(test)
     rf_metrics = evaluate_classifier(rf_preds)
-    summary["stages"]["random_forest"] = {
+    rf_doc = {
         "train_rows": n_train,
         "train_fraction_used": used_fraction,
         "training_time_seconds": round(rf_fit_sec, 2),
@@ -131,7 +232,7 @@ def run_complete_pipeline(
         ],
     }
 
-    # -- stage 3: distributed kNN --------------------------------------
+    # -- distributed kNN ------------------------------------------------
     t0 = time.perf_counter()
     knn_test = test
     n_test = test.count()
@@ -150,37 +251,66 @@ def run_complete_pipeline(
         )
     finally:
         knn_bc.destroy()
-    summary["stages"]["knn"] = {
+    knn_doc = {
         "k": KNN_K,
         "train_fraction": KNN_TRAIN_FRACTION,
         "sec": round(time.perf_counter() - t0, 2),
         "metrics": {k: round(v, 4) for k, v in knn_metrics.items()},
     }
-    # the ML feature cache is dead after kNN — release it BEFORE the
-    # K-Means stage builds its own cache, so the two never compete for
-    # storage memory (eviction/spill during the sweep threads)
+    # the feature cache is dead after kNN (the charts recompute the few
+    # test predictions they draw): release it now, not at the end of
+    # the run, so it stops holding storage memory while the K-Means
+    # branch and the charts still run
     feat.unpersist()
 
-    # -- stage 4: K-Means geographic clustering -------------------------
+    if out:
+        model_results = result_documents(
+            spark, "random_forest", rf_metrics, parameters=str(RF_PARAMS)
+        ).union(
+            result_documents(
+                spark, "knn", knn_metrics, parameters=f"k={KNN_K}"
+            )
+        )
+        write_parquet(model_results, str(out / "model_results"))
+    return rf_doc, knn_doc, rf_preds
+
+
+def _cluster(
+    spark: SparkSession,
+    cleaned: DataFrame,
+    n_clean: int,
+    cached: list[DataFrame],
+    out: Path | None,
+) -> tuple[dict, DataFrame]:
+    """Branch 2: K-Means geographic clustering, then the
+    ``clustered_data`` and ``cluster_centers`` sinks. Returns the
+    K-Means summary stage and the clustered frame (for the charts)."""
     t0 = time.perf_counter()
     geo, _ = assemble_and_scale(
         cleaned.select("ID", "Severity", *GEO_FEATURES), GEO_FEATURES
     )
     geo = right_size_partitions(geo, n_rows=n_clean).cache()
+    cached.append(geo)
     # materialize BEFORE the concurrent sweep: k_sweep's threads would
     # otherwise race to populate this cache, each recomputing the
     # lineage and contending on BlockManager puts
     geo.count()
     if n_clean > KMEANS_SWEEP_SAMPLE_ROWS:
         sweep_df = geo.sample(False, KMEANS_SWEEP_SAMPLE_ROWS / n_clean, SEED)
+        best_k, sweep, _ = k_sweep(
+            sweep_df, KMEANS_KS, max_iter=KMEANS_SWEEP_MAX_ITER, seed=SEED
+        )
+        km_model = fit_kmeans(geo, best_k, max_iter=KMEANS_MAX_ITER, seed=SEED)
+        clustered = km_model.transform(geo)
+        sil = silhouette(clustered)
     else:
-        sweep_df = geo
-    best_k, sweep = k_sweep(
-        sweep_df, KMEANS_KS, max_iter=KMEANS_SWEEP_MAX_ITER, seed=SEED
-    )
-    km_model = fit_kmeans(geo, best_k, max_iter=KMEANS_MAX_ITER, seed=SEED)
-    clustered = km_model.transform(geo)
-    sil = silhouette(clustered)
+        # the sweep's winning fit IS the final fit (same data, k, seed
+        # and iteration budget): reuse its model and silhouette
+        best_k, sweep, km_model = k_sweep(
+            geo, KMEANS_KS, max_iter=KMEANS_MAX_ITER, seed=SEED
+        )
+        clustered = km_model.transform(geo)
+        sil = {k: s for k, s, _ in sweep}[best_k]
     # per-cluster stats carry the RAW lat/lng means — the model's
     # clusterCenters() live in StandardScaler space and must never
     # reach the geographic cluster_centers sink
@@ -188,7 +318,7 @@ def run_complete_pipeline(
         clustered, stat_cols=["Severity", "Start_Lat", "Start_Lng"]
     )
     stats_rows = [r.asDict() for r in stats.orderBy("cluster").collect()]
-    summary["stages"]["kmeans"] = {
+    km_doc = {
         "best_k": best_k,
         "silhouette": round(sil, 4),
         "wssse": round(km_model.summary.trainingCost, 2),
@@ -200,54 +330,16 @@ def run_complete_pipeline(
         "cluster_stats": stats_rows,
     }
 
-    summary["total_seconds"] = round(time.perf_counter() - t_start, 2)
-    summary["rows_processed"] = n_clean
-
-    # -- stage 5: sinks (S3/S5/S7 + FIXTURES §4 result documents) -------
-    if output_dir:
-        from .ml.metrics import cluster_centers_document, result_documents
-
-        out = Path(output_dir)
-        out.mkdir(parents=True, exist_ok=True)
-        # hive-partition the cleaned output by State (SURVEY §4's named
-        # improvement): downstream per-state queries prune to one
-        # directory instead of scanning the full dataset. ~50 states →
-        # bounded partition count; no repartition first, so each task
-        # writes only the states it holds (file count = tasks × local
-        # states, acceptable at this partition cardinality).
-        write_parquet(cleaned, str(out / "cleaned_data"), partition_by=["State"])
+    if out:
         write_parquet(
             clustered.select("ID", "Severity", "Start_Lat", "Start_Lng", "cluster"),
             str(out / "clustered_data"),
         )
-        model_results = result_documents(
-            spark, "random_forest", rf_metrics, parameters=str(RF_PARAMS)
-        ).union(
-            result_documents(
-                spark, "knn", knn_metrics, parameters=f"k={KNN_K}"
-            )
-        )
-        write_parquet(model_results, str(out / "model_results"))
         write_parquet(
             cluster_centers_document(spark, stats_rows),
             str(out / "cluster_centers"),
         )
-        # chart rendering (generate_visualizations.py parity):
-        # distributed aggregation -> tiny collect -> dependency-free SVG
-        from .operators.viz import export_chart_suite
-
-        summary["charts"] = export_chart_suite(
-            cleaned,
-            str(out / "charts"),
-            clustered=clustered.select("Start_Lat", "Start_Lng", "cluster"),
-            predictions=rf_preds.select("label", "prediction"),
-        )
-        with open(out / "pipeline_summary.json", "w") as f:
-            json.dump(summary, f, indent=2)
-
-    cleaned.unpersist()
-    geo.unpersist()
-    return summary
+    return km_doc, clustered
 
 
 def main(argv: list[str] | None = None) -> dict:
