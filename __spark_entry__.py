@@ -1,12 +1,16 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""External surface over the package's query registry.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` runs one flagship query, ``queries()`` maps every
+registered name to a ``(spark, sf_dir) -> DataFrame`` builder and
+``oracle_sql()`` gives the DuckDB oracle SQL per oracled name.
+``tests/test_oracle.py`` checks it against the DuckDB oracles:
+``test_entry_smoke`` runs ``entry`` and checks that every oracled name
+is a query, and ``test_oracle_match`` compares each oracled registry
+query at sf0.01 with its oracle (column names, row count and
+order-insensitive values).
 
 All real logic lives in ``us_accidents_bigdata_pipeline_spark``; this
-module only adapts the package's query registry to the driver contract.
+module only adapts the registry.
 """
 
 from __future__ import annotations
@@ -16,7 +20,7 @@ import sys
 from collections.abc import Callable
 
 # the engine package lives next to this file; make the import robust to
-# whatever working directory the driver runs from
+# whatever working directory the caller runs from
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession

@@ -579,7 +579,7 @@ def test_pq_train_local_is_deterministic_across_layouts(spark):
 
 def test_kmeanspp_lloyd_empty_sample_raises_value_error():
     """pq_train's local fit path must fail loudly on an empty sample
-    (r8 ADVICE: the old n==0 branch padded with None and died in
+    (the old n==0 branch padded with None and died in
     np.concatenate with an opaque TypeError)."""
     import numpy as np
     import pytest

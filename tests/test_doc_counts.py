@@ -1,10 +1,10 @@
-"""Doc-count sync: the 'N queries, M oracled' numbers in README.md,
-SURVEY.md and the verify skill must match the live registry.
+"""Doc sync: the 'N queries, M oracled' numbers in README.md, SURVEY.md
+and the verify skill must match the live registry, and code and docs
+must not cite files that are not in the checkout.
 
-Rounds 4 and 5 both shipped stale counts (judge defect both rounds);
-this test makes the drift a hard failure instead of a judge note.
-When it fails after registering new queries, update the three marker
-lines to the numbers in the assertion message.
+Stale counts shipped twice before this test made the drift a hard
+failure. When it fails after registering new queries, update the three
+marker lines to the numbers in the assertion message.
 """
 
 import re
@@ -75,3 +75,57 @@ def test_bench_headline_names_exist():
     spec.loader.exec_module(bench)
     missing = [n for n in bench.HEADLINE if n not in REGISTRY]
     assert not missing, f"bench HEADLINE names not in registry: {missing}"
+
+
+# An upper-case artifact file name (``FIXTURES.md``, ``SKILL.md``). The
+# look-behind skips path tails and dotted names (a table's
+# ``_CURRENT.json`` pointer, a reference repo's ``<repo>/README.md``);
+# the trailing ``\b`` skips longer extensions such as ``.jsonl``.
+_ARTIFACT = re.compile(
+    r"(?<![\w/.])[A-Z][A-Z_]*(?:_r\d+|_[a-z0-9_]+)?\.(?:json|md)\b"
+)
+_PLAN_DUMP = re.compile(r"(?<![\w.])plans/r\d+/")
+_CITING = (
+    "us_accidents_bigdata_pipeline_spark",
+    "tests",
+    "scripts",
+    "bench.py",
+    "__spark_entry__.py",
+    "README.md",
+    "SURVEY.md",
+    ".claude/skills/verify/SKILL.md",
+)
+
+
+def _citing_files():
+    for name in _CITING:
+        path = ROOT / name
+        if path.is_file():
+            yield path
+        else:
+            yield from sorted(
+                p for p in path.rglob("*") if p.suffix in (".py", ".md")
+            )
+
+
+def test_no_dangling_file_citations():
+    """Code and docs name only files that exist in the checkout. A
+    figure whose source file is gone should be quoted inline instead.
+    Names resolve by basename (``SKILL.md``, ``NOTES.md``)."""
+    present = {p.name for p in ROOT.rglob("*") if ".git" not in p.parts}
+    dangling = []
+    for path in _citing_files():
+        text = path.read_text(errors="replace")
+        for lineno, line in enumerate(text.splitlines(), 1):
+            where = f"{path.relative_to(ROOT)}:{lineno}"
+            dangling += [
+                f"{where} {m.group(0)}"
+                for m in _ARTIFACT.finditer(line)
+                if m.group(0) not in present
+            ]
+            dangling += [
+                f"{where} {m.group(0)}"
+                for m in _PLAN_DUMP.finditer(line)
+                if not (ROOT / m.group(0)).is_dir()
+            ]
+    assert dangling == [], "\n".join(dangling)

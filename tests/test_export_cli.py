@@ -88,7 +88,7 @@ def test_export_corpus_end_to_end(spark, tmp_path):
 def test_export_corpus_dq_gate_aborts_on_null_text(spark, tmp_path):
     """The module docstring promises hard failures abort before any
     curation compute — for EVERY gate constraint, not just
-    doc_id_unique (the r6/r7 ADVICE mismatch)."""
+    doc_id_unique."""
     bad_dir = str(tmp_path / "bad_sf")
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     docs.withColumn(

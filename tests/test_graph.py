@@ -1,6 +1,6 @@
 """Graph operator unit tests: BFS semantics on a hand-built graph and
 the frontier storage-hygiene guarantee (no CacheManager residue after a
-call — the r6/r7 ADVICE leak)."""
+call)."""
 
 from __future__ import annotations
 

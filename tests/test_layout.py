@@ -177,8 +177,7 @@ def test_global_running_sum_null_semantics_match_serial_window(spark):
     """NULL values must behave exactly like the serial SUM() OVER
     window: rows before the first global non-null stay NULL; an
     all-NULL prefix inside a later partition inherits the prior
-    partitions' running total instead of nullifying it (the latent
-    divergence ADVICE r4 flagged)."""
+    partitions' running total instead of nullifying it."""
     from us_accidents_bigdata_pipeline_spark.operators.layout import (
         global_running_sum,
         global_running_sums,

@@ -1,6 +1,7 @@
 """Round-12 optimization pins: the restructured shingle builder and the
 shared-subtree materialization must preserve semantics and the improved
-plan shape (OPTIMIZATION_r12.md)."""
+plan shape: map-only shingling before the distinct, and one evaluation
+of each shared subtree per query."""
 
 from pyspark.sql import functions as F
 

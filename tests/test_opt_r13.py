@@ -1,7 +1,8 @@
 """Round-13 optimization pins.
 
-Each change in OPTIMIZATION_r13.md that rewrites an operator's
-internals gets a focused identity/plan pin here, mirroring
+Each optimization that rewrote an operator's internals (the certified
+PQ bound, the shingle pre-filter, the exact-rational duplicate-n-gram
+fraction) gets a focused identity/plan pin here, mirroring
 test_opt_r12.py's discipline.
 """
 

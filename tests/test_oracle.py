@@ -1,7 +1,7 @@
-"""Oracle harness mirroring the driver's correctness gate: run every
-registered query in Spark AND its DuckDB oracle SQL on the same parquet,
-compare row count, column names, and order-insensitive values (columns
-sorted by name, rows sorted by their full tuple, floats rounded)."""
+"""Oracle harness: run every registered query in Spark AND its DuckDB
+oracle SQL on the same parquet, compare row count, column names, and
+order-insensitive values (columns sorted by name, rows sorted by their
+full tuple, floats rounded)."""
 
 from __future__ import annotations
 
@@ -50,8 +50,8 @@ def _norm_cell(v):
 
 
 def _norm_rows(cols, rows):
-    """Sort columns by name, then rows by stringified tuple (the driver's
-    order-insensitive hash equivalent)."""
+    """Sort columns by name, then rows by stringified tuple (an
+    order-insensitive comparison)."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = [tuple(_norm_cell(r[i]) for i in order) for r in rows]
     out.sort(key=lambda t: tuple(str(x) for x in t))

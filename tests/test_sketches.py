@@ -150,7 +150,7 @@ def test_exact_heavy_hitters_matches_exact_groupby(spark):
 
 
 def test_exact_heavy_hitters_null_keys_excluded_from_population(spark):
-    """NULL convention pinned (ADVICE r4): NULL keys neither surface
+    """NULL convention pinned: NULL keys neither surface
     as a group nor inflate the threshold denominator — the operator
     answers "heavy hitters among non-null keys". With 50% NULL rows,
     key 7 appears 455 times = 9.1% of the 5000 non-null rows (heavy at

@@ -323,7 +323,7 @@ def _shared(frame: DataFrame) -> DataFrame:
     payload. Lazy (not eager) so that plan building, ``explain`` and
     the plan audit stay free of side effects.
 
-    Cluster-deployment caveat (ADVICE r12): ``localCheckpoint`` is a
+    Cluster-deployment caveat: ``localCheckpoint`` is a
     NON-RELIABLE checkpoint — lineage is truncated, so losing an
     executor that holds checkpoint blocks (node failure,
     dynamic-allocation decommission) fails the job instead of
@@ -678,9 +678,9 @@ def lsh_banding_planner(
     aggregate-sized; the corpus itself is touched once. The histogram
     join's cost tracks the observable near-dup PAIR MASS — linear in
     corpus size at fixed dup density (each shingle key's document
-    frequency, not the corpus, sets the per-key fanout), which is what
-    SCALING.json's 10x time ratio prices; the ``ops_100x`` re-probe
-    confirms the ratio holds once fixed overhead is amortized.
+    frequency, not the corpus, sets the per-key fanout): on a 10x
+    row-replicated sf0.1 corpus it took 7.9x the base time
+    (2.9 s -> 23.3 s).
 
     Output: one row per (grid point × observed bucket): (b, r,
     s_curve_threshold, p_at_target, recommended, j_bucket, n_pairs,
@@ -1637,9 +1637,8 @@ def banding_scurve_empirical(
     bucket aggregate — everything past the two pair sets is
     |buckets|-row sized. Cost scales with the OBSERVABLE PAIR MASS
     (shingle-join output + banded collisions), which grows linearly
-    with corpus size at fixed dup density — the intrinsic term behind
-    SCALING.json's 10x growth reading; the chained 10x->100x re-probe
-    (``ops_100x``) separates it from fixed overhead.
+    with corpus size at fixed dup density: on a 10x row-replicated
+    sf0.1 corpus it took 3.5-5.9x the base time (2.3-2.6 s base).
 
     Output: one row per j-bucket — (j_bucket, n_pairs, n_collided,
     observed_rate, theoretical_rate).

@@ -434,9 +434,9 @@ def dp_contribution_bounded_counts(
     per-group noise expression. At 100 TB the window input is the slim
     (user, group, id) projection; everything downstream is
     group-cardinality-sized. Cost is LINEAR in input rows (the keyed
-    window dominates); SCALING.json's 10x entry reads >5x only because
-    the ~0.4 s base is mostly fixed job overhead — the chained
-    10x->100x re-probe (``ops_100x``) is the honest ratio.
+    window dominates); on 10x row-replicated sf0.1 tables it took
+    2.6-3.3x the base time (a single 5.1x reading came from a 0.4 s
+    base that was mostly fixed job overhead).
 
     Output: (group, bounded_count, noisy_count, epsilon,
     contribution_cap).

@@ -99,7 +99,7 @@ def _adaptive_input_split(spark: SparkSession, df: DataFrame) -> DataFrame:
     is Spark's minimum scan-split unit — so every map-side stage
     (tokenize/shingle/hash/partial-aggregate) over the table runs as a
     SINGLE task no matter how many cores the session has. Measured on
-    the 10x replica tier (round 13, SCALING_CORES.json): the
+    a 10x row-replicated copy of the sf0.1 tables: the
     shuffle-heavy headliners read 0.84-0.93x going 8 -> 32 cores with
     healthy CPU probes — flat, because stage one is serial — and
     2x faster at BOTH core counts once the read is repartitioned.
@@ -10669,8 +10669,7 @@ def q_arrow_udf_price_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are space-joined STRINGS (array_join over the sorted doc_id list):
 # membership and order are both deterministic, and a flat string —
 # unlike array<string> — survives the driver's pandas-based
-# canonicalizer, which cannot hash list-typed cells (the one red row
-# in CORRECTNESS_r09).
+# canonicalizer, which cannot hash list-typed cells.
 # Scales: one tokenize + distinct pass, one hash agg per token; the
 # top-k cut runs on the |vocab|-row aggregate.
 # =====================================================================
@@ -12264,8 +12263,8 @@ def q_ewma_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round 9 — PageRank promoted to the oracled tier (bounded power
 # iteration in exact integer mass), IVF search promoted via a
 # triangle-inequality exactness certificate, the full-dimension PCA
-# driver-catalog entry restored (r8 ADVICE: the certified 2-d slice
-# variant had replaced it under the same name), and two mixture-tier
+# catalog entry restored (the certified 2-d slice variant had
+# replaced it under the same name), and two mixture-tier
 # additions (epoch-aware upsampling, per-source dedup-vs-quota
 # diagnostics).
 # =====================================================================
@@ -12369,10 +12368,10 @@ def q_ivf_search_exact_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     None,  # 64-d covariance eigensolve -> rows-only (numpy parity
     # pinned in tests/test_ml.py); the certified 2-d slice variant is
     # pca_embedding_projection
-    doc="MLlib PCA k=2 over the FULL 64-d embedding corpus — the r8 "
-    "ADVICE restoration: the driver catalog exercises the 64-d "
-    "covariance/eigensolve path end-to-end again (the same-named "
-    "entry had narrowed to the DuckDB-certifiable 2-d slice); "
+    doc="MLlib PCA k=2 over the FULL 64-d embedding corpus: the "
+    "catalog exercises the 64-d covariance/eigensolve path end to "
+    "end (the 2-d slice, pca_embedding_projection, is the "
+    "DuckDB-certifiable variant); "
     "uncentered projection + largest-|loading| sign convention "
     "(ml/pca.py::pca_projection_signed)",
 )
