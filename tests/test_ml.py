@@ -4,6 +4,7 @@ metric parity with MLlib evaluators."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,10 +14,13 @@ from us_accidents_bigdata_pipeline_spark.ml.features import (
     index_categoricals,
 )
 from us_accidents_bigdata_pipeline_spark.ml.kmeans import (
+    assign_clusters,
     cluster_stats,
     fit_kmeans,
     k_sweep,
+    lloyd,
     silhouette,
+    squared_euclidean_silhouette,
 )
 from us_accidents_bigdata_pipeline_spark.ml.knn import (
     knn_predict,
@@ -200,23 +204,107 @@ def test_knn_learns_separable_blobs(spark):
 def test_kmeans_sweep_and_stats(accidents_cleaned):
     geo = accidents_cleaned.select("Start_Lat", "Start_Lng", "Severity")
     feat, _ = assemble_and_scale(geo, ["Start_Lat", "Start_Lng"])
-    best_k, results, model = k_sweep(feat, [2, 3, 4], max_iter=20)
+    best_k, results, centers = k_sweep(feat, [2, 3, 4], max_iter=20)
     assert best_k in (2, 3, 4)
     assert all(-1 <= s <= 1 for _, s, _ in results)
-    # the returned winner is the model a refit of best_k would give
+    # the returned winner is what a refit of best_k would give
     refit = fit_kmeans(feat, best_k, max_iter=20)
-    assert [c.tolist() for c in model.clusterCenters()] == [
-        c.tolist() for c in refit.clusterCenters()
-    ]
-    pred = model.transform(feat)
+    np.testing.assert_allclose(
+        centers, np.array(refit.clusterCenters()), rtol=0, atol=1e-9
+    )
+    pred = assign_clusters(feat, centers)
     sil = silhouette(pred)
-    assert sil == {k: s for k, s, _ in results}[best_k]
+    assert sil == pytest.approx({k: s for k, s, _ in results}[best_k], abs=1e-9)
     assert sil > 0.3  # uniform geo data still separates under kmeans
     stats = cluster_stats(pred, stat_cols=["Severity"])
     rows = stats.collect()
     assert len(rows) == best_k
     assert sum(r.n for r in rows) == feat.count()
-    assert len(model.clusterCenters()) == best_k
+    assert len(centers) == best_k
+
+
+@pytest.fixture(scope="module")
+def pipeline_geo(spark):
+    """The 3,000-row pipeline fixture's geo frame, built as the
+    pipeline's K-Means branch builds it."""
+    from us_accidents_bigdata_pipeline_spark.pipeline import GEO_FEATURES
+
+    raw = generate_accidents_raw_distributed(spark, n_rows=3000, seed=42)
+    geo, _ = assemble_and_scale(
+        clean(raw).select("ID", "Severity", *GEO_FEATURES), GEO_FEATURES
+    )
+    geo = geo.cache()
+    yield geo
+    geo.unpersist()
+
+
+def test_kmeans_driver_path_matches_mllib(pipeline_geo):
+    """Dual-path equality (the ``assert_gpu_and_cpu_are_equal_collect``
+    idea): the sweep's driver-side Lloyd iterations, silhouette and
+    Catalyst assignment give what MLlib's own fit, ClusteringEvaluator
+    and ``KMeansModel.transform`` give, for every candidate k."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import vector_to_array
+
+    from us_accidents_bigdata_pipeline_spark.pipeline import (
+        KMEANS_KS,
+        KMEANS_MAX_ITER,
+        SEED,
+    )
+    from us_accidents_bigdata_pipeline_spark.tuning import arrow_to_pandas
+
+    _, sweep, _ = k_sweep(pipeline_geo, KMEANS_KS, max_iter=KMEANS_MAX_ITER, seed=SEED)
+    for k, sweep_sil, sweep_wssse in sweep:
+        model = fit_kmeans(pipeline_geo, k, max_iter=KMEANS_MAX_ITER, seed=SEED)
+        init = fit_kmeans(pipeline_geo, k, max_iter=0, seed=SEED)
+        # one collect holds each row's features, MLlib's assignment and
+        # the expression's assignment from the driver-side centres
+        mllib = model.transform(pipeline_geo).withColumnRenamed("cluster", "mllib")
+        x = np.stack(
+            arrow_to_pandas(
+                pipeline_geo.select(vector_to_array("features").alias("x"))
+            )["x"]
+        )
+        centers, cost, n_iter = lloyd(
+            x, np.array(init.clusterCenters()), KMEANS_MAX_ITER, KMeans().getTol()
+        )
+        rows = arrow_to_pandas(
+            assign_clusters(mllib, centers).select(
+                vector_to_array("features").alias("x"), "mllib", "cluster"
+            )
+        )
+        np.testing.assert_allclose(
+            centers, np.array(model.clusterCenters()), rtol=0, atol=1e-9
+        )
+        assert n_iter == model.summary.numIter
+        assert cost == pytest.approx(model.summary.trainingCost, rel=1e-9)
+        assert sweep_wssse == pytest.approx(model.summary.trainingCost, rel=1e-9)
+        assert (rows["cluster"] == rows["mllib"]).all(), k
+        sil = silhouette(model.transform(pipeline_geo))
+        local = squared_euclidean_silhouette(
+            np.stack(rows["x"]), rows["cluster"].to_numpy()
+        )
+        assert local == pytest.approx(sil, abs=1e-9)
+        assert sweep_sil == pytest.approx(sil, abs=1e-9)
+
+
+def test_driver_silhouette_singleton_matches_evaluator(spark):
+    """A singleton cluster scores 0 and a point nearer another cluster
+    than its own scores below 0, as in ClusteringEvaluator."""
+    from pyspark.ml.linalg import Vectors
+
+    pts = [
+        ((0.0, 0.0), 0), ((0.0, 1.0), 0), ((1.0, 0.0), 0), ((9.0, 9.0), 0),
+        ((10.0, 10.0), 1), ((10.0, 11.0), 1), ((11.0, 10.0), 1),
+        ((50.0, 50.0), 2),
+    ]
+    df = spark.createDataFrame(
+        [(Vectors.dense(p), c) for p, c in pts], ["features", "cluster"]
+    )
+    local = squared_euclidean_silhouette(
+        np.array([p for p, _ in pts]), np.array([c for _, c in pts])
+    )
+    assert local == pytest.approx(silhouette(df), abs=1e-12)
 
 
 def test_string_indexer_frequency_order(spark):

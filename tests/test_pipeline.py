@@ -72,8 +72,8 @@ def test_complete_pipeline_golden(spark, tmp_path):
 
 
 TIMING_FIELDS = {
-    "sec", "stage_seconds", "training_time_seconds", "rows_per_sec",
-    "fit_rows_per_sec", "total_seconds",
+    "sec", "stage_seconds", "training_time_seconds", "fit_rows_per_sec",
+    "total_seconds",
 }
 
 
@@ -94,34 +94,37 @@ def _untimed(doc):
 def test_failed_branch_releases_caches_and_threads(spark, monkeypatch):
     """A failing branch's error reaches the caller only after every
     branch has stopped, and the run leaves no frame cached and no pool
-    thread running."""
+    thread running: for a failing K-Means sweep, and for a failing kNN,
+    the branch the RF branch submits and waits on."""
     import threading
 
     from us_accidents_bigdata_pipeline_spark import pipeline
 
-    def boom(*a, **k):
-        raise RuntimeError("sweep failed")
-
-    monkeypatch.setattr(pipeline, "k_sweep", boom)
     raw = generate_accidents_raw_distributed(spark, n_rows=3000, seed=42)
-    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
-    threads = set(threading.enumerate())
-    with pytest.raises(RuntimeError, match="sweep failed"):
-        run_complete_pipeline(spark, raw)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
-    assert [t for t in set(threading.enumerate()) - threads if t.is_alive()] == []
+    for attr, message in (("k_sweep", "sweep failed"), ("knn_predict", "knn failed")):
+        def boom(*a, **k):
+            raise RuntimeError(message)
+
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, attr, boom)
+            persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+            threads = set(threading.enumerate())
+            with pytest.raises(RuntimeError, match=message):
+                run_complete_pipeline(spark, raw)
+            assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+            assert [t for t in set(threading.enumerate()) - threads if t.is_alive()] == []
 
 
 # Spark jobs one pipeline run launches on the 3,000-row fixture, as
-# measured when the branches began to overlap and the unsampled K-Means
-# sweep's winner stopped being refit
-MAX_PIPELINE_JOBS = 169
+# measured when the K-Means sweep's Lloyd iterations moved to the driver
+MAX_PIPELINE_JOBS = 98
 
 
 def test_pipeline_job_count_and_single_kmeans_fit(spark, tmp_path, monkeypatch):
     """Guard against extra Spark jobs creeping back in, in particular a
-    second fit of the K-Means sweep's winner: below the sweep's sample
-    size every candidate is fit exactly once."""
+    second fit of the K-Means sweep's winner or a Lloyd iteration run as
+    a Spark job: below the sweep's sample size every candidate is fit
+    exactly once, by MLlib's initialisation only (``max_iter=0``)."""
     from us_accidents_bigdata_pipeline_spark import pipeline
     from us_accidents_bigdata_pipeline_spark.ml import kmeans
 
@@ -129,7 +132,7 @@ def test_pipeline_job_count_and_single_kmeans_fit(spark, tmp_path, monkeypatch):
     fit_kmeans = kmeans.fit_kmeans
 
     def counting(df, k, **kw):
-        fits.append(k)
+        fits.append((k, kw["max_iter"]))
         return fit_kmeans(df, k, **kw)
 
     monkeypatch.setattr(kmeans, "fit_kmeans", counting)
@@ -140,7 +143,7 @@ def test_pipeline_job_count_and_single_kmeans_fit(spark, tmp_path, monkeypatch):
     summary = run_complete_pipeline(spark, raw, output_dir=str(tmp_path / "out"))
     jobs = dag.nextJobId() - before
     assert summary["rows_processed"] <= pipeline.KMEANS_SWEEP_SAMPLE_ROWS
-    assert sorted(fits) == sorted(pipeline.KMEANS_KS)
+    assert sorted(fits) == [(k, 0) for k in sorted(pipeline.KMEANS_KS)]
     assert jobs <= MAX_PIPELINE_JOBS, jobs
 
 

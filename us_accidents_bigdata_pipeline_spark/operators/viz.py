@@ -94,7 +94,7 @@ def confusion_heatmap_svg(
 
 
 def export_chart_suite(
-    cleaned: DataFrame,
+    cleaned: DataFrame | None,
     out_dir: str,
     clustered: DataFrame | None = None,
     predictions: DataFrame | None = None,
@@ -104,7 +104,9 @@ def export_chart_suite(
     (generate_visualizations.py — aggregate, collect, render) with the
     aggregation DISTRIBUTED (this module's input builders) and the
     rendering dependency-free SVG (``render_svg``). Returns the list of
-    files written.
+    files written. Each chart is drawn only when its input frame is
+    given (``cleaned`` may be None), so a caller can draw each subset
+    where its input is at hand.
 
     Collect safety: every collected frame is an aggregate or a capped
     sample — bar/line inputs are ≤ dozens of rows, scatters are bounded
@@ -123,7 +125,7 @@ def export_chart_suite(
             f.write(svg)
         written.append(path)
 
-    cols = set(cleaned.columns)
+    cols = set(cleaned.columns) if cleaned is not None else set()
     if "Severity" in cols:
         rows = severity_histogram(cleaned).collect()
         _write(

@@ -8,27 +8,32 @@ Spark flow:
     → metrics/JSON export → parquet sink
 
 The stages form a small graph, not a sequence. RF and kNN read only
-the feature frame, K-Means reads only the cleaned frame, and so does
-the ``cleaned_data`` sink. After ``cleaned.count()`` and the RF
-feature assembly, three branches run at the same time from one thread
-pool (the mechanism ``ml.kmeans.k_sweep`` uses for its candidate
-fits), and the calling thread waits for all of them:
+the feature frame, K-Means reads only the cleaned frame, and so do the
+``cleaned_data`` sink and five of the seven charts. After
+``cleaned.count()`` and the RF feature assembly, the branches run at
+the same time from one thread pool, and the calling thread waits for
+all of them. kNN starts from the RF branch once its train/test split
+is cached, and each chart is drawn in the branch that owns its input:
 
-    clean ─┬─ RF → kNN → model_results sink
+    clean ─┬─ RF split ─┬─ RF fit → confusion-matrix chart ─┐
+           │            └─ kNN ──────────────────────────────┴─ model_results sink
            ├─ geo features → K-Means sweep → clustered_data and
-           │  cluster_centers sinks
-           └─ cleaned_data sink
-                                   ──► charts → pipeline_summary.json
+           │  cluster_centers sinks → cluster-scatter chart
+           └─ cleaned_data sink → severity, hourly, state, weather and
+              geo-scatter charts
+                                   ──► pipeline_summary.json
 
 Spark's scheduler interleaves the branches' jobs, which fills the
 cores that each small job leaves idle. Threads change scheduling,
-never results: every model and sink is the same as a sequential run's.
-Timing fields change meaning, though. Each stage's ``sec`` (and RF's
-``stage_seconds`` / ``training_time_seconds``) is a wall time measured
-while the other branches run, so the stage times overlap and do not sum
-to ``total_seconds``; ``fit_rows_per_sec`` is measured while K-Means
-runs. ``total_seconds`` ends when the branches have joined, so with an
-``output_dir`` it includes the parquet sinks but not the charts.
+never results: every model, sink and chart is the same as a sequential
+run's. Timing fields change meaning, though. Each stage's ``sec`` (and
+RF's ``stage_seconds`` / ``training_time_seconds``) is a wall time
+measured while the other branches run, so the stage times overlap and
+do not sum to ``total_seconds``; ``fit_rows_per_sec`` is measured while
+kNN and K-Means run. kNN's ``sec`` starts when its branch does, after
+the RF split. ``total_seconds`` ends when the branches have joined, so
+with an ``output_dir`` it includes the parquet sinks and the charts;
+only ``pipeline_summary.json`` is written after it.
 
 Differences from the reference, by design (SURVEY §7):
 - one cached cleaned frame feeds all three model stages (the reference
@@ -44,14 +49,14 @@ from __future__ import annotations
 
 import json
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ml.features import assemble_and_scale
-from .ml.kmeans import cluster_stats, fit_kmeans, k_sweep, silhouette
+from .ml.kmeans import assign_clusters, cluster_stats, fit_kmeans, k_sweep, silhouette
 from .ml.knn import broadcast_train, knn_predict
 from .ml.metrics import cluster_centers_document, evaluate_classifier, result_documents
 from .ml.rf import RFParams, feature_importance, train_with_retry
@@ -80,11 +85,13 @@ KNN_TRAIN_FRACTION = 0.1  # knn_classification.py:132
 KNN_MAX_TEST_ROWS = 100_000
 KMEANS_KS = [4, 6, 8]  # full_scale_pipeline.py:197-222
 KMEANS_MAX_ITER = 30
-# above KMEANS_SWEEP_SAMPLE_ROWS the sweep runs on a capped sample with
-# fewer iterations (the reference's own 200K elbow-sample pattern,
-# v2:cell47-48) and the winning k is refit on the full data at the full
+# the sweep's input is at most KMEANS_SWEEP_SAMPLE_ROWS rows (the
+# reference's own 200K elbow-sample bound, v2:cell47-48), small enough
+# for k_sweep to collect it and run its Lloyd iterations on the driver.
+# Above it the sweep runs on a capped sample with fewer iterations and
+# the winning k is refit by MLlib on the full data at the full
 # iteration budget; at or below it the sweep already sees the full data
-# at KMEANS_MAX_ITER, so its winning model is the final model
+# at KMEANS_MAX_ITER, so its winning centres are the final ones
 KMEANS_SWEEP_SAMPLE_ROWS = 200_000
 KMEANS_SWEEP_MAX_ITER = 15
 TEST_FRACTION = 0.2
@@ -98,7 +105,8 @@ def run_complete_pipeline(
 ) -> dict:
     """Run the full pipeline; returns the metrics document (the
     reference's pipeline_summary.json shape) and, when ``output_dir``
-    is set, writes cleaned parquet + clustered sample + metrics JSON.
+    is set, writes cleaned parquet + clustered sample + charts +
+    metrics JSON.
 
     Every frame the run caches is released in one ``finally``, after
     the branches have stopped, whether the run succeeds or fails; a
@@ -124,25 +132,22 @@ def run_complete_pipeline(
         feat, _ = assemble_and_scale(labeled, RF_FEATURES, with_mean=False)
         if out:
             out.mkdir(parents=True, exist_ok=True)
-        with ThreadPoolExecutor(max_workers=3, thread_name_prefix="pipeline") as pool:
+        # four workers: the RF branch submits kNN and later waits on it,
+        # so kNN must never queue behind the other branches
+        with ThreadPoolExecutor(max_workers=4, thread_name_prefix="pipeline") as pool:
             branches = [
-                pool.submit(_classify, spark, feat, n_clean, t0, cached, out),
+                pool.submit(_classify, spark, pool, feat, n_clean, t0, cached, out),
                 pool.submit(_cluster, spark, cleaned, n_clean, cached, out),
             ]
             if out:
-                # hive-partition the cleaned output by State (SURVEY §4's
-                # named improvement): downstream per-state queries prune
-                # to one directory instead of scanning the full dataset.
-                # ~50 states → bounded partition count; no repartition
-                # first, so each task writes only the states it holds
-                # (file count = tasks × local states, acceptable at this
-                # partition cardinality).
-                branches.append(pool.submit(lambda: write_parquet(
-                    cleaned, str(out / "cleaned_data"), partition_by=["State"]
-                )))
-        # leaving the pool waited for every branch: a failed branch's
-        # error is raised only now, once none is still running
-        (rf_doc, knn_doc, rf_preds), (km_doc, clustered), *_ = [
+                branches.append(pool.submit(_sink_cleaned, cleaned, out))
+            # the RF branch submits kNN to this pool, so the pool may
+            # shut down only once the branches are done
+            wait(branches)
+        # leaving the pool waited for every branch, kNN included: a
+        # failed branch's error is raised only now, once none is still
+        # running
+        (rf_doc, knn_doc, rf_charts), (km_doc, km_charts), *sink = [
             b.result() for b in branches
         ]
 
@@ -157,16 +162,7 @@ def run_complete_pipeline(
             "rows_processed": n_clean,
         }
         if out:
-            # chart rendering (generate_visualizations.py parity):
-            # distributed aggregation -> tiny collect -> dependency-free SVG
-            from .operators.viz import export_chart_suite
-
-            summary["charts"] = export_chart_suite(
-                cleaned,
-                str(out / "charts"),
-                clustered=clustered.select("Start_Lat", "Start_Lng", "cluster"),
-                predictions=rf_preds.select("label", "prediction"),
-            )
+            summary["charts"] = sink[0] + km_charts + rf_charts
             with open(out / "pipeline_summary.json", "w") as f:
                 json.dump(summary, f, indent=2)
         return summary
@@ -175,17 +171,33 @@ def run_complete_pipeline(
             df.unpersist()
 
 
+def _charts(out: Path | None, cleaned=None, **frames) -> list[str]:
+    """The chart-suite subset whose inputs are given, drawn into
+    ``out/charts`` (generate_visualizations.py parity: distributed
+    aggregation -> tiny collect -> dependency-free SVG); none without
+    an ``output_dir``. The module is looked up at call time, where
+    perfbench's tracer wraps it."""
+    if out is None:
+        return []
+    from .operators import viz
+
+    return viz.export_chart_suite(cleaned, str(out / "charts"), **frames)
+
+
 def _classify(
     spark: SparkSession,
+    pool: ThreadPoolExecutor,
     feat: DataFrame,
     n_clean: int,
     t0: float,
     cached: list[DataFrame],
     out: Path | None,
-) -> tuple[dict, dict, DataFrame]:
-    """Branch 1: RF severity classification, then distributed kNN on
-    the same split, then the ``model_results`` sink. Returns the RF and
-    kNN summary stages and the RF test predictions (for the charts)."""
+) -> tuple[dict, dict, list[str]]:
+    """Branch 1: RF severity classification, the confusion-matrix chart
+    and the ``model_results`` sink. Once the split's cache is filled it
+    submits the kNN branch on the same split to ``pool``, and waits for
+    it before it writes the sink and releases the features. Returns the
+    RF and kNN summary stages and the chart written."""
     # iterative trainers pay per-task overhead per iteration: size
     # partitions by rows, not by cluster width (tuning.py rationale).
     # ~5K rows/partition floor keeps small tiers at full parallelism
@@ -207,11 +219,12 @@ def _classify(
     cached.append(feat)
     train, test = deterministic_split(feat, "ID", TEST_FRACTION)
     n_train = train.count()
+    knn = pool.submit(_knn, train, test)
     # time the model fit separately from stage prep (scaler fit, cache
     # materialization, split count): the reference's published RF
     # throughput is fit-only (Pipeline_Collab/outputs/rf_results.json —
-    # 6.18M rows / 80.37 s training), so rows_per_sec must measure the
-    # same window to be comparable
+    # 6.18M rows / 80.37 s training), so fit_rows_per_sec must measure
+    # the same window to be comparable
     t_fit = time.perf_counter()
     rf_model, used_fraction = train_with_retry(train, RF_PARAMS)
     rf_fit_sec = time.perf_counter() - t_fit
@@ -223,7 +236,6 @@ def _classify(
         "train_fraction_used": used_fraction,
         "training_time_seconds": round(rf_fit_sec, 2),
         "stage_seconds": round(rf_train_sec, 2),
-        "rows_per_sec": round(n_train / max(rf_fit_sec, 1e-9)),
         "fit_rows_per_sec": round(n_train / max(rf_fit_sec, 1e-9)),
         "metrics": {k: round(v, 4) for k, v in rf_metrics.items()},
         "feature_importance": [
@@ -231,8 +243,28 @@ def _classify(
             for f, i in feature_importance(rf_model, RF_FEATURES)[:15]
         ],
     }
+    charts = _charts(out, predictions=rf_preds.select("label", "prediction"))
+    knn_doc, knn_metrics = knn.result()
+    # the feature cache is dead once kNN and the confusion matrix are
+    # done: release it now, not at the end of the run, so it stops
+    # holding storage memory while the other branches still run
+    feat.unpersist()
 
-    # -- distributed kNN ------------------------------------------------
+    if out:
+        model_results = result_documents(
+            spark, "random_forest", rf_metrics, parameters=str(RF_PARAMS)
+        ).union(
+            result_documents(
+                spark, "knn", knn_metrics, parameters=f"k={KNN_K}"
+            )
+        )
+        write_parquet(model_results, str(out / "model_results"))
+    return rf_doc, knn_doc, charts
+
+
+def _knn(train: DataFrame, test: DataFrame) -> tuple[dict, dict]:
+    """Branch 1b: distributed kNN on the RF branch's split, beside the
+    RF fit. Returns the kNN summary stage and its metrics."""
     t0 = time.perf_counter()
     knn_test = test
     n_test = test.count()
@@ -257,22 +289,7 @@ def _classify(
         "sec": round(time.perf_counter() - t0, 2),
         "metrics": {k: round(v, 4) for k, v in knn_metrics.items()},
     }
-    # the feature cache is dead after kNN (the charts recompute the few
-    # test predictions they draw): release it now, not at the end of
-    # the run, so it stops holding storage memory while the K-Means
-    # branch and the charts still run
-    feat.unpersist()
-
-    if out:
-        model_results = result_documents(
-            spark, "random_forest", rf_metrics, parameters=str(RF_PARAMS)
-        ).union(
-            result_documents(
-                spark, "knn", knn_metrics, parameters=f"k={KNN_K}"
-            )
-        )
-        write_parquet(model_results, str(out / "model_results"))
-    return rf_doc, knn_doc, rf_preds
+    return knn_doc, knn_metrics
 
 
 def _cluster(
@@ -281,10 +298,11 @@ def _cluster(
     n_clean: int,
     cached: list[DataFrame],
     out: Path | None,
-) -> tuple[dict, DataFrame]:
+) -> tuple[dict, list[str]]:
     """Branch 2: K-Means geographic clustering, then the
-    ``clustered_data`` and ``cluster_centers`` sinks. Returns the
-    K-Means summary stage and the clustered frame (for the charts)."""
+    ``clustered_data`` and ``cluster_centers`` sinks and the cluster
+    scatter chart. Returns the K-Means summary stage and the chart
+    written."""
     t0 = time.perf_counter()
     geo, _ = assemble_and_scale(
         cleaned.select("ID", "Severity", *GEO_FEATURES), GEO_FEATURES
@@ -301,19 +319,20 @@ def _cluster(
             sweep_df, KMEANS_KS, max_iter=KMEANS_SWEEP_MAX_ITER, seed=SEED
         )
         km_model = fit_kmeans(geo, best_k, max_iter=KMEANS_MAX_ITER, seed=SEED)
-        clustered = km_model.transform(geo)
+        clustered = assign_clusters(geo, km_model.clusterCenters())
         sil = silhouette(clustered)
+        wssse = km_model.summary.trainingCost
     else:
         # the sweep's winning fit IS the final fit (same data, k, seed
-        # and iteration budget): reuse its model and silhouette
-        best_k, sweep, km_model = k_sweep(
+        # and iteration budget): reuse its centres, silhouette and cost
+        best_k, sweep, centers = k_sweep(
             geo, KMEANS_KS, max_iter=KMEANS_MAX_ITER, seed=SEED
         )
-        clustered = km_model.transform(geo)
-        sil = {k: s for k, s, _ in sweep}[best_k]
+        clustered = assign_clusters(geo, centers)
+        _, sil, wssse = next(r for r in sweep if r[0] == best_k)
     # per-cluster stats carry the RAW lat/lng means — the model's
-    # clusterCenters() live in StandardScaler space and must never
-    # reach the geographic cluster_centers sink
+    # centres live in StandardScaler space and must never reach the
+    # geographic cluster_centers sink
     stats = cluster_stats(
         clustered, stat_cols=["Severity", "Start_Lat", "Start_Lng"]
     )
@@ -321,7 +340,7 @@ def _cluster(
     km_doc = {
         "best_k": best_k,
         "silhouette": round(sil, 4),
-        "wssse": round(km_model.summary.trainingCost, 2),
+        "wssse": round(wssse, 2),
         "sweep": [
             {"k": k, "silhouette": round(s, 4), "wssse": round(w, 2)}
             for k, s, w in sweep
@@ -339,7 +358,24 @@ def _cluster(
             cluster_centers_document(spark, stats_rows),
             str(out / "cluster_centers"),
         )
-    return km_doc, clustered
+    charts = _charts(
+        out, clustered=clustered.select("Start_Lat", "Start_Lng", "cluster")
+    )
+    return km_doc, charts
+
+
+def _sink_cleaned(cleaned: DataFrame, out: Path) -> list[str]:
+    """Branch 3: the ``cleaned_data`` sink, then the five charts drawn
+    from ``cleaned``. Returns the charts written.
+
+    The sink is hive-partitioned by State (SURVEY §4's named
+    improvement): downstream per-state queries prune to one directory
+    instead of scanning the full dataset. ~50 states → bounded
+    partition count; no repartition first, so each task writes only the
+    states it holds (file count = tasks × local states, acceptable at
+    this partition cardinality)."""
+    write_parquet(cleaned, str(out / "cleaned_data"), partition_by=["State"])
+    return _charts(out, cleaned)
 
 
 def main(argv: list[str] | None = None) -> dict:
