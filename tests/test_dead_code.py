@@ -24,9 +24,16 @@ def _py_files(root: str) -> list[str]:
     return out
 
 
+# calls that look an attribute up by a string name: the builtins (and
+# ``monkeypatch.setattr``) and the benchmark tracer's ``wrap``/``patch``
+BY_NAME = {"setattr", "getattr", "hasattr", "delattr", "wrap", "patch"}
+
+
 def _uses(tree: ast.AST) -> set[str]:
-    """Names, attributes and imported names, plus string constants
-    that are identifiers (``monkeypatch.setattr(module, "name", ...)``)."""
+    """Names, attributes and imported names, plus identifier strings
+    passed to a by-name lookup (``monkeypatch.setattr(module, "name",
+    ...)``). Any other string, such as a sink or column name, is not a
+    use."""
     out = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
@@ -35,9 +42,17 @@ def _uses(tree: ast.AST) -> set[str]:
             out.add(node.attr)
         elif isinstance(node, ast.alias):
             out.add(node.name.rsplit(".", 1)[-1])
-        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-            if node.value.isidentifier():
-                out.add(node.value)
+        elif isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name in BY_NAME:
+                out |= {
+                    a.value
+                    for a in node.args
+                    if isinstance(a, ast.Constant)
+                    and isinstance(a.value, str)
+                    and a.value.isidentifier()
+                }
     return out
 
 

@@ -24,7 +24,7 @@ from us_accidents_bigdata_pipeline_spark.operators.sample import (
 )
 from us_accidents_bigdata_pipeline_spark.operators.similarity import (
     cosine_topk_batch,
-    ivf_assign,
+    ivf_fit_assign,
     ivf_search,
     lsh_ann_batch,
 )
@@ -238,8 +238,8 @@ def test_ivf_search_recall_with_replication(spark, emb_np):
 def test_ivf_multi_assign_replicates(spark):
     e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     n = e.count()
-    assert ivf_assign(e, n_cells=4, m_assign=1).count() == n
-    assert ivf_assign(e, n_cells=4, m_assign=2).count() == 2 * n
+    assert ivf_fit_assign(e, n_cells=4, m_assign=1)[0].count() == n
+    assert ivf_fit_assign(e, n_cells=4, m_assign=2)[0].count() == 2 * n
 
 
 def test_simhash_near_dup_pairs_pigeonhole_exact(spark):

@@ -14,7 +14,6 @@ from us_accidents_bigdata_pipeline_spark.operators.dq import (
     not_null,
 )
 from us_accidents_bigdata_pipeline_spark.operators.profile import (
-    ols_fit,
     ols_fit2,
     ols_normal_eq_sums,
 )
@@ -133,7 +132,7 @@ def test_ols_fit_matches_numpy_lstsq(spark, xy):
         [np.ones(len(pdf)), pdf["x1"].to_numpy(), pdf["x2"].to_numpy()]
     )
     ref, *_ = np.linalg.lstsq(X, pdf["y"].to_numpy(), rcond=None)
-    got = {r["term"]: r["value"] for r in ols_fit(xy, ["x1", "x2"], "y").collect()}
+    got = {r["term"]: r["value"] for r in ols_fit2(xy, "x1", "x2", "y").collect()}
     assert got["intercept"] == pytest.approx(ref[0], abs=1e-5)
     assert got["coef_x1"] == pytest.approx(ref[1], abs=1e-5)
     assert got["coef_x2"] == pytest.approx(ref[2], abs=1e-5)
@@ -142,8 +141,24 @@ def test_ols_fit_matches_numpy_lstsq(spark, xy):
 
 
 def test_ols_fit2_matches_general_path(spark, xy):
+    """ols_fit2's closed-form 2-regressor solve agrees with a general-d
+    normal-equations solve done in NumPy, r2 and n included."""
+    pdf = xy.toPandas()
+    X = np.column_stack(
+        [np.ones(len(pdf)), pdf["x1"].to_numpy(), pdf["x2"].to_numpy()]
+    )
+    y = pdf["y"].to_numpy()
+    beta = np.linalg.solve(X.T @ X, X.T @ y)
+    resid = y - X @ beta
+    r2 = 1.0 - (resid @ resid) / ((y - y.mean()) @ (y - y.mean()))
+    b = {
+        "intercept": beta[0],
+        "coef_x1": beta[1],
+        "coef_x2": beta[2],
+        "r2": r2,
+        "n": float(len(y)),
+    }
     a = {r["term"]: r["value"] for r in ols_fit2(xy, "x1", "x2", "y").collect()}
-    b = {r["term"]: r["value"] for r in ols_fit(xy, ["x1", "x2"], "y").collect()}
     for k in ("intercept", "coef_x1", "coef_x2", "r2", "n"):
         assert a[k] == pytest.approx(b[k], abs=1e-6), k
 

@@ -27,6 +27,14 @@ SCOPE = {
     "tuning.py": ["right_size_partitions"],
     "sources/io.py": ["write_parquet"],
     "operators/sample.py": ["deterministic_split"],
+    "operators/viz.py": [
+        "value_counts", "geo_scatter_sample", "confusion_heatmap_svg",
+        "export_chart_suite", "cluster_scatter_input",
+    ],
+    "operators/render_svg.py": [
+        "render_bar_svg", "render_line_svg", "render_scatter_svg",
+        "render_heatmap_svg",
+    ],
 }
 EXEMPT = {"RFParams"}
 

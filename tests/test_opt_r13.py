@@ -90,11 +90,11 @@ def test_pq_encode_qe2_is_reconstruction_error(spark):
         assert r["_qe2"] == pytest.approx(want, abs=1e-9), r["vec_id"]
 
 
-def test_pq_legacy_index_without_qe2_still_works(spark):
-    """An index tuple whose codes lack _qe2 (pre-round-13 layout)
-    falls back to the fixed-overfetch cut and still returns k rows."""
-    from pyspark.sql import functions as F
-
+def test_pq_index_without_qe2_raises(spark):
+    """An index tuple whose codes lack the _qe2 reconstruction-error
+    column cannot certify its candidate set: the search refuses it
+    with a ValueError that names the column, instead of returning an
+    uncertified top-k."""
     from us_accidents_bigdata_pipeline_spark.operators.similarity import (
         pq_ann_verified_topk,
         pq_encode,
@@ -105,12 +105,9 @@ def test_pq_legacy_index_without_qe2_still_works(spark):
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     unit = _unit_normalized(emb, "embedding")
     books = pq_train(unit, m=8, k_codes=16, vec_col="_unit")
-    legacy = pq_encode(unit, books, vec_col="_unit").drop("_qe2")
-    got = pq_ann_verified_topk(
-        emb, query_id=1, k=5, index=(books, legacy)
-    ).collect()
-    assert len(got) == 5
-    assert all(r["cosine"] is not None for r in got)
+    codes = pq_encode(unit, books, vec_col="_unit").drop("_qe2")
+    with pytest.raises(ValueError, match="_qe2"):
+        pq_ann_verified_topk(emb, query_id=1, k=5, index=(books, codes))
 
 
 def test_shingle_prefilter_matches_guarded_filter_form(spark):

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 def _ref_fixed_pagerank(edges, n_iter, units=10**12, dnum=85):
     """Driver-side integer reference replaying every floor division of
-    graph._pagerank_fixed_point — Python // == Spark SQL div for the
-    non-negative values involved."""
+    graph.pagerank — Python // == Spark SQL div for the non-negative
+    values involved."""
     nodes = sorted({x for e in edges for x in e})
     n = len(nodes)
     outd = Counter(s for s, _ in edges)
@@ -30,7 +30,7 @@ def _ref_fixed_pagerank(edges, n_iter, units=10**12, dnum=85):
 
 
 def test_pagerank_fixed_point_matches_integer_reference(spark):
-    """Exact-units mode replays the Python integer loop bit-for-bit,
+    """pagerank replays the Python integer loop bit-for-bit,
     including the dangling-mass redistribution (node 3 dangles)."""
     from us_accidents_bigdata_pipeline_spark.operators.graph import pagerank
 
@@ -38,24 +38,37 @@ def test_pagerank_fixed_point_matches_integer_reference(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r.node: r.rank_units
-        for r in pagerank(df, n_iter=8, exact_units=10**12).collect()
+        for r in pagerank(df, n_iter=8).collect()
     }
     assert got == _ref_fixed_pagerank(edges, 8)
 
 
+def _ref_float_pagerank(edges, n_iter, d=0.85):
+    """Plain float power iteration with dangling mass spread evenly."""
+    nodes = sorted({x for e in edges for x in e})
+    n = len(nodes)
+    outd = Counter(s for s, _ in edges)
+    r = {v: 1.0 / n for v in nodes}
+    for _ in range(n_iter):
+        dang = sum(r[v] for v in nodes if outd[v] == 0)
+        nxt = {v: (1 - d) / n + d * dang / n for v in nodes}
+        for s, t in edges:
+            nxt[t] += d * r[s] / outd[s]
+        r = nxt
+    return r
+
+
 def test_pagerank_fixed_point_tracks_float_path(spark):
-    """units/U agrees with the float power iteration to ~n·iter units
+    """units/U agrees with a float power iteration to ~n·iter units
     of floor-division drift, and total mass stays within that drift of
     1.0 — the documented fixed-point contract."""
     from us_accidents_bigdata_pipeline_spark.operators.graph import pagerank
 
     edges = [(0, 1), (0, 2), (1, 2), (2, 0), (1, 3)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    fx = {
-        r.node: r.rank
-        for r in pagerank(df, n_iter=8, exact_units=10**12).collect()
-    }
-    fl = {r.node: r.rank for r in pagerank(df, n_iter=8).collect()}
+    fx = {r.node: r.rank for r in pagerank(df, n_iter=8).collect()}
+    fl = _ref_float_pagerank(edges, 8)
+    assert set(fx) == set(fl)
     for v in fl:
         assert abs(fx[v] - fl[v]) < 1e-9
     assert abs(sum(fx.values()) - 1.0) < 1e-9

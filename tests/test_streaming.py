@@ -488,6 +488,26 @@ def test_foreach_batch_upsert_multibatch_and_replay(spark, tmp_path):
     assert got3 == {**expected, 3: "c9"}
 
 
+def test_upsert_in_batch_tie_is_row_order_independent(spark, tmp_path):
+    """Two rows of one key with the same order value: the winner is
+    chosen by row content, so the batch and its reverse publish the
+    same table (a replayed batch need not arrive in its first order)."""
+    from us_accidents_bigdata_pipeline_spark.streaming import (
+        read_current,
+        upsert_batch_fn,
+    )
+
+    rows = [(1, "x", 5), (1, "y", 5), (2, "z", 1)]
+    got = []
+    for i, batch in enumerate([rows, rows[::-1]]):
+        root = str(tmp_path / f"t{i}")
+        df = spark.createDataFrame(batch, "k long, v string, seq long")
+        upsert_batch_fn(root, ["k"], "seq")(df, 0)
+        got.append(sorted(tuple(r) for r in read_current(spark, root).collect()))
+    assert got[0] == got[1]
+    assert len(got[0]) == 2
+
+
 def test_upsert_table_time_travel_and_vacuum(spark, tmp_path):
     """Each commit leaves a readable historical snapshot (VERSION AS OF
     semantics); vacuum drops old versions but never the current one or

@@ -365,6 +365,9 @@ def test_shared_substring_runs_planted(spark):
 
 
 def test_pagerank_matches_numpy_reference(spark):
+    """The fixed-point ranks (units/10^12) track the float power
+    iteration to within ~n·iter units of floor-division drift, and
+    total mass stays within that drift of 1.0."""
     import numpy as np
 
     from us_accidents_bigdata_pipeline_spark.operators.graph import pagerank

@@ -16,10 +16,7 @@ from us_accidents_bigdata_pipeline_spark.operators.clean import clean
 from us_accidents_bigdata_pipeline_spark.operators.viz import (
     cluster_scatter_input,
     geo_scatter_sample,
-    hourly_profile,
-    severity_histogram,
-    state_top_n,
-    weather_breakdown,
+    value_counts,
 )
 from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw_distributed
 
@@ -34,13 +31,14 @@ def cleaned(spark):
 
 def test_viz_aggregates(cleaned):
     n = cleaned.count()
-    sev = severity_histogram(cleaned).collect()
+    sev = value_counts(cleaned, "Severity").collect()
     assert sum(r.n for r in sev) == n
-    hours = hourly_profile(cleaned).collect()
+    assert [r.Severity for r in sev] == sorted(r.Severity for r in sev)
+    hours = value_counts(cleaned, "hour_of_day").collect()
     assert {r.hour_of_day for r in hours} <= set(range(24))
-    top = state_top_n(cleaned, n=3).collect()
+    top = value_counts(cleaned, "State", top=3).collect()
     assert len(top) == 3 and top[0].n >= top[-1].n
-    weather = weather_breakdown(cleaned, n=5).collect()
+    weather = value_counts(cleaned, "Weather_Condition", top=5).collect()
     assert len(weather) == 5
     scatter = geo_scatter_sample(cleaned, max_points=500)
     assert scatter.count() <= 500

@@ -179,7 +179,3 @@ def cluster_stats(
         ]
     return predictions.groupBy("cluster").agg(*aggs)
 
-
-def cluster_centers(model: KMeansModel) -> list[list[float]]:
-    """M10: model.clusterCenters() as plain lists."""
-    return [c.tolist() for c in model.clusterCenters()]

@@ -19,26 +19,33 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# fixed-point PageRank: a rank is a BIGINT count of 1/_UNITS, the
+# damping 0.85 is the exact rational _DAMPING_PCT/100, and a
+# dangling-free iteration truncates its lineage every _CHECKPOINT_EVERY
+# rounds
+_UNITS = 10**12
+_DAMPING_PCT = 85
+_CHECKPOINT_EVERY = 8
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
     n_iter: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 8,
-    exact_units: int | None = None,
 ) -> DataFrame:
-    """PageRank over a directed edge list; returns (node, rank) summing
-    to 1.0 (±float error). Dangling-node mass is redistributed
+    """PageRank over a directed edge list in FIXED-POINT units; returns
+    (node, rank_units, rank) with ranks summing to 1.0 within the
+    floor-division drift below. Dangling-node mass is redistributed
     uniformly each iteration (the standard stochastic-matrix fix), so
-    the result matches the textbook power iteration exactly —
-    tests pin it against a NumPy reference.
+    ``rank`` tracks the textbook power iteration — tests pin it against
+    a NumPy reference, and ``rank_units`` against a Python integer
+    replay.
 
-    ``exact_units``: FIXED-POINT mode. With e.g. ``exact_units=10**12``
-    every rank is a BIGINT count of 1/10^12 units and every step is
+    Every rank is a BIGINT count of 1/10^12 units and every step is
     integer arithmetic — init ``U div n``, spread ``units div out_deg``
-    per edge, damp ``(d_pct · inflow) div 100`` with the uniform base
-    ``((100 − d_pct) · U) div (100·n)`` — so the whole iteration is
+    per edge, damp ``(85 · inflow) div 100`` with the uniform base
+    ``(15 · U) div (100·n)`` — so the whole iteration is
     BIT-DETERMINISTIC: independent of shuffle/reduction order, of
     executor count, and of engine (any SQL engine's integer ``div``
     replays it exactly, which is what makes the fixed point
@@ -47,110 +54,21 @@ def pagerank(
     two runs of the same job on a 1000-executor cluster differ in
     final ulps — fixed-point runs are byte-identical. The floor
     divisions shave ≤1 unit each, so total mass drifts below 1.0 by
-    ~n·iter units of 1/U — at U = 10^12 that is ~1e-9·n absolute,
-    far below any ranking-relevant gap; ``damping`` must be an exact
-    percent (0.85 → 85/100). Output adds ``rank_units`` (BIGINT)
-    beside the derived ``rank`` double (= units/U, one IEEE division).
-    """
+    ~n·iter units of 1/U — ~1e-9·n absolute, far below any
+    ranking-relevant gap. ``rank`` is the derived double (= units/U,
+    one IEEE division).
+
+    Scale shape per iteration: one key-partitioned edge⋈rank join and
+    one groupBy on the destination key with map-side partial sums.
+    Dangling nodes are a ONE-TIME structural property, detected once:
+    dangling-free graphs (e.g. symmetric co-purchase edges) run the
+    whole iteration as one lazy plan with a periodic
+    ``localCheckpoint`` to bound plan depth; graphs WITH dangling nodes
+    need one tiny scalar aggregate per round (the respread mass depends
+    on the current ranks)."""
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    if exact_units is not None:
-        return _pagerank_fixed_point(
-            e, int(exact_units), n_iter, damping, checkpoint_every
-        )
-    from .dedup import _shared
-
-    # r12 optimization: persist()+unpersist-in-finally released these
-    # caches before the returned lazy frame executed — every iteration
-    # level then re-derived the edge subtree from the source scans.
-    # Lazy localCheckpoints live as long as the returned frame.
-    e = _shared(e)
-    nodes = _shared(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
-    out_deg = _shared(
-        e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    )
-    # weighted edges: each src spreads rank/out_deg to its targets
-    we = _shared(
-        e.join(out_deg, "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-    )
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    # Dangling nodes are a ONE-TIME structural property — detect them
-    # once, not per iteration. Dangling-free graphs (e.g. symmetric
-    # co-purchase edges) then run the whole iteration as a single lazy
-    # plan: zero per-round jobs, just periodic localCheckpoints to
-    # bound plan depth. Graphs WITH dangling nodes need one tiny scalar
-    # aggregate per round (the respread mass depends on current ranks).
-    has_dangling = (
-        nodes.join(out_deg, nodes.node == out_deg.src, "left_anti")
-        .limit(1)
-        .count()
-        > 0
-    )
-    for it in range(n_iter):
-        contribs = (
-            we.join(ranks, we.src == ranks.node)
-            .select("dst", (F.col("rank") * F.col("w")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        base = (1.0 - damping) / n
-        if has_dangling:
-            ranks = ranks.localCheckpoint(eager=True)
-            dangling = (
-                ranks.join(
-                    out_deg, ranks.node == out_deg.src, "left_anti"
-                )
-                .agg(F.sum("rank"))
-                .first()[0]
-                or 0.0
-            )
-            base += damping * dangling / n
-            contribs = (
-                we.join(ranks, we.src == ranks.node)
-                .select("dst", (F.col("rank") * F.col("w")).alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("contrib"))
-            )
-        new_ranks = nodes.join(
-            contribs, nodes.node == contribs.dst, "left"
-        ).select(
-            "node",
-            (
-                F.lit(base)
-                + F.lit(damping)
-                * F.coalesce(F.col("contrib"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if not has_dangling and (it + 1) % checkpoint_every == 0:
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-        ranks = new_ranks
-    return ranks
-
-
-def _pagerank_fixed_point(
-    e: DataFrame,
-    units: int,
-    n_iter: int,
-    damping: float,
-    checkpoint_every: int,
-) -> DataFrame:
-    """Integer-unit PageRank loop (see ``pagerank(exact_units=...)``).
-    Same join/aggregate shape as the float path — one key-partitioned
-    edge⋈rank join + one groupBy per round — but every value is a
-    BIGINT unit count and every division is integral ``div``, so the
-    fixed point is reproducible bit-for-bit on any engine."""
-    dnum = int(round(damping * 100))
-    if abs(damping * 100 - dnum) > 1e-9:
-        raise ValueError(
-            f"exact_units mode needs an exact percent damping, got {damping}"
-        )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -161,9 +79,9 @@ def _pagerank_fixed_point(
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     ed = e.join(out_deg, "src").persist()
     ed.count()
-    base_units = ((100 - dnum) * units) // (100 * n)
+    base_units = ((100 - _DAMPING_PCT) * _UNITS) // (100 * n)
     ranks = nodes.select(
-        "node", F.lit(units // n).cast("long").alias("rank_units")
+        "node", F.lit(_UNITS // n).cast("long").alias("rank_units")
     )
     has_dangling = (
         nodes.join(out_deg, nodes.node == out_deg.src, "left_anti")
@@ -183,7 +101,9 @@ def _pagerank_fixed_point(
                     .first()[0]
                     or 0
                 )
-                base_it = base_units + (dnum * int(dangling)) // (100 * n)
+                base_it = base_units + (_DAMPING_PCT * int(dangling)) // (
+                    100 * n
+                )
             else:
                 base_it = base_units
             contribs = (
@@ -200,17 +120,19 @@ def _pagerank_fixed_point(
                 "node",
                 (
                     F.lit(base_it).cast("long")
-                    + F.expr(f"({dnum} * coalesce(contrib, 0L)) div 100")
+                    + F.expr(
+                        f"({_DAMPING_PCT} * coalesce(contrib, 0L)) div 100"
+                    )
                 ).alias("rank_units"),
             )
-            if not has_dangling and (it + 1) % checkpoint_every == 0:
+            if not has_dangling and (it + 1) % _CHECKPOINT_EVERY == 0:
                 new_ranks = new_ranks.localCheckpoint(eager=True)
             ranks = new_ranks
         return ranks.select(
             "node",
             "rank_units",
             (
-                F.col("rank_units").cast("double") / F.lit(float(units))
+                F.col("rank_units").cast("double") / F.lit(float(_UNITS))
             ).alias("rank"),
         )
     finally:
@@ -226,10 +148,9 @@ def pagerank_mass(
     scale: int = 10**12,
 ) -> DataFrame:
     """Bounded power iteration in EXACT INTEGER mass — the
-    oracle-checkable tier of the PageRank surface (the float
-    ``pagerank`` above is the production fixed point; its groupBy sums
-    are partition-order-dependent in the last ulps, so no SQL engine
-    can replay them hash-exactly).
+    un-normalized tier of the PageRank surface: ``pagerank`` above
+    iterates a rank distribution summing to 1, this one tracks
+    ``scale`` units of mass per node.
 
     Every node starts with ``scale`` units of mass; each iteration
     sends ``mass div out_deg`` along every out-edge (integer floor —

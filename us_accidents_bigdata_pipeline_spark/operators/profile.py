@@ -9,12 +9,11 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def null_audit(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def null_audit(df: DataFrame) -> DataFrame:
     """One row: null count per column, single pass (v2:cell17)."""
-    cols = cols or df.columns
     aggs = [
         F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"n_null_{c}")
-        for c in cols
+        for c in df.columns
     ]
     return df.agg(*aggs, F.count(F.lit(1)).alias("n_rows"))
 
@@ -252,7 +251,7 @@ def ols_fit2(
     LU) is deliberate: with the determinant expansion written in the
     same operation order as the SQL oracle, the solve is
     engine-reproducible down to the last bit, so the oracle certifies
-    the SOLVE, not only the sums. For general d use ``ols_fit``.
+    the SOLVE, not only the sums.
 
     r² = 1 − SSE/SST with SSE = Σy² − bᵀXᵀy (the closed-form OLS
     identity) — no second pass over the data.
@@ -282,46 +281,6 @@ def ols_fit2(
         ("r2", round(r2, ndigits)),
         ("n", float(n)),
     ]
-    return df.sparkSession.createDataFrame(rows, "term string, value double")
-
-
-def ols_fit(
-    df: DataFrame, x_cols: list[str], y_col: str, ndigits: int = 6
-) -> DataFrame:
-    """General-d OLS from the same single-pass sufficient statistics,
-    solved with numpy on the driver (LU; backward-stable for the d×d
-    normal matrix). Same long-form (term, value) output as
-    ``ols_fit2``. d is model width — tens, not millions — so the
-    driver solve is O(d³) on a matrix assembled from one aggregate."""
-    import numpy as np
-
-    s = ols_normal_eq_sums(df, x_cols, y_col)
-    cols = list(x_cols)
-    d = len(cols) + 1
-    names = ["_one"] + cols
-
-    def _s(a: str, b: str) -> float:
-        if a == "_one" and b == "_one":
-            return s["n"]
-        if a == "_one":
-            return s[f"s_{b}"]
-        if b == "_one":
-            return s[f"s_{a}"]
-        return s.get(f"s_{a}_{b}", s.get(f"s_{b}_{a}"))
-
-    m = np.array([[_s(a, b) for b in names] for a in names])
-    v = np.array([s[f"s_{y_col}"]] + [s[f"s_{c}_{y_col}"] for c in cols])
-    b = np.linalg.solve(m, v)
-    syy = s[f"s_{y_col}_{y_col}"]
-    sse = syy - float(b @ v)
-    sst = syy - s[f"s_{y_col}"] ** 2 / s["n"]
-    r2 = 1.0 - sse / sst if sst > 0 else 0.0
-    rows = [("intercept", round(float(b[0]), ndigits))]
-    rows += [
-        (f"coef_{c}", round(float(b[i + 1]), ndigits))
-        for i, c in enumerate(cols)
-    ]
-    rows += [("r2", round(r2, ndigits)), ("n", float(s["n"]))]
     return df.sparkSession.createDataFrame(rows, "term string, value double")
 
 

@@ -122,7 +122,6 @@ def render_scatter_svg(
     ys: Sequence[float],
     groups: Sequence[object] | None = None,
     title: str = "",
-    radius: float = 2.0,
 ) -> str:
     """Scatter (geo / cluster shape); optional per-point group coloring."""
     if len(xs) != len(ys) or (groups is not None and len(groups) != len(xs)):
@@ -150,7 +149,7 @@ def render_scatter_svg(
             cy = _H - _MB - (y - ymin) / yspan * plot_h
             parts.append(
                 f'<circle class="pt" cx="{cx:.2f}" cy="{cy:.2f}" '
-                f'r="{radius}" fill="{color_of[g]}" fill-opacity="0.7"/>'
+                f'r="2.0" fill="{color_of[g]}" fill-opacity="0.7"/>'
             )
     parts.append("</svg>")
     return "\n".join(parts)
@@ -161,13 +160,11 @@ def render_heatmap_svg(
     col_labels: Sequence[object],
     values: Sequence[Sequence[float]],
     title: str = "",
-    annotate: bool = True,
 ) -> str:
     """Annotated matrix heatmap (the reference's confusion-matrix chart,
     BigDataPipeline/spark/generate_visualizations.py:35-49 sns.heatmap
-    cmap='Blues') — linear white→blue ramp, one <rect> per cell,
-    optional centered value annotations with luminance-aware text
-    color."""
+    cmap='Blues') — linear white→blue ramp, one <rect> per cell, each
+    with a centered value annotation in luminance-aware text color."""
     if len(values) != len(row_labels) or any(
         len(r) != len(col_labels) for r in values
     ):
@@ -190,14 +187,13 @@ def render_heatmap_svg(
                 f'width="{cw:.2f}" height="{ch:.2f}" '
                 f'fill="rgb({r},{g},{b})" stroke="#ccc" stroke-width="0.5"/>'
             )
-            if annotate:
-                tcol = "#fff" if frac > 0.6 else "#222"
-                parts.append(
-                    f'<text x="{x + cw / 2:.2f}" y="{y + ch / 2 + 4:.2f}" '
-                    f'text-anchor="middle" font-size="12" '
-                    f'font-family="sans-serif" fill="{tcol}">'
-                    f"{escape(str(round(float(v), 2)))}</text>"
-                )
+            tcol = "#fff" if frac > 0.6 else "#222"
+            parts.append(
+                f'<text x="{x + cw / 2:.2f}" y="{y + ch / 2 + 4:.2f}" '
+                f'text-anchor="middle" font-size="12" '
+                f'font-family="sans-serif" fill="{tcol}">'
+                f"{escape(str(round(float(v), 2)))}</text>"
+            )
     for i, lab in enumerate(row_labels):
         parts.append(
             f'<text x="{_ML - 6}" y="{_MT + i * ch + ch / 2 + 4:.2f}" '

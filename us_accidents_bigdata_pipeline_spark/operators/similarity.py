@@ -11,9 +11,9 @@ Three tiers:
 - **LSH-bucketed** (`lsh_topk_candidates`): BucketedRandomProjectionLSH;
   candidates come from same-bucket joins — the at-scale path where
   brute force would be O(|queries|·|corpus|).
-- **IVF-style** (`ivf_assign`): KMeans coarse quantizer; search only
-  the nearest `nprobe` cells. Model fit is a sampled batch job; the
-  assignment is one broadcast-join of centroids.
+- **IVF-style** (`ivf_fit_assign`, `ivf_search`): KMeans coarse
+  quantizer; search only the nearest `nprobe` cells. Model fit is a
+  sampled batch job; the assignment is one broadcast-join of centroids.
 
 This generalizes the reference's one custom operator — the broadcast
 kNN over tabular features (knn_classification.py:124-164) — to
@@ -540,23 +540,6 @@ def ivf_fit_assign(
         F.col(id_col), F.explode(cells).alias("_dc")
     ).select(F.col(id_col), F.col("_dc.cell").alias("cell"))
     return assigned, model
-
-
-def ivf_assign(
-    df: DataFrame,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fit_sample_rows: int = 100_000,
-    m_assign: int = 1,
-) -> DataFrame:
-    """IVF cell assignment: sampled-fit KMeans (see ``ivf_fit_assign``),
-    each vector assigned to its ``m_assign`` nearest centroid cells.
-    Returns (vec_id, cell) — m rows per vector when m_assign > 1."""
-    assigned, _ = ivf_fit_assign(
-        df, n_cells, id_col, vec_col, fit_sample_rows, m_assign=m_assign
-    )
-    return assigned
 
 
 def ivf_search(
@@ -1105,7 +1088,6 @@ def pq_ann_verified_topk(
     df: DataFrame,
     query_id: int,
     k: int = 5,
-    overfetch: int = 40,
     m: int = 8,
     k_codes: int = 16,
     id_col: str = "vec_id",
@@ -1136,8 +1118,8 @@ def pq_ann_verified_topk(
     distances ~1.19 — the WORST case for quantization) the certified
     bound honestly keeps ~the whole corpus, pricing what exact search
     on unclusterable data costs; clustered production embeddings have
-    small ``_qe2`` and prune hard. ``overfetch`` remains only for
-    legacy ``index`` tuples whose codes lack ``_qe2``.
+    small ``_qe2`` and prune hard. An ``index`` whose codes lack
+    ``_qe2`` raises ``ValueError``: without it no bound can be certified.
 
     Scale: codes are m bytes/vector + one error double (the 100 TB
     corpus becomes a code table); ADC and the bounds are map-only
@@ -1147,12 +1129,20 @@ def pq_ann_verified_topk(
     (||a-b||² = 2(1-cos))."""
     import numpy as np
 
+    from .dedup import _shared
+
     unit = _unit_normalized(df, vec_col)
     if index is not None:
         # (codebooks, codes) from pq_train/pq_encode — build once,
         # search many (persist the codes caller-side for full reuse);
         # mirrors ivf_search's index parameter
         books, codes = index
+        if "_qe2" not in codes.columns:
+            raise ValueError(
+                "pq_ann_verified_topk: index codes lack the '_qe2' "
+                "reconstruction-error column that pq_encode emits; "
+                "re-encode the corpus with pq_encode"
+            )
     else:
         books = pq_train(
             unit, m=m, k_codes=k_codes, vec_col="_unit",
@@ -1180,47 +1170,34 @@ def pq_ann_verified_topk(
         )
         term = F.element_at(lut, F.col("codes").getItem(j) + 1)
         adc = term if adc is None else adc + term
-    if "_qe2" in codes.columns:
-        from .dedup import _shared
-
-        # certified candidates: τ = k-th smallest upper bound
-        # √adc + √_qe2; keep L = max(√adc − √_qe2, 0) ≤ √(τ² + pad).
-        # Every vector the rounded final ordering can place in the
-        # top-k has exact distance ≤ √(τ² + 3e-4) (see docstring), so
-        # this set provably contains the answer. The slim (id, _da,
-        # _e) frame feeds both the τ readout and the filter —
-        # materialized once (`_shared`) so the ADC scan runs once.
-        bnd = _shared(
-            codes.filter(F.col(id_col) != query_id).select(
-                F.col(id_col),
-                F.sqrt(adc).alias("_da"),
-                F.sqrt(F.greatest(F.col("_qe2"), F.lit(0.0))).alias("_e"),
-            )
+    # certified candidates: τ = k-th smallest upper bound √adc + √_qe2;
+    # keep L = max(√adc − √_qe2, 0) ≤ √(τ² + pad). Every vector the
+    # rounded final ordering can place in the top-k has exact distance
+    # ≤ √(τ² + 3e-4) (see docstring), so this set provably contains the
+    # answer. The slim (id, _da, _e) frame feeds both the τ readout and
+    # the filter — materialized once (`_shared`) so the ADC scan runs
+    # once.
+    bnd = _shared(
+        codes.filter(F.col(id_col) != query_id).select(
+            F.col(id_col),
+            F.sqrt(adc).alias("_da"),
+            F.sqrt(F.greatest(F.col("_qe2"), F.lit(0.0))).alias("_e"),
         )
-        tau = (
-            bnd.select((F.col("_da") + F.col("_e")).alias("_u"))
-            .orderBy("_u")
-            .limit(k)
-            .agg(F.max("_u").alias("_tau"))
+    )
+    tau = (
+        bnd.select((F.col("_da") + F.col("_e")).alias("_u"))
+        .orderBy("_u")
+        .limit(k)
+        .agg(F.max("_u").alias("_tau"))
+    )
+    cand = (
+        bnd.crossJoin(F.broadcast(tau))
+        .filter(
+            F.greatest(F.col("_da") - F.col("_e"), F.lit(0.0))
+            <= F.sqrt(F.col("_tau") * F.col("_tau") + F.lit(4.0e-4))
         )
-        cand = (
-            bnd.crossJoin(F.broadcast(tau))
-            .filter(
-                F.greatest(F.col("_da") - F.col("_e"), F.lit(0.0))
-                <= F.sqrt(F.col("_tau") * F.col("_tau") + F.lit(4.0e-4))
-            )
-            .select(id_col)
-        )
-    else:
-        # legacy index without the error column: fixed ADC overfetch
-        # (NOT certified — kept only for pre-round-13 index tuples)
-        cand = (
-            codes.filter(F.col(id_col) != query_id)
-            .select(F.col(id_col), adc.alias("_adc"))
-            .orderBy(F.col("_adc"), F.col(id_col))
-            .limit(k * overfetch)
-            .select(id_col)
-        )
+        .select(id_col)
+    )
     # query norm let-bound on the 1-row broadcast side (was re-folded
     # per candidate row) — same IEEE ops, values unchanged
     qv = df.filter(F.col(id_col) == query_id).select(

@@ -15,61 +15,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def severity_histogram(df: DataFrame, severity_col: str = "Severity") -> DataFrame:
-    """Severity bar chart input (generate_visualizations.py severity
-    distribution; pandas value_counts in the reference)."""
-    return df.groupBy(severity_col).agg(F.count(F.lit(1)).alias("n")).orderBy(
-        severity_col
-    )
+def value_counts(df: DataFrame, col: str, top: int | None = None) -> DataFrame:
+    """(col, n) bar/line chart input: rows per value of ``col`` (pandas
+    value_counts in the reference), in key order, or with ``top`` the
+    ``top`` most frequent values, ties by key (TakeOrderedAndProject
+    plan)."""
+    counts = df.groupBy(col).agg(F.count(F.lit(1)).alias("n"))
+    if top is None:
+        return counts.orderBy(col)
+    return counts.orderBy(F.col("n").desc(), F.col(col)).limit(top)
 
 
-def hourly_profile(df: DataFrame, hour_col: str = "hour_of_day") -> DataFrame:
-    """Accidents-by-hour line chart input."""
-    return df.groupBy(hour_col).agg(F.count(F.lit(1)).alias("n")).orderBy(hour_col)
+# seed of the capped chart samples (geo and cluster scatters)
+_SAMPLE_SEED = 42
 
 
-def state_top_n(df: DataFrame, state_col: str = "State", n: int = 15) -> DataFrame:
-    """Top-N states bar chart input (TakeOrderedAndProject plan)."""
-    return (
-        df.groupBy(state_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col(state_col))
-        .limit(n)
-    )
-
-
-def weather_breakdown(
-    df: DataFrame, weather_col: str = "Weather_Condition", n: int = 10
-) -> DataFrame:
-    """Weather-condition pie/bar input."""
-    return (
-        df.groupBy(weather_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col(weather_col))
-        .limit(n)
-    )
-
-
-def geo_scatter_sample(
-    df: DataFrame,
-    lat_col: str = "Start_Lat",
-    lng_col: str = "Start_Lng",
-    color_col: str = "Severity",
-    max_points: int = 50_000,
-    seed: int = 42,
-) -> DataFrame:
-    """Seeded sample for the geographic scatter (the reference caps its
-    scatter at a sample too — full 7.7M points would be an unreadable
-    plot AND a driver OOM)."""
+def geo_scatter_sample(df: DataFrame, max_points: int = 50_000) -> DataFrame:
+    """Seeded (Start_Lat, Start_Lng, Severity) sample for the
+    geographic scatter (the reference caps its scatter at a sample too
+    — full 7.7M points would be an unreadable plot AND a driver OOM)."""
     n = df.count()
     frac = min(max_points / max(n, 1), 1.0)
-    out = df.select(lat_col, lng_col, color_col)
-    return out if frac >= 1.0 else out.sample(False, frac, seed).limit(max_points)
+    out = df.select("Start_Lat", "Start_Lng", "Severity")
+    return (
+        out
+        if frac >= 1.0
+        else out.sample(False, frac, _SAMPLE_SEED).limit(max_points)
+    )
 
 
-def confusion_heatmap_svg(
-    cm: DataFrame, title: str = "Random Forest - Confusion Matrix"
-) -> str:
+def confusion_heatmap_svg(cm: DataFrame) -> str:
     """Render an ``ml.metrics.confusion_matrix`` frame
     ((label, prediction, n) — k×k, driver-tiny) as the annotated
     heatmap the reference plots with sns.heatmap
@@ -90,7 +65,9 @@ def confusion_heatmap_svg(
     labels = [
         str(int(c)) if float(c).is_integer() else str(c) for c in classes
     ]
-    return render_heatmap_svg(labels, labels, values, title)
+    return render_heatmap_svg(
+        labels, labels, values, "Random Forest - Confusion Matrix"
+    )
 
 
 def export_chart_suite(
@@ -126,42 +103,20 @@ def export_chart_suite(
         written.append(path)
 
     cols = set(cleaned.columns) if cleaned is not None else set()
-    if "Severity" in cols:
-        rows = severity_histogram(cleaned).collect()
-        _write(
-            "severity_distribution.svg",
-            render_bar_svg(
-                [str(r[0]) for r in rows],
-                [r["n"] for r in rows],
-                "Severity distribution",
-            ),
-        )
-    if "hour_of_day" in cols:
-        rows = hourly_profile(cleaned).collect()
-        _write(
-            "hourly_profile.svg",
-            render_line_svg(
-                [r[0] for r in rows], [r["n"] for r in rows], "Accidents by hour"
-            ),
-        )
-    if "State" in cols:
-        rows = state_top_n(cleaned).collect()
-        _write(
-            "state_top15.svg",
-            render_bar_svg(
-                [r[0] for r in rows], [r["n"] for r in rows], "Top states"
-            ),
-        )
-    if "Weather_Condition" in cols:
-        rows = weather_breakdown(cleaned).collect()
-        _write(
-            "weather_breakdown.svg",
-            render_bar_svg(
-                [str(r[0]) for r in rows],
-                [r["n"] for r in rows],
-                "Weather conditions",
-            ),
-        )
+    # (file, column, top-n or None for key order, renderer, title)
+    count_charts = [
+        ("severity_distribution.svg", "Severity", None, render_bar_svg,
+         "Severity distribution"),
+        ("hourly_profile.svg", "hour_of_day", None, render_line_svg,
+         "Accidents by hour"),
+        ("state_top15.svg", "State", 15, render_bar_svg, "Top states"),
+        ("weather_breakdown.svg", "Weather_Condition", 10, render_bar_svg,
+         "Weather conditions"),
+    ]
+    for name, col, top, render, title in count_charts:
+        if col in cols:
+            rows = value_counts(cleaned, col, top=top).collect()
+            _write(name, render([r[0] for r in rows], [r["n"] for r in rows], title))
     if {"Start_Lat", "Start_Lng", "Severity"} <= cols:
         rows = geo_scatter_sample(cleaned, max_points=max_scatter_points).collect()
         _write(
@@ -203,16 +158,16 @@ def export_chart_suite(
 
 
 def cluster_scatter_input(
-    clustered: DataFrame,
-    cluster_col: str = "cluster",
-    max_points_per_cluster: int = 5_000,
-    seed: int = 42,
+    clustered: DataFrame, max_points_per_cluster: int = 5_000
 ) -> DataFrame:
-    """Per-cluster capped sample for the K-Means scatter — stratified so
-    small clusters stay visible (plain sampling would drown them)."""
+    """Per-``cluster`` capped sample for the K-Means scatter —
+    stratified so small clusters stay visible (plain sampling would
+    drown them)."""
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(cluster_col).orderBy(F.xxhash64(F.struct("*"), F.lit(seed)))
+    w = W.partitionBy("cluster").orderBy(
+        F.xxhash64(F.struct("*"), F.lit(_SAMPLE_SEED))
+    )
     return (
         clustered.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= max_points_per_cluster)

@@ -171,7 +171,9 @@ def run_complete_pipeline(
             df.unpersist()
 
 
-def _charts(out: Path | None, cleaned=None, **frames) -> list[str]:
+def _charts(
+    out: Path | None, cleaned=None, clustered=None, predictions=None
+) -> list[str]:
     """The chart-suite subset whose inputs are given, drawn into
     ``out/charts`` (generate_visualizations.py parity: distributed
     aggregation -> tiny collect -> dependency-free SVG); none without
@@ -181,7 +183,9 @@ def _charts(out: Path | None, cleaned=None, **frames) -> list[str]:
         return []
     from .operators import viz
 
-    return viz.export_chart_suite(cleaned, str(out / "charts"), **frames)
+    return viz.export_chart_suite(
+        cleaned, str(out / "charts"), clustered=clustered, predictions=predictions
+    )
 
 
 def _classify(

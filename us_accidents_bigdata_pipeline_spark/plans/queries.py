@@ -379,20 +379,13 @@ def q_global_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
               count(*) AS n_rows
        FROM events""",
     doc="A5: single-pass multi-column null audit (v2:cell17) — one job, "
-    "not one per column",
+    "not one per column (operators/profile.py::null_audit)",
 )
 def q_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.profile import null_audit
+
     ev = _t(spark, sf_dir, "events")
-
-    def nulls(c: str) -> F.Column:
-        return F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"n_null_{c}")
-
-    return ev.agg(
-        nulls("value").alias("n_null_value"),
-        nulls("props").alias("n_null_props"),
-        nulls("user_id").alias("n_null_user"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
+    return null_audit(ev.select("value", "props", F.col("user_id").alias("user")))
 
 
 @_register(
@@ -1892,12 +1885,11 @@ def q_lsh_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "pq_ann_verified_topk",
     # Exact top-k oracle for query 1: PQ-ADC only PRUNES the corpus
-    # to k*overfetch candidates; the exact cosine re-rank makes the
-    # output identical to brute force whenever the true top-k survive
-    # the prune — a quantization recall failure surfaces as a hash
-    # mismatch (verified exact-equal at sf0.001/0.01/0.1; this
-    # near-uniform corpus is the worst case for PQ, hence the high
-    # overfetch).
+    # to the candidates whose error-bounded distance can still reach
+    # the top k; the exact cosine re-rank makes the output identical
+    # to brute force because the true top-k provably survive that
+    # certified prune (on this near-uniform corpus, the worst case for
+    # PQ, the bound keeps most of it).
     """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                  FROM embeddings),
        q AS (SELECT v AS qv FROM e WHERE vec_id = 1)
@@ -1913,7 +1905,7 @@ def q_lsh_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-only Arrow-batched BLAS encode to m-code words (einsum argmin "
     "per batch), asymmetric-distance "
     "prune via a query LUT riding the plan as literals, exact cosine "
-    "re-rank on the k*overfetch survivors — the memory-bounded ANN "
+    "re-rank on the certified survivors — the memory-bounded ANN "
     "tier: a 100 TB float corpus becomes an m-bytes/vector code table "
     "(operators/similarity.py::pq_ann_verified_topk, pq_train, "
     "pq_encode)",
@@ -1975,12 +1967,12 @@ def q_embedding_near_dup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ivf_cell_assignment",
     None,  # KMeans-dependent → rows-only
     doc="IVF coarse quantizer cell assignment; fit runs on a seeded "
-    "capped sample (operators/similarity.py::ivf_assign)",
+    "capped sample (operators/similarity.py::ivf_fit_assign)",
 )
 def q_ivf_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import ivf_assign
+    from ..operators.similarity import ivf_fit_assign
 
-    return ivf_assign(_t(spark, sf_dir, "embeddings"), n_cells=8)
+    return ivf_fit_assign(_t(spark, sf_dir, "embeddings"), n_cells=8)[0]
 
 
 @_register(
@@ -4926,23 +4918,23 @@ def q_bfs_copurchase_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
               round(CAST(u AS DOUBLE) / 1000000000000.0, 8) AS rank
        FROM i8 ORDER BY rank DESC, node LIMIT 20""",
     doc="PageRank over the part co-purchase graph (lineitem self-join "
-    "on the order key -> symmetric edges), top-20 parts by rank, run "
-    "in FIXED-POINT mode (exact_units=10^12): every rank is a BIGINT "
+    "on the order key -> symmetric edges), top-20 parts by rank, in "
+    "FIXED-POINT units of 10^-12: every rank is a BIGINT "
     "unit count and every step integral division, so the iteration is "
     "bit-deterministic — independent of shuffle order, executor "
     "count, and engine — which both makes it value-oracle-able "
     "(8 unrolled integer CTE rounds) and is the reproducibility "
     "property you want for a ranking job on a 1000-executor cluster "
-    "(float PageRank differs in final ulps run-to-run). The float "
-    "path stays pinned against a NumPy power-iteration reference "
-    "incl. dangling-mass handling in tests/test_textops.py "
-    "(operators/graph.py::pagerank, ::_pagerank_fixed_point)",
+    "(float PageRank differs in final ulps run-to-run). The derived "
+    "double rank stays pinned against a NumPy power-iteration "
+    "reference incl. dangling-mass handling in tests/test_textops.py "
+    "(operators/graph.py::pagerank)",
 )
 def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import copurchase_edges, pagerank
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 2000)
-    ranks = pagerank(copurchase_edges(li), n_iter=8, exact_units=10**12)
+    ranks = pagerank(copurchase_edges(li), n_iter=8)
     return ranks.select(
         "node", "rank_units", F.round("rank", 8).alias("rank")
     ).orderBy(F.col("rank").desc(), F.col("node")).limit(20)

@@ -18,8 +18,10 @@ Correctness properties:
   rebuilds a re-delivered batch from the version before it — exactly-
   once table state from at-least-once batch delivery.
 - **Latest-wins within a batch.** A key updated twice in one batch is
-  collapsed by (order_col DESC, tie-break) row_number before merging,
-  so merge_upsert's key-unique precondition holds.
+  collapsed by (order_col DESC, whole-row hash DESC) row_number before
+  merging, so merge_upsert's key-unique precondition holds and an
+  order_col tie resolves the same way whatever order the batch's rows
+  arrive in.
 
 Scale shape: the merge anti-join broadcasts the (small) batch against
 the (large) base — the base snapshot never shuffles; the rewrite cost
@@ -48,9 +50,11 @@ def upsert_batch_fn(
     and assert idempotence)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # latest-wins in-batch dedupe → key-unique updates frame
+        # latest-wins in-batch dedupe → key-unique updates frame; an
+        # order_col tie goes to the larger whole-row hash (as in
+        # cdc_apply), so a batch's row order cannot pick the winner
         w = W.partitionBy(*key_cols).orderBy(
-            F.col(order_col).desc(), *[F.col(k) for k in key_cols]
+            F.col(order_col).desc(), F.xxhash64(*batch_df.columns).desc()
         )
         updates = (
             batch_df.withColumn("_rn", F.row_number().over(w))
